@@ -1,25 +1,22 @@
-"""Checkpoint manifest — resumable validation runs (north_rule; SURVEY §2.8).
+"""Checkpoint manifest: resumable validation runs.
 
-Reference semantics being preserved:
-- skip work already done: cache hit short-circuits the fetch
-  (scripts/cache.py:95-102) → completed buckets are filtered out of the scan;
-- persisted success/failure history merged across runs
-  (scripts/resolve.py:150-171,180-187 _merge) → manifest upsert per run;
-- skip-if-no-change (metadata_updater.py:323-338) → a bucket is only skipped
-  if BOTH the rule-catalog hash and the input snapshot fingerprint match;
-- dry-run (metadata_updater.py:395-396) → plan printed, nothing written;
-- immutable outputs / backup-before-mutate (metadata_updater.py:340-347) →
-  a new manifest version is written atomically (tmp + rename), prior runs
-  kept in the run log.
+A run records, per hash bucket, the rule-catalog hash and the input
+fingerprint it validated under, plus the bucket's metrics, and appends a
+run entry to the history. The next run validates only the pending buckets:
+those never completed, or completed under another catalog or input. This
+is the reference's cache skip (scripts/cache.py:95-102) and its
+fetch-history merge (scripts/resolve.py:150-187) over buckets. A dry run
+plans and writes nothing. The manifest is one JSON document, replaced
+atomically through ``state_log``, so a crash leaves the previous version.
 
 The unit of resume is the deterministic hash bucket of the key
-(pmod(xxhash64(key), n_buckets)) — stable across cluster sizes and physical
-layouts, so a job restarted at 4N executors skips exactly the buckets the
-N-executor run completed.
+(pmod(xxhash64(key), n_buckets)). It is stable across cluster sizes and
+physical layouts, so a job restarted at 4N executors skips exactly the
+buckets the N-executor run completed.
 
-Scope caveat: rules whose groups are functions of the key (uniqueness —
-duplicate keys hash to the same bucket) resume safely. A rule grouping by a
-NON-key column (all_of with group_by) can have groups spanning buckets; for
+Scope: rules whose groups are functions of the key (uniqueness: duplicate
+keys hash to the same bucket) resume safely. A rule grouping by a non-key
+column (all_of with group_by) can have groups spanning buckets; for
 catalogs containing such rules run with n_buckets=1 or accept per-bucket
 group semantics.
 """
@@ -28,31 +25,14 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 import re
-import tempfile
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
+from anzlic_validator_spark.state_log import StateLog, file_stats
+
 MANIFEST_NAME = "manifest.json"
-
-
-def _walk_entries(paths: list[str]) -> list[tuple[str, int, int]]:
-    entries = []
-    for p in sorted(paths):
-        if os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                for f in sorted(files):
-                    if f.startswith(("_", ".")):
-                        continue
-                    fp = os.path.join(root, f)
-                    st = os.stat(fp)
-                    entries.append((fp, st.st_size, int(st.st_mtime)))
-        elif os.path.exists(p):
-            st = os.stat(p)
-            entries.append((p, st.st_size, int(st.st_mtime)))
-    return entries
 
 
 def _fingerprint(entries: list) -> str:
@@ -60,9 +40,11 @@ def _fingerprint(entries: list) -> str:
 
 
 def input_snapshot(paths: list[str]) -> str:
-    """Global input fingerprint. Iceberg table dirs contribute their EXACT
-    current snapshot id (sources/iceberg_meta.py — readable without the
-    runtime); plain dirs fall back to file (path, size, mtime) stats."""
+    """Global input fingerprint. Iceberg table dirs contribute their exact
+    current snapshot id (sources/iceberg_meta.py, readable without the
+    runtime); other paths, plain or URI, contribute the (path, length,
+    mtime) of their files, listed through the active Spark session's
+    Hadoop FileSystem."""
     from anzlic_validator_spark.sources.iceberg_meta import iceberg_snapshot
 
     entries: list = []
@@ -76,7 +58,7 @@ def input_snapshot(paths: list[str]) -> str:
                 snap["schema_id"], snap["spec_id"],
             ))
         else:
-            entries.extend(_walk_entries([p]))
+            entries.extend(file_stats(p))
     return _fingerprint(entries)
 
 
@@ -86,14 +68,14 @@ _BUCKET_DIR = re.compile(r"(?:^|/)bucket=(-?\d+)(?:/|$)")
 def input_snapshots_per_bucket(
     paths: list[str], n_buckets: int, spark=None
 ) -> dict[int, str]:
-    """Per-bucket snapshot fingerprints (VERDICT r01 #8): when the input is
+    """Per-bucket snapshot fingerprints: when the input is
     bucket-partitioned (``bucket=N`` dirs, or an Iceberg table
     identity-partitioned by an integer ``bucket`` column — both meaning the
     engine's OWN bucket function; Iceberg's ``bucket(n, key)`` murmur3
     transform does NOT qualify, see iceberg_meta), a one-file touch
     revalidates exactly the affected bucket instead of everything.
 
-    Iceberg inputs (VERDICT r02 #7) take the exact-metadata ladder of
+    Iceberg inputs take the exact-metadata ladder of
     sources/iceberg_meta.py: with the runtime present (pass ``spark``),
     per-partition fingerprints from the ``#files`` metadata table — a
     single-partition append revalidates exactly one bucket; without it, the
@@ -135,7 +117,7 @@ def input_snapshots_per_bucket(
                     snap["schema_id"], snap["spec_id"],
                 ))
             continue
-        for fp, size, mtime in _walk_entries([p]):
+        for fp, size, mtime in file_stats(p, spark):
             m = _BUCKET_DIR.search(fp)
             b = int(m.group(1)) if m else None
             if b is not None and 0 <= b < n_buckets:
@@ -147,24 +129,21 @@ def input_snapshots_per_bucket(
 
 @dataclass
 class Manifest:
-    path: str
+    log: StateLog
     n_buckets: int = 16
     doc: dict[str, Any] = field(default_factory=dict)
 
     @classmethod
     def load(cls, out_dir: str, n_buckets: int = 16) -> "Manifest":
-        path = os.path.join(out_dir, MANIFEST_NAME)
-        doc: dict[str, Any] = {"version": 1, "buckets": {}, "runs": []}
-        if os.path.exists(path):
-            with open(path, encoding="utf-8") as fh:
-                doc = json.load(fh)
-            if doc.get("n_buckets") not in (None, n_buckets):
-                raise ValueError(
-                    f"manifest at {path} was built with n_buckets={doc.get('n_buckets')}, "
-                    f"got {n_buckets} — bucket ids would not line up"
-                )
+        log = StateLog(out_dir)
+        doc = log.read_json(MANIFEST_NAME) or {"version": 1, "buckets": {}, "runs": []}
+        if doc.get("n_buckets") not in (None, n_buckets):
+            raise ValueError(
+                f"manifest at {log.path(MANIFEST_NAME)} was built with "
+                f"n_buckets={doc.get('n_buckets')}, got {n_buckets} — bucket ids would not line up"
+            )
         doc["n_buckets"] = n_buckets
-        return cls(path=path, n_buckets=n_buckets, doc=doc)
+        return cls(log=log, n_buckets=n_buckets, doc=doc)
 
     def pending_buckets(
         self, rule_versions: str, snapshot_id: str | dict[int, str]
@@ -223,15 +202,4 @@ class Manifest:
                 "wall_clock_s": round(wall_clock_s, 3),
             }
         )
-        self._write()
-
-    def _write(self) -> None:
-        os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path), prefix=".manifest-")
-        try:
-            with os.fdopen(fd, "w", encoding="utf-8") as fh:
-                json.dump(self.doc, fh, indent=2, sort_keys=True)
-            os.replace(tmp, self.path)  # atomic — prior manifest never half-written
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+        self.log.write_json(MANIFEST_NAME, self.doc)

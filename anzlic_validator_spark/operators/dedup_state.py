@@ -1,51 +1,35 @@
-"""Cross-run incremental dedup state (VERDICT r04 #2): a persisted
-fingerprint store so run N+1 fingerprints ONLY its new rows and pairs them
-against the existing corpus — the manifest-resume idea (reference analog:
-the fetch-history merge, /root/reference/scripts/resolve.py:150-187, which
-manifest.py mirrors for validation) applied to the dedup family.
+"""Cross-run incremental dedup state: a persisted fingerprint store, so
+run N+1 fingerprints only its new rows and pairs them against the existing
+corpus. It is the manifest-resume idea (the reference's fetch-history
+merge, scripts/resolve.py:150-187) applied to the dedup family.
 
-Why this exists: every dedup operator here re-fingerprints the whole corpus
-per run. Fine for a one-shot pass; wasteful for a growing corpus where each
-ingest batch is a sliver of 10^12 accumulated rows. The store keeps
-(id, minhash signature) rows — ~500 bytes/row, payload-free — and the
-incremental pass:
+The store keeps (id, minhash signature) rows, about 500 bytes per row and
+no payload. An incremental pass:
 
-1. computes signatures for the NEW batch only (the API takes only new
-   rows; old document text is never an input, so re-fingerprinting old
-   rows is impossible BY CONSTRUCTION, not by discipline);
+1. computes signatures for the new batch only. The API takes only new
+   rows, so old text is never an input and cannot be re-fingerprinted;
 2. emits near-dup pairs (new-vs-old and new-vs-new; old-vs-old pairs were
-   already reported by the runs that introduced them) via an asymmetric
-   LSH band-key join — new-batch band rows against (store ∪ new) band
-   rows, so Spark can broadcast the small new side against the huge store;
-3. verifies candidates DECODE-FREE by signature agreement (the fraction of
-   equal minhash components, an unbiased Jaccard estimator — the store
-   holds no shingles, so exact-Jaccard verify would need old text and
-   break (1); callers wanting exact verify re-join texts for the emitted
-   pair ids only);
-4. commits the new signatures to the store ATOMICALLY (write to a temp dir
-   inside the store, fsync-free same-fs rename — the manifest.py
-   convention), so a crashed run never half-poisons state, and the write
-   doubles as the single materialization of the signatures: the pair plan
-   reads them back from parquet, computing each signature EXACTLY ONCE.
+   reported by the runs that introduced them) through an asymmetric LSH
+   band-key join: new-batch band rows against (store ∪ new) band rows, so
+   Spark can broadcast the small new side against the large store;
+3. verifies candidates without decoding, by signature agreement (the
+   fraction of equal minhash components, an unbiased Jaccard estimator).
+   The store holds no shingles; callers wanting exact verify re-join texts
+   for the emitted pair ids only;
+4. commits the new signatures as one run through ``state_log``, so a
+   crashed run never half-poisons the store. The commit write is also the
+   signatures' single materialization: the pair plan reads them back.
 
-Store layout::
-
-    store_dir/
-      meta.json          # num_hashes / n_bands / shingle_k — compatibility
-      run_00000/*.parquet  # (id, sig array<long>) of each committed batch
-      run_00001/*.parquet
-
-Signature parameters are pinned in meta.json and validated on every open:
-mixing signatures computed under different hash counts or shingle widths
-silently breaks agreement estimates, so a mismatch raises instead.
+The layout is ``state_log``'s: ``meta.json`` pins the signature parameters
+(num_hashes, n_bands, shingle_k, or a store kind), ``run_NNNNN`` holds
+each committed batch, and ``fold_NNNNN/_FOLDED`` the runs ``compact_store``
+merged. Every open checks ``meta.json``: signatures computed under other
+parameters would silently break agreement estimates, so a mismatch raises.
 """
 
 from __future__ import annotations
 
-import json
 import logging
-import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,193 +39,72 @@ from anzlic_validator_spark.operators.dedup import (
     minhash_sig_array,
     word_shingles_from_tokens,
 )
+from anzlic_validator_spark.state_log import StateLog
 
 log = logging.getLogger(__name__)
-
-# {5,}: ids are zero-padded to 5 digits but NOT capped at them — id
-# 100000 formats to 6 digits, and a fixed-width pattern would make it
-# invisible to the loader (next_id would stall and every later commit
-# would replace the same dir — silent data loss past 10^5 runs; review
-# r05). Dir LISTS are therefore sorted numerically, never lexically.
-_RUN_RE = re.compile(r"^run_(\d{5,})$")
-_FOLD_RE = re.compile(r"^fold_(\d{5,})$")
-_FOLD_MARKER = "_FOLDED"
 
 
 def _store_meta(num_hashes: int, n_bands: int, shingle_k: int) -> dict:
     return {"num_hashes": num_hashes, "n_bands": n_bands, "shingle_k": shingle_k}
 
 
-def check_store_meta(store_dir: str, meta: dict, create: bool) -> None:
-    """Validate (or, on first commit, pin) a fingerprint store's parameter
-    metadata. Shared by the text-minhash store and the audio content store
-    (operators/audio_dedup.incremental_audio_dedup): signatures computed
-    under different parameters must never silently mix."""
-    return _check_meta(store_dir, meta, create)
-
-
-def _check_meta(store_dir: str, meta: dict, create: bool) -> None:
-    path = os.path.join(store_dir, "meta.json")
-    if os.path.exists(path):
-        with open(path, encoding="utf-8") as fh:
-            existing = json.load(fh)
-        if existing != meta:
-            raise ValueError(
-                f"fingerprint store {store_dir} was built with {existing}, "
-                f"incompatible with requested {meta}"
-            )
-    elif create:  # a commit=False what-if probe writes nothing at all
-        os.makedirs(store_dir, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, path)
-
-
-def _run_dirs(store_dir: str) -> list[str]:
-    if not os.path.isdir(store_dir):
-        return []
-    out = []
-    for name in os.listdir(store_dir):
-        m = _RUN_RE.match(name)
-        if m:
-            out.append((int(m.group(1)), os.path.join(store_dir, name)))
-    return [d for _, d in sorted(out)]  # numeric order ('run_100000' > 'run_99999')
-
-
-def store_run_dirs(store_dir: str) -> list[str]:
-    """Committed run directories of a fingerprint store, oldest first."""
-    return _run_dirs(store_dir)
-
-
-def _newest_fold(store_dir: str) -> tuple[str, int] | None:
-    """(path, covers) of the newest VALID fold — marker present; a fold
-    dir without its marker is an aborted compaction and is ignored (the
-    runs it would have covered are all still present)."""
-    if not os.path.isdir(store_dir):
-        return None
-    best = None
-    for name in os.listdir(store_dir):
-        m = _FOLD_RE.match(name)
-        if m and os.path.exists(os.path.join(store_dir, name, _FOLD_MARKER)):
-            covers = int(m.group(1))  # numeric max, not lexicographic
-            if best is None or covers > best[1]:
-                best = (os.path.join(store_dir, name), covers)
-    return best
+def _check_meta(store: StateLog, meta: dict, create: bool) -> None:
+    """Validate the store's parameter metadata, or pin it on the first
+    commit: signatures computed under different parameters must never
+    silently mix."""
+    existing = store.read_json("meta.json")
+    if existing is None:
+        if create:  # a commit=False what-if probe writes nothing at all
+            store.write_json("meta.json", meta)
+    elif existing != meta:
+        raise ValueError(
+            f"fingerprint store {store.root} was built with {existing}, "
+            f"incompatible with requested {meta}"
+        )
 
 
 def store_live_inputs(
     store_dir: str, before_run_id: int | None = None
 ) -> tuple[list[str], int]:
-    """→ (parquet dirs holding the store's LIVE fingerprint rows, next
-    auto run id). Live = the newest valid fold (which supersedes every run
-    it covers) plus runs strictly newer than its coverage.
+    """→ (dirs holding the store's live fingerprint rows, next auto run
+    id). Live = the newest valid fold plus the runs after its coverage.
 
     ``before_run_id`` restricts to rows from runs strictly older (the
-    retry semantics of an epoch-keyed caller) and RAISES if that horizon
-    reaches into a fold — after compaction, retries of folded epochs are
-    impossible to serve exactly (their rows are merged), so failing loudly
-    beats silently self-matching. Compact only quiescent stores (or pass
-    ``up_to`` < the oldest retryable epoch to compact_store)."""
-    fold = _newest_fold(store_dir)
-    runs = [(int(os.path.basename(d)[4:]), d) for d in _run_dirs(store_dir)]
-    covers = fold[1] if fold else -1
-    live_runs = [(i, d) for i, d in runs if i > covers]
-    next_id = max([covers] + [i for i, _ in runs]) + 1
-    if before_run_id is None:
-        dirs = ([fold[0]] if fold else []) + [d for _, d in live_runs]
-        return dirs, next_id
-    if fold and before_run_id <= covers:
-        raise ValueError(
-            f"run_id {before_run_id} is at or below the store's compaction "
-            f"horizon (fold covers <= {covers}); a retry of a folded epoch "
-            "cannot be served exactly"
-        )
-    dirs = ([fold[0]] if fold else []) + [
-        d for i, d in live_runs if i < before_run_id
-    ]
-    return dirs, next_id
+    retry semantics of an epoch-keyed caller) and raises if that horizon
+    reaches into a fold: a retry of a folded run cannot be served exactly,
+    as its rows are merged. Compact only quiescent stores, or pass
+    ``up_to`` below the oldest retryable run to ``compact_store``."""
+    store = StateLog(store_dir)
+    if before_run_id is not None:
+        store.check_horizon(before_run_id)
+    return store.live_inputs(before_run_id), store.next_id()
 
 
-def compact_store(
-    spark: SparkSession,
-    store_dir: str,
-    up_to: int | None = None,
-    delete_superseded: bool = True,
-) -> str | None:
-    """Fold the store's run history into ONE dir — the dedup-store analog
-    of the seen-keys log compaction (and of the reference's fetch-history
-    merge): a long-lived store otherwise accumulates one parquet dir per
-    batch and every incremental run pays an ever-growing multi-dir scan.
-
-    Crash-safe by construction: the fold is written to a temp dir, its
-    ``_FOLDED`` marker is created INSIDE the temp dir after verifying data
-    files landed, and the whole dir is renamed into place atomically — a
-    crash at any point leaves either no fold (all runs intact) or a
-    complete fold (which supersedes them). Superseded run dirs and older
-    folds are deleted only afterwards; a partial delete is harmless
-    because the loader ignores anything a valid fold covers.
+def compact_store(spark: SparkSession, store_dir: str, up_to: int | None = None) -> str | None:
+    """Fold the store's live runs into one dir and delete what the fold
+    supersedes: a long-lived store otherwise accumulates one parquet dir
+    per batch, and every incremental run pays an ever-growing scan.
+    ``state_log`` makes the fold crash-safe.
 
     ``up_to``: fold only runs with id <= up_to (an epoch-keyed caller
-    passes current_epoch - 1 so ITS OWN epoch stays individually
-    retryable). Full-row duplicates across runs (pre-run_id retries)
-    collapse in the fold. Returns the fold path, or None when there is no
-    uncovered run to fold (a lone existing fold stays as-is); a SINGLE
-    live run does fold into a one-dir fold — intended behavior, relied on
-    by streaming auto-compaction (ADVICE r05)."""
-    import shutil
-
-    fold = _newest_fold(store_dir)
-    covers_old = fold[1] if fold else -1
+    passes current_epoch - 1 so its own epoch stays retryable). Full-row
+    duplicates across runs collapse in the fold. Returns the fold path, or
+    None when no run is left to fold; a single live run does fold."""
+    store = StateLog(store_dir, spark)
+    covers = store.newest_fold()
     runs = [
-        (int(os.path.basename(d)[4:]), d)
-        for d in _run_dirs(store_dir)
-        if int(os.path.basename(d)[4:]) > covers_old
+        i for i in store.runs()
+        if (covers is None or i > covers) and (up_to is None or i <= up_to)
     ]
-    if up_to is not None:
-        runs = [(i, d) for i, d in runs if i <= up_to]
-    inputs = ([fold[0]] if fold else []) + [d for _, d in runs]
-    if not runs:  # nothing new to fold (a lone existing fold stays as-is)
-        return None
-    covers = max(i for i, _ in runs)
-    final = os.path.join(store_dir, f"fold_{covers:05d}")
-    tmp = os.path.join(store_dir, f".tmp_fold_{covers:05d}")
-    spark.read.parquet(*inputs).dropDuplicates().write.mode("overwrite").parquet(tmp)
-    if not any(not f.startswith(("_", ".")) for f in os.listdir(tmp)):
-        shutil.rmtree(tmp)
-        raise IOError(f"store fold landed empty at {tmp}; refusing to commit")
-    open(os.path.join(tmp, _FOLD_MARKER), "w").close()  # marker BEFORE rename
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    os.replace(tmp, final)
-    if delete_superseded:
-        for i, d in runs:
-            shutil.rmtree(d, ignore_errors=True)
-        if fold:
-            shutil.rmtree(fold[0], ignore_errors=True)
+    final = None
+    if runs:
+        inputs = store.live_inputs(before=runs[-1] + 1)
+        final = store.fold(
+            runs[-1],
+            lambda tmp: spark.read.parquet(*inputs).dropDuplicates().write.mode("overwrite").parquet(tmp),
+        )
+    store.prune()  # also finishes the prune of a fold published before a crash
     return final
-
-
-def commit_store_run(df: DataFrame, store_dir: str, run_id: int) -> DataFrame:
-    """Atomically commit one batch's fingerprints as ``run_<id>`` (write to
-    a temp dir inside the store, then same-fs rename — a crash never leaves
-    a half-visible run) and return the READ-BACK DataFrame, making the
-    write the batch's single fingerprint materialization.
-
-    Re-committing an EXISTING run id replaces that run wholesale (the
-    retried-micro-batch case: an at-least-once caller re-running an epoch
-    owns that epoch's run dir, exactly like the epoch-partitioned
-    streaming sinks)."""
-    import shutil
-
-    spark = df.sparkSession
-    final = os.path.join(store_dir, f"run_{run_id:05d}")
-    tmp = os.path.join(store_dir, f".tmp_run_{run_id:05d}")
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(final):  # retry: replace the attempt's own prior run
-        shutil.rmtree(final)
-    os.replace(tmp, final)
-    return spark.read.parquet(final)
 
 
 def incremental_fingerprints(
@@ -254,32 +117,40 @@ def incremental_fingerprints(
     persist_new: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared scaffold of every incremental-store operator (text minhash,
-    audio content, audio perceptual — review r05: three hand-kept copies
-    drifted by construction): meta guard → fold-aware live inputs →
-    fingerprint ONLY the new batch → atomic commit (or persist for a
-    what-if probe) → union with the stored corpus. Returns
+    audio content, audio perceptual, embedding): meta guard → fold-aware
+    live inputs → fingerprint only the new batch → commit (or persist for
+    a what-if probe) → union with the stored corpus. Returns
     ``(new_fps, all_fps)``; ``fingerprint_fn`` maps the new batch to its
     store-row DataFrame.
 
+    ``run_id``: None appends the next run. An explicit id replaces that
+    run and pairs only against runs before it, so a retried batch
+    reproduces its first attempt.
+
     ``persist_new`` applies to the ``commit=False`` what-if path only (a
-    commit's parquet write IS the materialization): the new batch's
-    fingerprints are persisted because bucketing + both verify-join sides
-    consume them. The handle is internal, so repeated what-if probes in a
-    long-lived session accumulate cached blocks until ContextCleaner runs
-    (ADVICE r05) — such callers should pass ``persist_new=False``
-    (recompute per consumer) or ``spark.catalog.clearCache()`` after
-    consuming, the minhash_near_duplicates ``persist_shingles`` ownership
-    contract."""
+    commit's parquet write is the materialization): the new batch's
+    fingerprints are persisted because bucketing and both verify-join
+    sides consume them. The handle is internal, so repeated what-if probes
+    in a long-lived session accumulate cached blocks until ContextCleaner
+    runs; such callers should pass ``persist_new=False`` (recompute per
+    consumer) or ``spark.catalog.clearCache()`` after consuming, the
+    minhash_near_duplicates ``persist_shingles`` ownership contract."""
     spark = new_df.sparkSession
-    _check_meta(store_dir, meta, create=commit)
-    prior, next_id = store_live_inputs(store_dir, before_run_id=run_id)
+    store = StateLog(store_dir, spark)
+    _check_meta(store, meta, create=commit)
+    if run_id is not None:
+        store.check_horizon(run_id)
+    prior = store.live_inputs(run_id)
     new_fps = fingerprint_fn(new_df)
     if commit:
         # the commit write doubles as the batch's single fingerprint
         # materialization; the pair plan reads it back from parquet
-        new_fps = commit_store_run(
-            new_fps, store_dir, next_id if run_id is None else run_id
+        fps = new_fps
+        path = store.commit(
+            store.next_id() if run_id is None else run_id,
+            lambda tmp: fps.write.mode("overwrite").parquet(tmp),
         )
+        new_fps = spark.read.parquet(path)
     elif persist_new:
         from pyspark import StorageLevel
 
@@ -314,12 +185,9 @@ def exclude_hot_buckets(
     both the census and the candidate join scan O(rows in touched
     buckets), never the whole store; THEN drop touched buckets with more
     than ``cap`` carriers via the ONE hot-bucket pattern shared with the
-    batch LSH caps (``dedup.drop_hot_buckets``, VERDICT r05 #6): a
-    map-side-combined count aggregate + pinned broadcast anti-join, with
-    the LAZY advisory accumulator census — no eager job at
-    plan-construction time (the r05 version ran an exact ``count()`` job
-    per incremental step and then re-computed the hot set inside each
-    broadcast build).
+    batch LSH caps (``dedup.drop_hot_buckets``): a map-side-combined count
+    aggregate + pinned broadcast anti-join, with the lazy advisory
+    accumulator census, so no eager job runs at plan-construction time.
 
     Only ``ab`` is filtered: every candidate join downstream is an INNER
     join on ``keys``, so dropping the store/batch side's hot rows already
@@ -410,7 +278,7 @@ def incremental_minhash_pairs(
     and emit duplicate — or, with changed text, conflicting — pairs; the
     store is payload-free, so it cannot detect this itself.
 
-    ``max_bucket_size`` (VERDICT r05 #1): the band join is routed through
+    ``max_bucket_size``: the band join is routed through
     ``exclude_hot_buckets`` — the store side is first semi-restricted to
     bands the batch touches, then bands with more than this many carriers
     drop with the logged census. A boilerplate band key shared by 10^9
@@ -423,7 +291,7 @@ def incremental_minhash_pairs(
     band-key join of new-batch band rows (21x batch) against the
     batch-touched, hot-capped slice of (store ∪ batch) band rows —
     broadcastable new side against a 10^12-row store; verify joins are
-    PINNED broadcast-hash with the candidate side as build (r05 #2: AQE
+    PINNED broadcast-hash with the candidate side as build (AQE
     falling back to sort-merge would shuffle the whole (id, sig) store
     twice), so the store side streams through two scans and never
     shuffles. The store read is a parquet scan of (id, sig) — document

@@ -42,6 +42,7 @@ from anzlic_validator_spark.manifest import Manifest, input_snapshot, input_snap
 from anzlic_validator_spark.rules import Rule, RuleCatalog, load_catalog
 from anzlic_validator_spark.schema import VIOLATION_FIELDS
 from anzlic_validator_spark.sources.tables import read_clips
+from anzlic_validator_spark.state_log import StateLog
 
 # reserved partition for table-/group-level violations ('__table__',
 # '__group__|...'): excluded from resume accounting and always recomputed,
@@ -85,19 +86,6 @@ def _is_global_rule(rule: Rule, df: DataFrame) -> bool:
         # array-typed all_of is a per-record check (record-keyed → bucket-safe)
         return not dict(df.dtypes).get(col, "").startswith("array")
     return False
-
-
-def _delete_partition_dirs(spark: SparkSession, base: str, buckets: list[int]) -> None:
-    """Drop partition dirs before a dynamic-overwrite write: a revalidated
-    bucket whose new run produces ZERO rows writes no partition, and dynamic
-    overwrite would silently keep the previous run's stale files."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for b in buckets:
-        p = jvm.org.apache.hadoop.fs.Path(f"{base}/bucket={b}")
-        fs = p.getFileSystem(hconf)
-        if fs.exists(p):
-            fs.delete(p, True)
 
 
 def run_validation(
@@ -173,8 +161,8 @@ def run_validation(
     # file per bucket per run.
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     b = bucket_col("key", n_buckets).alias("bucket")
-    _delete_partition_dirs(spark, f"{output}/violations", pending)
-    _delete_partition_dirs(spark, f"{output}/verdicts", pending)
+    out_log = StateLog(output, spark)
+    out_log.delete(*(f"{t}/bucket={p}" for t in ("violations", "verdicts") for p in pending))
     (
         result.violations.where(is_record_key("key"))
         .withColumn("bucket", b)
@@ -187,7 +175,7 @@ def run_validation(
     # when THIS catalog has no global rules, else a rule removed from the
     # catalog would leave the previous run's table-level violations behind
     # and read_violations would union stale rows into fresh results
-    _delete_partition_dirs(spark, f"{output}/violations", [RESERVED_BUCKET])
+    out_log.delete(f"violations/bucket={RESERVED_BUCKET}")
     if global_viol is not None:
         (
             global_viol.select(*VIOLATION_FIELDS)

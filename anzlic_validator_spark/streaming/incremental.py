@@ -1,28 +1,27 @@
-"""Incremental validation — Structured Streaming over the same engine.
+"""Incremental validation: Structured Streaming over the same engine.
 
-The reference is batch-only but explicitly incremental (SURVEY §2.8): new
-catalog records are validated as they appear, history is kept, completed
-work is never redone (cache.py:95-102, resolve.py:150-187). The streaming
-re-expression: a file-source stream over the clips table with
-``foreachBatch`` running the SAME rule catalog per micro-batch — identical
-rule compilation, identical violation rows.
+The reference is batch-only but incremental: new catalog records are
+validated as they appear, history is kept, and completed work is never
+redone (scripts/cache.py:95-102, scripts/resolve.py:150-187). Here a
+file-source stream over the clips table runs the same rule catalog per
+micro-batch through ``foreachBatch``: the same rule compilation, the same
+violation rows.
 
-Dataset-rule scope (VERDICT r01 #6): per-record rules evaluate identically
-per micro-batch. ``unique`` rules get CROSS-BATCH state: every batch appends
-its key set to an epoch-partitioned ``_seen_keys`` log, and duplicates are
-detected both within the batch (the salted batch aggregate) and against all
-PRIOR epochs (an anti-pattern-free join on the pruned key log). Table-global
-rules (``all_of`` on scalars, ``drift``) are REJECTED up front — silently
-rescoping them to a micro-batch would change their semantics; run them in
-the batch sweep.
+Per-record rules evaluate identically per micro-batch. ``unique`` rules
+get cross-batch state: every batch records its key set in the seen-keys
+log (``{output}/_seen_keys``, a ``state_log`` root with one run per epoch),
+and duplicates are detected both within the batch and against all prior
+epochs by a join on the pruned key log. Table-global rules (``all_of`` on
+scalars, ``drift``) are rejected up front: rescoping them to a micro-batch
+would silently change their semantics, so they run in the batch sweep.
 
-Sink idempotence: violations/verdicts/key-log are partitioned by epoch and
-written with dynamic partition overwrite, so a micro-batch retried after a
-sink failure rewrites ITS OWN partition instead of double-appending
-(at-least-once foreachBatch → effectively exactly-once output).
+Sinks are idempotent per epoch: violations and verdicts are partitioned by
+epoch and written with dynamic partition overwrite, and the seen-keys log
+replaces its own unit for the epoch, so a micro-batch retried after a
+failure rewrites its own output instead of appending twice.
 
 ``availableNow`` triggers make this a catch-up batch: process everything
-new, then stop — the streaming twin of the updater's resumable sweep
+new, then stop, the streaming twin of the updater's resumable sweep
 (metadata_updater.py:364-465).
 """
 
@@ -37,97 +36,13 @@ from anzlic_validator_spark.engine import ValidationResult, validate
 from anzlic_validator_spark.errors import InvalidConfigException
 from anzlic_validator_spark.rules import Rule, RuleCatalog
 from anzlic_validator_spark.schema import CLIPS_SCHEMA
+from anzlic_validator_spark.state_log import StateLog
 
 # table-global rules whose group is not a function of the record key —
 # micro-batch scope would silently change their meaning
 CROSS_BATCH_UNSAFE = {"all_of", "drift"}
 
-_SEEN_SCHEMA = "rule_id string, k string, first_epoch long, epoch long"
-
-# marker file inside an epoch partition dir: that partition FOLDS the entire
-# seen-key history before it (see compaction protocol in validate_stream)
-_COMPACTED_MARKER = "_COMPACTED"
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-def _seen_epoch_dirs(spark: SparkSession, seen_path: str) -> dict[int, bool]:
-    """{epoch: is_compacted} for the existing seen-key partition dirs."""
-    fs, base, jvm = _fs(spark, seen_path)
-    if not fs.exists(base):
-        return {}
-    out: dict[int, bool] = {}
-    for st in fs.listStatus(base):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("epoch=")):
-            continue
-        try:
-            e = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        out[e] = fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), _COMPACTED_MARKER))
-    return out
-
-
-def _cleanup_folded_epochs(spark: SparkSession, seen_path: str, epoch_id: int) -> None:
-    """Deferred delete: partitions older than the NEWEST durable fold below
-    the current epoch are redundant (their keys live in the fold). Deleting
-    only behind a marker written by a COMPLETED prior batch keeps retries
-    safe: a retried epoch still finds every partition its first attempt saw.
-    """
-    dirs = _seen_epoch_dirs(spark, seen_path)
-    folds = [e for e, marked in dirs.items() if marked and e < epoch_id]
-    if not folds:
-        return
-    newest = max(folds)
-    fs, base, jvm = _fs(spark, seen_path)
-    for e in dirs:
-        if e < newest:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{seen_path}/epoch={e}"), True)
-
-
-def _commit_fold(spark: SparkSession, tmp: str, seen_path: str, epoch_id: int) -> None:
-    """Atomically promote a written fold dir to ``epoch={epoch_id}`` and stamp
-    its ``_COMPACTED`` marker — marker LAST, and only after verifying the fold
-    landed with data files. Hadoop ``rename()`` signals failure by RETURN
-    VALUE, not exception, and a bare ``create()`` of the marker makes parent
-    dirs — so an unchecked rename could yield an epoch dir containing only
-    the marker, licensing ``_cleanup_folded_epochs`` to delete the entire
-    real history while the "fold" is empty (ADVICE r03). Raising instead
-    fails the micro-batch: streaming retries it, and the retry's own delete
-    clears the unmarked partial partition."""
-    fs, _, jvm = _fs(spark, seen_path)
-    target = jvm.org.apache.hadoop.fs.Path(f"{seen_path}/epoch={epoch_id}")
-    fs.delete(target, True)  # retry: drop the attempt's own partial write
-    try:
-        # some FileSystem impls throw instead of returning False (e.g. local
-        # fs on a missing source) — both forms are a failed fold
-        renamed = fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), target)
-    except Exception as e:
-        raise IOError(f"seen-keys fold rename failed: {tmp} -> {target}") from e
-    if not renamed:
-        raise IOError(f"seen-keys fold rename failed: {tmp} -> {target}")
-    has_data = fs.exists(target) and any(
-        not st.getPath().getName().startswith("_")
-        for st in fs.listStatus(target)
-    )
-    if not has_data:
-        fs.delete(target, True)  # drop the empty husk; the retry re-folds
-        raise IOError(
-            f"seen-keys fold landed empty at {target}; refusing to stamp the "
-            "compaction marker"
-        )
-    fs.create(jvm.org.apache.hadoop.fs.Path(target, _COMPACTED_MARKER), True).close()
+_SEEN_SCHEMA = "rule_id string, k string, first_epoch long"
 
 
 def _unique_key_expr(rule: Rule) -> F.Column:
@@ -164,17 +79,13 @@ def validate_stream(
     Raises InvalidConfigException for table-global rules (CROSS_BATCH_UNSAFE)
     BEFORE the stream starts.
 
-    Seen-key log compaction (VERDICT r02 "missing" #4 — the streaming analog
-    of resolve.py:150-187's history merge): every micro-batch used to read
-    ALL prior ``_seen_keys`` epochs — O(total history) per batch, unbounded.
-    Now, once more than ``seen_log_max_partitions`` prior partitions exist,
-    the current epoch's seen-key write FOLDS the whole history (min
-    first_epoch per key) into its own partition and stamps it with a
-    ``_COMPACTED`` marker; partitions OLDER than a marked fold are deleted
-    by a LATER batch (deferred delete — a retried epoch must still find
-    every partition its first attempt saw). Per-batch history reads are
-    thereby bounded by ~seen_log_max_partitions partitions regardless of
-    stream lifetime, and ``first_epoch`` reporting survives compaction.
+    Seen-keys log folding: once at least ``seen_log_max_partitions``
+    live units precede the epoch, the epoch's keys are written as a fold
+    of the whole history (min first_epoch per key) instead of a run. What
+    a fold supersedes is pruned by a later epoch, so a retried epoch still
+    finds every unit its first attempt read. Each batch thereby reads at
+    most ~seen_log_max_partitions units however long the stream lives,
+    and ``first_epoch`` reporting survives folding.
     """
     bad = [r.rule_id for r in catalog.rules if r.type in CROSS_BATCH_UNSAFE]
     if bad:
@@ -202,17 +113,11 @@ def validate_stream(
         result = validate(batch_df, local_catalog, key_col=key_col, refs=refs or {})
         ranked = result.violations_ranked
         seen_parts = []
-        prior = None
-        if unique_rules and _path_exists(s, seen_path):
-            # epoch < current: a RETRIED epoch never collides with itself.
-            # first_epoch coalesces to the partition epoch for rows written
-            # before the first_epoch column existed.
-            prior = (
-                s.read.schema(_SEEN_SCHEMA)
-                .parquet(seen_path)
-                .where(F.col("epoch") < F.lit(epoch_id))
-                .withColumn("first_epoch", F.coalesce("first_epoch", "epoch"))
-            )
+        seen = StateLog(seen_path, s) if unique_rules else None
+        # units below the current epoch: a retried epoch never collides
+        # with its own first attempt
+        inputs = seen.live_inputs(epoch_id) if seen else []
+        prior = s.read.schema(_SEEN_SCHEMA).parquet(*inputs) if inputs else None
         for rule in unique_rules:
             # intra-batch duplicates: the same salted aggregate as batch mode
             ranked = ranked.unionByName(unique_violations(batch_df, rule, key_col))
@@ -222,7 +127,7 @@ def validate_stream(
             ).where(F.col("k").isNotNull())
             if prior is not None:
                 # cross-batch duplicates: batch keys seen in ANY prior epoch.
-                # The log is (rule_id, key-tuple, epoch) — pruned scalars only.
+                # The log is (rule_id, key tuple, first_epoch): scalars only.
                 hits = (
                     bk.join(
                         prior.where(F.col("rule_id") == rule.rule_id).select(
@@ -231,8 +136,8 @@ def validate_stream(
                         on="k",
                     )
                     .groupBy("key", "k")
-                    # min: a key may appear in several partitions until the
-                    # deferred post-fold cleanup runs
+                    # min: a key seen in several epochs has a row in each
+                    # of their units
                     .agg(F.min("first_epoch").alias("first_epoch"))
                 )
                 cols = ",".join(str(c) for c in rule.get("columns"))
@@ -273,32 +178,19 @@ def validate_stream(
             new_keys = log.select("rule_id", "k").withColumn(
                 "first_epoch", F.lit(epoch_id).cast("long")
             )
-            n_prior = len([e for e in _seen_epoch_dirs(s, seen_path) if e < epoch_id])
-            fold = prior is not None and n_prior >= seen_log_max_partitions
-            if fold:
-                # compaction: this epoch's partition absorbs the whole
-                # history (min first_epoch per key). Written via a temp dir +
-                # rename because Spark refuses to overwrite a path its own
-                # plan reads (prior scans seen_path).
+            if prior is not None and len(inputs) >= seen_log_max_partitions:
+                # the fold absorbs this epoch's keys in the same write
                 folded = (
-                    prior.select("rule_id", "k", "first_epoch")
-                    .unionByName(new_keys)
+                    prior.unionByName(new_keys)
                     .groupBy("rule_id", "k")
                     .agg(F.min("first_epoch").alias("first_epoch"))
                 )
-                tmp = f"{output_path}/_seen_keys_fold_tmp"
-                folded.write.mode("overwrite").parquet(tmp)
-                _commit_fold(s, tmp, seen_path, epoch_id)
+                seen.fold(epoch_id, lambda tmp: folded.write.mode("overwrite").parquet(tmp))
             else:
-                (
-                    new_keys.withColumn("epoch", F.lit(epoch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("epoch")
-                    .parquet(seen_path)
-                )
-            # delete partitions a PREVIOUS batch's fold made redundant (never
-            # this batch's own fold — retry safety)
-            _cleanup_folded_epochs(s, seen_path, epoch_id)
+                seen.commit(epoch_id, lambda tmp: new_keys.write.mode("overwrite").parquet(tmp))
+            # deletes what an earlier epoch's fold superseded, never what
+            # this epoch's own fold did (retry safety)
+            seen.prune(epoch_id)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)
@@ -324,8 +216,8 @@ def dedup_stream(
     **minhash_params,
 ):
     """STREAMING near-duplicate detection over a growing parquet corpus —
-    the composition of the incremental fingerprint store (VERDICT r04 #2,
-    operators/dedup_state.py) with the foreachBatch machinery here: each
+    the composition of the incremental fingerprint store
+    (operators/dedup_state.py) with the foreachBatch machinery here: each
     micro-batch fingerprints ONLY its own rows, pairs them against the
     persisted store (new-vs-all-history + new-vs-new), commits its
     signatures, and writes the pairs epoch-partitioned.
@@ -337,12 +229,12 @@ def dedup_stream(
     as validate_stream's sinks. ``minhash_params`` forward to
     ``incremental_minhash_pairs`` (threshold, bands, agreement...).
 
-    ``compact_every``: with N set, once more than N live run dirs exist
-    the batch folds the store UP TO THE PREVIOUS epoch (compact_store
-    ``up_to=epoch-1`` — the current epoch stays individually retryable),
-    bounding every batch's store scan to ~N dirs + 1 fold regardless of
-    stream lifetime — the fingerprint-store analog of the seen-keys log
-    compaction above.
+    ``compact_every``: with N set, once the store has more than N live
+    dirs (its runs and fold) the batch folds the store up to the previous
+    epoch (compact_store ``up_to=epoch-1``; the current epoch stays
+    individually retryable), bounding every batch's store scan to ~N dirs
+    however long the stream lives, the fingerprint-store analog of the
+    seen-keys log folding above.
 
     Returns the started StreamingQuery; pairs land at
     ``{output_path}/pairs`` as (a_id, b_id, sig_sim, epoch).
@@ -350,7 +242,6 @@ def dedup_stream(
     from anzlic_validator_spark.operators.dedup_state import (
         compact_store,
         incremental_minhash_pairs,
-        store_run_dirs,
     )
 
     reader = spark.readStream.schema(schema)
@@ -373,7 +264,11 @@ def dedup_stream(
         )
         # compaction AFTER the pair write consumed the store, and only up
         # to the previous epoch so this one stays retryable
-        if compact_every and epoch_id > 0 and len(store_run_dirs(store_dir)) > compact_every:
+        if (
+            compact_every
+            and epoch_id > 0
+            and len(StateLog(store_dir, s).live_inputs()) > compact_every
+        ):
             compact_store(s, store_dir, up_to=int(epoch_id) - 1)
 
     writer = (

@@ -579,15 +579,13 @@ def test_incremental_verify_join_plan_pinned(spark, tmp_path):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def test_run_ids_past_five_digits_stay_visible(tmp_path):
+def test_run_ids_past_five_digits_stay_visible(spark, tmp_path):
     """Review r05: run id 100000 formats to 6 digits; the loader must list
     it (a fixed 5-digit pattern made it invisible — next_id would stall and
     every later commit would silently replace the same dir) and order dirs
     NUMERICALLY ('run_100000' sorts before 'run_99999' lexically)."""
-    from anzlic_validator_spark.operators.dedup_state import (
-        _newest_fold,
-        store_live_inputs,
-    )
+    from anzlic_validator_spark.operators.dedup_state import store_live_inputs
+    from anzlic_validator_spark.state_log import StateLog
 
     store = tmp_path / "store"
     for rid in (99998, 99999, 100000):
@@ -602,7 +600,7 @@ def test_run_ids_past_five_digits_stay_visible(tmp_path):
         f = store / f"fold_{cov:05d}"
         f.mkdir()
         (f / "_FOLDED").touch()
-    assert _newest_fold(str(store))[1] == 100000
+    assert StateLog(str(store), spark).newest_fold() == 100000
     dirs2, next_id2 = store_live_inputs(str(store))
     assert [os.path.basename(d) for d in dirs2] == ["fold_100000"]
     assert next_id2 == 100001

@@ -188,7 +188,7 @@ def test_bucketed_input_revalidates_only_touched_bucket(spark, data_dir, tmp_pat
     assert s3["pending_buckets"] == [5]
 
 
-def test_input_snapshot_sensitivity(tmp_path):
+def test_input_snapshot_sensitivity(spark, tmp_path):
     f = tmp_path / "x.parquet"
     f.write_bytes(b"aaa")
     s1 = input_snapshot([str(tmp_path)])
@@ -196,7 +196,28 @@ def test_input_snapshot_sensitivity(tmp_path):
     assert input_snapshot([str(tmp_path)]) != s1
 
 
-def test_bucket_count_mismatch_rejected(tmp_path):
+def test_uri_input_paths_fingerprint_their_files(spark, tmp_path):
+    """An input given as a URI is listed through Hadoop, like a plain path:
+    its fingerprint covers its files and moves when one is rewritten, so a
+    resume over ``--input file://...`` revalidates changed input."""
+    from anzlic_validator_spark.manifest import input_snapshots_per_bucket
+
+    inp = tmp_path / "inp"
+    inp.mkdir()
+    f = inp / "x.parquet"
+    f.write_bytes(b"aaa")
+    uri = inp.as_uri()
+    s1 = input_snapshot([uri])
+    b1 = input_snapshots_per_bucket([uri], 4)
+    assert s1 != input_snapshot([])
+    assert b1 != input_snapshots_per_bucket([], 4)
+    f.write_bytes(b"aaab")
+    assert input_snapshot([uri]) != s1
+    b2 = input_snapshots_per_bucket([uri], 4)
+    assert all(b2[b] != b1[b] for b in range(4))
+
+
+def test_bucket_count_mismatch_rejected(spark, tmp_path):
     m = Manifest.load(str(tmp_path), n_buckets=8)
     m.record_run("r1", "rv", "snap", [], {0: {"rows": 1}}, 0.1)
     with pytest.raises(ValueError, match="n_buckets"):

@@ -193,7 +193,9 @@ def test_streaming_seen_log_compaction(spark, tmp_path):
     ~seen_log_max_partitions partitions, and a duplicate of an epoch-0 key
     surfacing many epochs later still reports first_epoch=0 (history is
     folded, never lost)."""
-    from anzlic_validator_spark.streaming.incremental import _seen_epoch_dirs
+    import os
+
+    from anzlic_validator_spark.state_log import StateLog
 
     inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
     cat = parse_catalog(
@@ -210,11 +212,11 @@ def test_streaming_seen_log_compaction(spark, tmp_path):
     for i in range(1, 7):  # epochs 1..6: crosses the fold threshold twice
         _clip_rows(spark, [f"x{i}"]).write.mode("append").parquet(inp)
         run()
-        max_dirs = max(max_dirs, len(_seen_epoch_dirs(spark, f"{out}/_seen_keys")))
+        units = [d for d in os.listdir(f"{out}/_seen_keys") if d.startswith(("run_", "fold_"))]
+        max_dirs = max(max_dirs, len(units))
     # bounded: threshold + the fold epoch itself + one deferred-delete lag
     assert max_dirs <= 5
-    dirs = _seen_epoch_dirs(spark, f"{out}/_seen_keys")
-    assert any(dirs.values()), "no compacted fold marker written"
+    assert StateLog(f"{out}/_seen_keys", spark).newest_fold() is not None, "no fold marker written"
 
     # the epoch-0 key, long since folded, is still caught with its origin
     _clip_rows(spark, ["dup-0"]).write.mode("append").parquet(inp)
@@ -225,37 +227,56 @@ def test_streaming_seen_log_compaction(spark, tmp_path):
 
 
 def test_fold_commit_refuses_empty_or_failed_fold(spark, tmp_path):
-    """ADVICE r03: a failed/empty fold rename must RAISE, never stamp the
-    _COMPACTED marker — a marker over an empty dir licenses the deferred
-    cleanup to delete the entire seen-key history."""
+    """A failed or empty fold must RAISE, never stamp the _FOLDED marker:
+    a marker over an empty dir licenses the deferred prune to delete the
+    entire seen-key history."""
     import os
 
     import pytest
 
-    from anzlic_validator_spark.streaming.incremental import (
-        _commit_fold,
-        _seen_epoch_dirs,
-    )
+    from anzlic_validator_spark.state_log import StateLog
 
     seen = str(tmp_path / "out" / "_seen_keys")
-    # 1) tmp dir does not exist -> hadoop rename returns False -> IOError
+    log = StateLog(seen, spark)
+    # 1) the write produced nothing -> IOError, no fold
     with pytest.raises(IOError):
-        _commit_fold(spark, str(tmp_path / "no_such_tmp"), seen, 5)
-    assert _seen_epoch_dirs(spark, seen).get(5) is not True
-    # 2) tmp dir exists but holds only underscore files -> "landed empty"
-    tmp2 = tmp_path / "fold_tmp"
-    tmp2.mkdir()
-    (tmp2 / "_SUCCESS").write_text("")
+        log.fold(5, lambda tmp: None)
+    assert log.newest_fold() is None
+    # 2) the write produced only underscore files -> "landed no data files"
+    def only_success(tmp):
+        os.makedirs(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
     with pytest.raises(IOError):
-        _commit_fold(spark, str(tmp2), seen, 6)
-    assert _seen_epoch_dirs(spark, seen).get(6) is not True
-    # 3) a real data file -> fold promoted + marker stamped
-    tmp3 = tmp_path / "fold_tmp3"
-    tmp3.mkdir()
-    (tmp3 / "part-0.parquet").write_bytes(b"x")
-    _commit_fold(spark, str(tmp3), seen, 7)
-    assert _seen_epoch_dirs(spark, seen) == {7: True}
-    assert os.path.exists(os.path.join(seen, "epoch=7", "part-0.parquet"))
+        log.fold(6, only_success)
+    assert log.newest_fold() is None
+
+    def data(tmp):
+        os.makedirs(tmp, exist_ok=True)
+        with open(os.path.join(tmp, "part-0.parquet"), "wb") as fh:
+            fh.write(b"x")
+
+    # 3) hadoop rename signals failure by returning False -> IOError, no fold
+    class RenameFails:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    failing = StateLog(seen, spark)
+    failing.fs = RenameFails(failing.fs)
+    with pytest.raises(IOError):
+        failing.fold(7, data)
+    assert log.newest_fold() is None
+    # 4) a real data file -> fold published + marker stamped
+    log.fold(7, data)
+    assert log.newest_fold() == 7
+    assert sorted(os.listdir(seen)) == ["fold_00007"]
+    assert os.path.exists(os.path.join(seen, "fold_00007", "part-0.parquet"))
 
 
 def test_stateful_unique_stream(spark, tmp_path):
