@@ -38,12 +38,22 @@ import logging
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
 from anzlic_validator_spark.functions.audio import _to_s16, decode
+from anzlic_validator_spark.operators.dedup import (
+    hamming_lsh_pairs,
+    lsh_candidate_pairs,
+    verify_pairs,
+)
+from anzlic_validator_spark.operators.dedup_state import (
+    incremental_candidates,
+    incremental_fingerprints,
+)
 
 _FRAME = 1024
 _HOP = 512
@@ -318,7 +328,7 @@ def audio_near_duplicates_frames(
     short-clip corpora, accepting more chance collisions, or route such
     clips to the exact content_fp path.
 
-    HOT-HALF DEGENERACY (ADVICE r04): the bucket key is a single global
+    Hot-half degeneracy: the bucket key is a single global
     16-bit half-subfingerprint — silent, constant, or heavily-clipped
     frames hash to the SAME few halves across much of a real corpus, so
     one hot half degrades the bucket join to a corpus-scale O(n²)
@@ -328,8 +338,6 @@ def audio_near_duplicates_frames(
     carries no discriminative signal, the same reasoning as the
     simhash/minhash guidance. Pass ``None`` only for small corpora or
     oracle runs that must be exactly exhaustive."""
-    from anzlic_validator_spark.operators.dedup import lsh_candidate_pairs
-
     ex = fps.where(F.col("frames").isNotNull()).select(
         F.col("key").alias("id"), F.explode("frames").alias("fp")
     )
@@ -342,53 +350,17 @@ def audio_near_duplicates_frames(
     )
 
 
-def audio_verify_pairs(
-    cand: DataFrame,
-    fps: DataFrame,
-    a_col: str = "a_key",
-    b_col: str = "b_key",
-    max_ber: float = 0.25,
-    max_offset: int = 2,
-    broadcast_cand: bool = False,
-) -> DataFrame:
-    """VERIFY stage for audio near-dup candidates (VERDICT r04 #3): the
-    Haitsma-Kalker acceptance test the candidate stage's docstring promises.
-    For each candidate pair, align the two clips' ORDERED per-frame 32-bit
-    subfingerprint sequences (``subfp`` from audio_fingerprints) at every
-    frame offset in [-max_offset, max_offset] and keep the pair iff the
-    best alignment's bit error rate is <= ``max_ber``.
+def _subfp_rows(fps: DataFrame) -> DataFrame:
+    """The BER verify payload: (id, subfp) of every clip that has one."""
+    return fps.where(F.col("subfp").isNotNull()).select(F.col("key").alias("id"), "subfp")
 
-    Why this threshold splits cleanly: a noisy COPY flips a small fraction
-    of subfingerprint bits (measured ~0.05–0.15 BER at 1–3% additive
-    noise), while UNRELATED audio agrees only by coin-flip (BER ≈ 0.5 with
-    tight concentration over hundreds of frame-bits) — the 0.35 bar of
-    Haitsma & Kalker 2002 sits between; 0.25 adds margin on the noise side
-    for this fingerprint's band layout. Shared-half COUNTING (the candidate
-    score) can be fooled by a few colliding halves; the BER over the whole
-    aligned sequence cannot.
 
-    Decode-free and pure Catalyst: one join per side moves subfp arrays
-    for CANDIDATE pairs only (the verify-only-candidates discipline every
-    text LSH family here follows), then the offset sweep runs as array
-    lambdas inside codegen — no second decode, no Python. Pairs whose
-    aligned overlap is empty (offset exceeds a clip) score BER 1.0 and are
-    rejected.
-
-    ``broadcast_cand=True`` (the incremental-store path) pins the
-    candidate side as the broadcast build of both subfp joins so the
-    store-side fingerprint table only ever streams — the same verify-join
-    pinning as cosine_verify_pairs (VERDICT r05 #2).
-
-    Returns (a_col, b_col, ber) with ber rounded to 4 decimals.
-    """
-    seqs = fps.where(F.col("subfp").isNotNull()).select(
-        F.col("key"), F.col("subfp")
-    )
-    sa_side = seqs.select(F.col("key").alias(a_col), F.col("subfp").alias("__sa"))
-    sb_side = seqs.select(F.col("key").alias(b_col), F.col("subfp").alias("__sb"))
-    j1 = (F.broadcast(cand) if broadcast_cand else cand).join(sa_side, a_col)
-    joined = (F.broadcast(j1) if broadcast_cand else j1).join(sb_side, b_col)
-    sa, sb = F.col("__sa"), F.col("__sb")
+def _best_offset_ber(max_offset: int) -> Column:
+    """Best-offset bit error rate between ``subfp_a`` and ``subfp_b``: the
+    two ordered subfingerprint sequences are aligned at every frame offset
+    in [-max_offset, max_offset] and the lowest BER wins. An alignment
+    with no overlap (the offset exceeds a clip) scores 1.0."""
+    sa, sb = F.col("subfp_a"), F.col("subfp_b")
 
     def ber_at(o):
         # overlap of sa shifted by o against sb: a[1+max(o,0) ...] vs
@@ -409,19 +381,54 @@ def audio_verify_pairs(
             ln > 0, bad.cast("double") / (F.lit(32.0) * ln.cast("double"))
         ).otherwise(F.lit(1.0))
 
-    ber = F.array_min(
+    return F.array_min(
         F.transform(
             F.sequence(F.lit(-int(max_offset)), F.lit(int(max_offset))),
             ber_at,
         )
     )
-    # filter on the UNROUNDED value (rounding first would admit pairs up to
-    # max_ber + 5e-5 — one-sided toward acceptance; review r05), round only
-    # for output
-    return (
-        joined.withColumn("__ber", ber)
-        .where(F.col("__ber") <= F.lit(float(max_ber)))
-        .select(a_col, b_col, F.round("__ber", 4).alias("ber"))
+
+
+def audio_verify_pairs(
+    cand: DataFrame,
+    fps: DataFrame,
+    a_col: str = "a_key",
+    b_col: str = "b_key",
+    max_ber: float = 0.25,
+    max_offset: int = 2,
+) -> DataFrame:
+    """Verify stage for audio near-dup candidates: the Haitsma-Kalker
+    acceptance test. For each candidate pair, the two clips' ordered
+    per-frame 32-bit subfingerprint sequences (``subfp`` from
+    audio_fingerprints) are aligned at every frame offset in
+    [-max_offset, max_offset], and the pair is kept iff the best
+    alignment's bit error rate is <= ``max_ber``.
+
+    Why this threshold splits cleanly: a noisy copy flips a small fraction
+    of subfingerprint bits (measured ~0.05–0.15 BER at 1–3% additive
+    noise), while unrelated audio agrees only by coin-flip (BER ≈ 0.5 with
+    tight concentration over hundreds of frame-bits). The 0.35 bar of
+    Haitsma & Kalker 2002 sits between; 0.25 adds margin on the noise side
+    for this fingerprint's band layout. Shared-half counting (the candidate
+    score) can be fooled by a few colliding halves; the BER over the whole
+    aligned sequence cannot.
+
+    Decode-free and pure Catalyst: ``verify_pairs`` moves subfp arrays for
+    candidate pairs only, then the offset sweep runs as array lambdas
+    inside codegen, with no second decode and no Python. Pairs whose
+    aligned overlap is empty score BER 1.0 and are rejected.
+
+    Returns (a_col, b_col, ber) with ber rounded to 4 decimals; the bar is
+    compared unrounded.
+    """
+    return verify_pairs(
+        cand,
+        _subfp_rows(fps),
+        _best_offset_ber(max_offset),
+        lambda ber: ber <= F.lit(float(max_ber)),
+        "ber",
+        a_col,
+        b_col,
     )
 
 
@@ -434,33 +441,27 @@ def incremental_audio_dedup(
     sr_col: str = "sr_hz",
     commit: bool = True,
     run_id: int | None = None,
-    persist_new: bool = True,
 ) -> DataFrame:
-    """Cross-run incremental AUDIO content dedup — the audio-payload twin
-    of operators/dedup_state.incremental_minhash_pairs, sharing its store
-    layout (atomic run commits + meta guard + ``run_id`` retry idempotency:
-    an explicit id replaces the retried attempt's own run and pairs only
-    against strictly-older runs, so an at-least-once caller never
-    accumulates duplicate store rows): a persisted
-    (key, content_fp) store means run N+1 DECODES ONLY ITS NEW CLIPS —
-    decode is the dominant cost of the audio pass, and old clips' bytes
-    are structurally not an input — and matches them against stored
-    fingerprints.
+    """Cross-run incremental audio content dedup, the audio-payload twin of
+    operators/dedup_state.incremental_minhash_pairs. It shares that store
+    layout: atomic run commits, the meta guard and ``run_id`` retry
+    idempotency (an explicit id replaces the retried attempt's own run and
+    pairs only against strictly older runs, so an at-least-once caller
+    never accumulates duplicate store rows). The persisted
+    (key, content_fp) store means run N+1 decodes only its new clips
+    (decode is the dominant cost of the audio pass, and old clips' bytes
+    are not an input) and matches them against stored fingerprints.
 
     Returns exact-content duplicate pairs ``(a_key, b_key)`` involving at
     least one new clip (a_key < b_key; new-vs-old and new-vs-new;
     old-vs-old was reported by the run that introduced it). Undecodable
-    new clips (NULL content_fp) are committed to the store as NULL rows —
-    they can never match — preserving the never-fail decode contract.
+    new clips (NULL content_fp) are committed to the store as NULL rows;
+    they never match, which keeps the never-fail decode contract.
 
     Scale shape: one Arrow decode pass over the new batch only; the store
-    read is a payload-free (key, 32-hex content_fp) parquet scan; ONE join
-    on content_fp with the small new side broadcastable against a
-    10^12-row store."""
-    from anzlic_validator_spark.operators.dedup_state import (
-        incremental_fingerprints,
-    )
-
+    read is a payload-free (key, 32-hex content_fp) parquet scan; one join
+    on content_fp (``incremental_candidates``, uncapped) with the small new
+    side broadcastable against a 10^12-row store."""
     new_fps, all_fps = incremental_fingerprints(
         new_clips,
         store_dir,
@@ -470,22 +471,10 @@ def incremental_audio_dedup(
         ).select("key", "content_fp"),
         commit,
         run_id,
-        persist_new,
     )
-    nf = new_fps.where(F.col("content_fp").isNotNull()).withColumnRenamed(
-        "key", "n_key"
-    )
-    af = all_fps.where(F.col("content_fp").isNotNull()).withColumnRenamed(
-        "key", "o_key"
-    )
-    return (
-        nf.join(af, "content_fp")
-        .where(F.col("n_key") != F.col("o_key"))
-        .select(
-            F.least("n_key", "o_key").alias("a_key"),
-            F.greatest("n_key", "o_key").alias("b_key"),
-        )
-        .distinct()
+    return incremental_candidates(
+        new_fps, all_fps, lambda fps: fps.where(F.col("content_fp").isNotNull()),
+        ["content_fp"], None, "incremental_audio_dedup", id_col="key",
     )
 
 
@@ -502,30 +491,20 @@ def incremental_audio_neardup(
     max_bucket_size: int | None = 10_000,
     commit: bool = True,
     run_id: int | None = None,
-    persist_new: bool = True,
 ) -> DataFrame:
-    """Cross-run incremental PERCEPTUAL audio near-dup: the verified
+    """Cross-run incremental perceptual audio near-dup: the verified
     frame-match pipeline (candidates by shared tagged halves → best-offset
-    BER accept) against a persisted (key, frames, subfp) store — run N+1
+    BER accept) against a persisted (key, frames, subfp) store. Run N+1
     decodes only its new clips and finds near-duplicates of anything ever
     ingested. Returns (a_key, b_key, ber) pairs involving >= 1 new clip.
 
-    Store kind is distinct from the exact content store (the shared meta
-    guard refuses to mix them). New-vs-new shared-half counts use DISTINCT
-    halves per pair — the asymmetric join sees both orientations of a
-    new-new pair, which would otherwise double the score.
-
-    Hot-half degeneracy at scale: handled by the shared
-    ``exclude_hot_buckets`` helper — the store side is first restricted to
-    halves TOUCHED by the new batch (so the census and join scan only the
-    relevant slice of a 10^12-clip store), then halves with more than
-    ``max_bucket_size`` carriers among those are dropped with an exact
-    logged census (never silent). The BER verify stage is unchanged and
-    decode-free (stored subfp sequences)."""
-    from anzlic_validator_spark.operators.dedup_state import (
-        incremental_fingerprints,
-    )
-
+    The store kind is distinct from the exact content store (the shared
+    meta guard refuses to mix them). Candidates are pairs sharing at least
+    ``min_matches`` distinct halves (``incremental_candidates``); halves
+    with more than ``max_bucket_size`` carriers among those the batch
+    touches drop, with a logged census. The BER verify (``verify_pairs``
+    pinned on the candidate side) reads the stored subfp sequences, so it
+    is decode-free."""
     new_fps, all_fps = incremental_fingerprints(
         new_clips,
         store_dir,
@@ -535,34 +514,28 @@ def incremental_audio_neardup(
         ).select("key", "frames", "subfp"),
         commit,
         run_id,
-        persist_new,
     )
-    from anzlic_validator_spark.operators.dedup_state import exclude_hot_buckets
-
-    nh = new_fps.where(F.col("frames").isNotNull()).select(
-        F.col("key").alias("n_key"), F.explode("frames").alias("fp")
+    cand = incremental_candidates(
+        new_fps,
+        all_fps,
+        lambda fps: fps.where(F.col("frames").isNotNull()).select(
+            "key", F.explode("frames").alias("fp")
+        ),
+        ["fp"],
+        max_bucket_size,
+        "incremental_audio_neardup",
+        id_col="key",
+        min_shared=min_matches,
     )
-    ah = all_fps.where(F.col("frames").isNotNull()).select(
-        F.col("key").alias("o_key"), F.explode("frames").alias("fp")
-    )
-    nh, ah = exclude_hot_buckets(
-        nh, ah, ["fp"], max_bucket_size, "incremental_audio_neardup",
-        restrict_touched=all_fps is not new_fps,
-    )
-    cand = (
-        nh.join(ah, "fp")
-        .where(F.col("n_key") != F.col("o_key"))
-        .groupBy(
-            F.least("n_key", "o_key").alias("a_key"),
-            F.greatest("n_key", "o_key").alias("b_key"),
-        )
-        .agg(F.countDistinct("fp").alias("n_shared"))
-        .where(F.col("n_shared") >= int(min_matches))
-        .select("a_key", "b_key")
-    )
-    return audio_verify_pairs(
-        cand, all_fps, max_ber=max_ber, max_offset=max_offset,
-        broadcast_cand=True,
+    return verify_pairs(
+        cand,
+        _subfp_rows(all_fps),
+        _best_offset_ber(max_offset),
+        lambda ber: ber <= F.lit(float(max_ber)),
+        "ber",
+        "a_key",
+        "b_key",
+        pin=True,
     )
 
 
@@ -572,34 +545,29 @@ def audio_near_duplicates_verified(
     max_bucket_size: int | None = 10_000,
     max_ber: float = 0.25,
     max_offset: int = 2,
-    persist_fps: bool = True,
 ) -> DataFrame:
     """Candidates → verify, composed: shared-tagged-half candidate pairs
     (``audio_near_duplicates_frames``) filtered by the best-offset BER test
-    (``audio_verify_pairs``). ``fps`` must carry ``frames`` AND ``subfp``
+    (``audio_verify_pairs``). ``fps`` must carry ``frames`` and ``subfp``
     (audio_fingerprints ``parts=("frames", "subfp")``).
 
     With the verify stage on, ``min_matches`` drops from the unverified 8
-    to a RECALL bar of 2: measured at 2 % additive noise (2 s clips) the
+    to a recall bar of 2: measured at 2 % additive noise (2 s clips) the
     candidate score alone no longer separates (planted copies can share as
-    few as 2 halves while unrelated clips reach 8 by chance) — the BER
-    margin (≤ 0.16 planted vs ≥ 0.34 unrelated) is what decides, so
-    candidates only need to PROPOSE every true pair cheaply. False
-    candidates cost one array comparison each, never a decode.
+    few as 2 halves while unrelated clips reach 8 by chance). The BER
+    margin (≤ 0.16 planted vs ≥ 0.34 unrelated) decides, so candidates only
+    need to propose every true pair cheaply. A false candidate costs one
+    array comparison, never a decode.
 
-    ``persist_fps``: the fingerprint table feeds the bucket explode and
-    both sides of the verify join — three consumers of the decode UDF's
-    output. Persisting (MEMORY_AND_DISK; rows are key + fingerprint
-    arrays, never audio bytes) keeps decode-once true. Same ownership
-    contract as minhash's persist_shingles: the operator never sees the
-    consuming action, so long-lived sessions unpersist after consuming or
-    pass ``persist_fps=False``."""
+    The fingerprint table feeds the bucket explode and both sides of the
+    verify join, three consumers of the decode UDF's output, so it is
+    persisted (MEMORY_AND_DISK; rows are key + fingerprint arrays, never
+    audio bytes) to keep decode-once true. The operator never sees the
+    consuming action, so long-lived sessions should
+    ``spark.catalog.clearCache()`` after consuming the result."""
     _require_computed_part(fps, "frames", "audio_near_duplicates_verified")
     _require_computed_part(fps, "subfp", "audio_near_duplicates_verified")
-    if persist_fps:
-        from pyspark import StorageLevel
-
-        fps = fps.persist(StorageLevel.MEMORY_AND_DISK)
+    fps = fps.persist(StorageLevel.MEMORY_AND_DISK)
     cand = audio_near_duplicates_frames(fps, min_matches, max_bucket_size).select(
         "a_key", "b_key"
     )
@@ -615,8 +583,6 @@ def audio_near_duplicates(
     """Perceptual near-dup pairs → (a_key, b_key, hamming), a_key < b_key,
     Hamming(phash) <= max_hamming. Same pigeonhole sub-key LSH as SimHash
     (n_tables > max_hamming ⇒ candidate recall is exact)."""
-    from anzlic_validator_spark.operators.dedup import hamming_lsh_pairs
-
     sigs = fps.where(F.col("phash").isNotNull()).select(
         F.col("key").alias("id"), F.col("phash").alias("sig")
     )

@@ -21,11 +21,17 @@ Scale notes per operator:
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import logging
+import threading
+import time
+from dataclasses import dataclass, field
+from typing import Callable
 
 import numpy as np
 import pandas as pd
+from pyspark import Accumulator, StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,106 +41,108 @@ log = logging.getLogger(__name__)
 
 def _census_message(what: str, n_buckets: int, cap: int, n_rows: int) -> str:
     return (
-        f"{what}: dropped {n_buckets} oversized LSH buckets (> {cap} rows) covering "
-        f"{n_rows} bucket-rows from candidate generation — pairs confined to those "
-        "buckets are not reported (ADVISORY count: retries/speculation inflate it, "
-        "and a mid-job log may be partial until the atexit flush corrects it)"
+        f"{what}: dropped {n_buckets} hot buckets (> {cap} rows each, {n_rows} "
+        "bucket-rows in total) from candidate generation; pairs found only in "
+        "those buckets are not reported (ADVISORY count: retries/speculation "
+        "inflate it, and a mid-job log may be partial until the atexit flush "
+        "corrects it)"
     )
 
 
-def _poll_bucket_census(
-    acc_buckets, acc_rows, cap: int, what: str, state: dict, msg_fn=_census_message
-) -> None:
-    """Daemon-thread target: polls the census accumulators and logs once the
-    drop count is nonzero and stable. Accumulators (not ``observe``) on
-    purpose: AQE's empty-relation propagation excises CollectMetrics nodes
-    from the final plan whenever anything downstream goes empty — an empty
-    candidate set is common — silently losing the metrics (observed on
-    Spark 4.1); accumulator updates from completed stages survive any
-    re-plan. Never blocks the caller; the atexit flush covers drivers that
-    exit before the counts stabilize, and the loop is bounded (~2 h) so a
-    never-executed plan does not leak a polling thread forever."""
-    import time
-
-    last = 0
-    for tick in range(780):  # 60 x 0.5s + 720 x 10s ≈ 2 h, mostly sleeping
-        time.sleep(0.5 if tick < 60 else 10.0)
-        if state["logged"]:
-            return
-        try:
-            cur = int(round(float(acc_buckets.value)))  # Σ 1/size, float acc
-        except Exception:  # context torn down
-            return
-        if cur and cur == last:
-            state["logged"] = True
-            state["value"] = cur
-            log.warning(msg_fn(what, cur, cap, int(acc_rows.value)))
-            return
-        last = cur
+# A census is forgotten this long after it was armed. One that never logs
+# (nothing was hot, the normal case, or the plan never ran) would otherwise
+# be polled for the life of the process.
+_CENSUS_BOUND_S = 7200.0
 
 
-# censuses armed this process, flushed at interpreter exit: a short-lived
-# driver (spark-submit batch) may finish its action and exit before the poll
-# thread's stability window elapses — "never silent" must survive that
-_CENSUS_PENDING: list = []
-_CENSUS_ATEXIT_ARMED = False
+@dataclass
+class _Census:
+    acc_buckets: Accumulator
+    acc_rows: Accumulator
+    cap: int
+    what: str
+    armed_at: float = field(default_factory=time.monotonic)
+    last: int = 0  # bucket count at the previous poll
+    logged: int = 0  # bucket count last logged
+
+    def count(self) -> int:
+        return int(round(float(self.acc_buckets.value)))  # float accumulator
+
+    def log(self, n_buckets: int) -> None:
+        self.logged = n_buckets
+        log.warning(_census_message(self.what, n_buckets, self.cap, int(self.acc_rows.value)))
 
 
+# Censuses armed in this process, served by one poller thread. A logged
+# census stays listed until its bound for the atexit flush: a short-lived
+# driver (a spark-submit batch) may exit before a count stabilizes, and a
+# count logged mid-job may still grow.
+_CENSUS_PENDING: list[_Census] = []
+_census_lock = threading.Lock()
+_census_poller: threading.Thread | None = None
+
+
+def _poll_censuses() -> None:
+    """Poller thread: logs each census once its drop count is nonzero and
+    unchanged across two polls. Accumulators, not ``observe``: AQE's
+    empty-relation propagation removes CollectMetrics nodes from the final
+    plan whenever anything downstream goes empty (an empty candidate set is
+    common), losing the metrics, while accumulator updates from completed
+    stages survive any re-plan. The thread exits once every census is past
+    its bound."""
+    global _census_poller
+    while True:
+        time.sleep(0.5)
+        with _census_lock:
+            now = time.monotonic()
+            _CENSUS_PENDING[:] = [
+                c for c in _CENSUS_PENDING if now - c.armed_at <= _CENSUS_BOUND_S
+            ]
+            for c in _CENSUS_PENDING:
+                if not c.logged:
+                    cur = c.count()
+                    if cur and cur == c.last:
+                        c.log(cur)
+                    c.last = cur
+            if not _CENSUS_PENDING:
+                _census_poller = None
+                return
+
+
+@atexit.register
 def _flush_census_at_exit() -> None:
-    # re-logs even already-logged censuses whose accumulators kept growing
-    # after the stability window (a stage that stalled >10s mid-tally logs a
-    # partial count; the final value at exit corrects it — ADVICE r03)
-    for acc_b, acc_r, cap, what, state, msg_fn in _CENSUS_PENDING:
-        try:
-            cur = int(round(float(acc_b.value)))
-            rows = int(acc_r.value)
-        except Exception:  # SparkContext already stopped
-            continue
-        if cur and cur != state.get("value", 0):
-            state["logged"] = True
-            state["value"] = cur
-            log.warning(msg_fn(what, cur, cap, rows))
+    with _census_lock:
+        for c in _CENSUS_PENDING:
+            cur = c.count()
+            if cur and cur != c.logged:
+                c.log(cur)
 
 
-def _arm_census(acc_buckets, acc_rows, cap: int, what: str, msg_fn=_census_message) -> None:
-    global _CENSUS_ATEXIT_ARMED
-    import atexit
-    import threading
-
-    state = {"logged": False, "value": 0}
-    _CENSUS_PENDING.append((acc_buckets, acc_rows, cap, what, state, msg_fn))
-    if not _CENSUS_ATEXIT_ARMED:
-        atexit.register(_flush_census_at_exit)
-        _CENSUS_ATEXIT_ARMED = True
-    threading.Thread(
-        target=_poll_bucket_census,
-        args=(acc_buckets, acc_rows, cap, what, state, msg_fn),
-        daemon=True,
-    ).start()
+def _arm_census(acc_buckets, acc_rows, cap: int, what: str) -> None:
+    global _census_poller
+    with _census_lock:
+        _CENSUS_PENDING.append(_Census(acc_buckets, acc_rows, cap, what))
+        if _census_poller is None:
+            _census_poller = threading.Thread(target=_poll_censuses, daemon=True)
+            _census_poller.start()
 
 
+def drop_hot_buckets(df: DataFrame, bucket_cols: list[str], cap: int, what: str) -> DataFrame:
+    """Drops every row whose bucket holds more than ``cap`` rows, with a lazy
+    advisory census of what it dropped: no eager job, never silent. It is the
+    one hot-bucket pattern of the batch LSH caps and the incremental stores'
+    candidate join.
 
-def drop_hot_buckets(
-    df: DataFrame,
-    bucket_cols: list[str],
-    cap: int,
-    what: str,
-    msg_fn=_census_message,
-) -> DataFrame:
-    """Drop every row whose bucket holds more than ``cap`` rows, with the
-    LAZY advisory accumulator census (never an eager job, never silent) —
-    the one hot-bucket pattern shared by the batch LSH caps and the
-    incremental stores' ``exclude_hot_buckets`` (VERDICT r05 #6).
-
-    Shape: per-bucket sizes from a map-side-combined count aggregate (a hot
-    key ships one partial-count row per map partition, never O(degree)),
-    hot buckets tallied into accumulators by a vectorized pandas UDF while
-    the real query's own job builds the anti-join side (one row per HOT
-    BUCKET crosses into Python), then a PINNED broadcast anti-join — planned
-    cold, the planner otherwise falls to a sort-merge anti join that
-    shuffles and sorts the full stream twice (observed, Spark 4.1). The hot
-    list is bounded by total_rows/cap and is empty on healthy corpora;
-    corpora extreme enough to overflow a broadcast should raise the cap."""
+    Per-bucket sizes come from a map-side-combined count aggregate, so a hot
+    key ships one partial-count row per map partition, never O(degree). A
+    vectorized pandas UDF tallies the hot buckets into accumulators while the
+    query's own job builds the anti-join side (one row per hot bucket crosses
+    into Python), and the poller logs the census once the counts settle. The
+    anti-join is a pinned broadcast: planned cold, the planner otherwise
+    picks a sort-merge anti join that shuffles and sorts the full stream
+    twice (observed on Spark 4.1). The hot list is bounded by
+    total_rows/cap and is empty on healthy corpora; corpora extreme enough
+    to overflow a broadcast should raise the cap."""
     sc = df.sparkSession.sparkContext
     acc_buckets = sc.accumulator(0.0)
     acc_rows = sc.accumulator(0)
@@ -155,7 +163,7 @@ def drop_hot_buckets(
         .where(tally_hot(F.col("__bsz")))
         .select(*bucket_cols)
     )
-    _arm_census(acc_buckets, acc_rows, int(cap), what, msg_fn)
+    _arm_census(acc_buckets, acc_rows, int(cap), what)
     return df.join(F.broadcast(hot), on=bucket_cols, how="left_anti")
 
 
@@ -187,26 +195,13 @@ def lsh_candidate_pairs(
       one aggregation buffer. Uncapped is the small-scale/oracle mode;
       always set the cap at scale.
 
-    Buckets above ``max_bucket_size`` are EXCLUDED from candidate
-    generation, with a logged bucket/row census (never silent). The census
-    is LAZY (VERDICT r02 "wrong" #2): no eager job at plan-construction
-    time — hot buckets are tallied into accumulators by a vectorized
-    pandas UDF WHILE the real query's own job builds the anti-join side,
-    and a daemon thread logs the census once the counts stabilize (see
-    _poll_bucket_census for why not ``observe``).
-
-    Hot-bucket detection (r06, guide §2.2/§2.4): per-bucket sizes come
-    from a map-side-combined count aggregate — its exchange carries one
+    Buckets above ``max_bucket_size`` are excluded from candidate
+    generation by ``drop_hot_buckets``, which logs a lazy bucket/row census:
+    no eager job runs at plan-construction time, and the census is logged
+    once the query's own job has tallied it. The hot buckets are found from
+    a map-side-combined count aggregate, whose exchange carries one
     partial-count row per (partition, bucket), so a hot key ships
-    O(#partitions) rows — and oversized buckets drop via an anti-join
-    (AQE broadcasts the hot list when small, i.e. always in practice; a
-    pathological corpus where the hot LIST itself is huge degrades to a
-    shuffle anti-join on the same bucket-key partitioning the grouping
-    reuses). The r01–r05 window-based sizing re-ran the full bucket
-    exchange + sort + window a SECOND time for the census union branch
-    (measured: no runtime stage reuse) — at corpus scale that was an
-    entire extra shuffle-and-sort pass; the tally UDF also saw one row
-    per dropped ROW, where it now sees one row per hot BUCKET.
+    O(#partitions) rows.
 
     Run exact dedup first — a hot bucket is nearly always a pile of
     byte-identical docs the exact pass already collapses — and treat the
@@ -235,14 +230,13 @@ def lsh_candidate_pairs(
             x["id"] < y["id"], F.struct(x.alias("a"), y.alias("b"))
         ).otherwise(F.struct(y.alias("a"), x.alias("b")))
 
-    # INCREMENTAL pair expansion (ADVICE r03): posexplode each member out
-    # first, then pair it against the remainder of its bucket. A single
-    # flatten(transform(transform(...))) materialized all O(s²) pair structs
-    # of a bucket inside ONE aggregation row — ~50M structs (GBs) for a
-    # bucket near a 10k cap — before the explode could stream them. This
-    # shape keeps per-row memory O(s): each generated row carries the bucket
-    # array plus one member's pair list, and the second explode streams the
-    # pairs through the generator.
+    # incremental pair expansion: posexplode each member out first, then
+    # pair it against the remainder of its bucket. A single
+    # flatten(transform(transform(...))) would materialize all O(s²) pair
+    # structs of a bucket inside one aggregation row (GBs near a 10k cap)
+    # before the explode could stream them. This shape keeps per-row memory
+    # O(s): each generated row carries the bucket array plus one member's
+    # pair list, and the second explode streams the pairs.
     member = grouped.select(
         F.col("__ms"), F.posexplode("__ms").alias("__i", "__x")
     )
@@ -261,6 +255,48 @@ def lsh_candidate_pairs(
     if counts:
         return base.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_shared"))
     return base.distinct()
+
+
+def verify_pairs(
+    cand: DataFrame,
+    payload: DataFrame,
+    score: Column,
+    keep: Callable[[Column], Column],
+    out: str,
+    a: str = "a_id",
+    b: str = "b_id",
+    pin: bool = False,
+) -> DataFrame:
+    """The verify join of every dedup family: candidate pairs ``cand``
+    (``a``, ``b``) → (``a``, ``b``, ``out``) for the pairs ``keep`` accepts.
+
+    ``payload`` holds one row per id: ``id`` plus the columns the score
+    reads. Each side joins it with those columns suffixed ``_a`` / ``_b``
+    (``sh`` becomes ``sh_a`` and ``sh_b``), and ``score`` is a Column over
+    the suffixed names. ``keep`` tests the unrounded score, because
+    rounding first would admit pairs up to 5e-5 past the bar; the score is
+    rounded to 4 decimals for output only.
+
+    ``pin`` makes the candidate side the broadcast build of both joins, so
+    a large payload table (an incremental store) only streams; an AQE
+    fallback to sort-merge would shuffle it twice. Join 1's output is again
+    candidate-bounded, so broadcasting it is bounded too. Without the pin,
+    AQE picks the strategy, which suits a payload that is a persisted
+    projection of the batch itself."""
+    vals = [c for c in payload.columns if c != "id"]
+
+    def side(key: str, sfx: str) -> DataFrame:
+        return payload.select(
+            F.col("id").alias(key), *[F.col(c).alias(f"{c}_{sfx}") for c in vals]
+        )
+
+    j1 = (F.broadcast(cand) if pin else cand).join(side(a, "a"), a)
+    joined = (F.broadcast(j1) if pin else j1).join(side(b, "b"), b)
+    return (
+        joined.withColumn(out, score)
+        .where(keep(F.col(out)))
+        .select(a, b, F.round(out, 4).alias(out))
+    )
 
 
 # ---------------------------------------------------------------- exact
@@ -423,44 +459,35 @@ def minhash_near_duplicates(
     n_bands: int = 21,
     shingle_k: int = 3,
     max_bucket_size: int | None = None,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """LSH candidate generation + exact Jaccard verification.
 
     Returns (a_id, b_id, jac) with a_id < b_id and jac >= threshold.
     Pipeline: shingle → signature (no shuffle) → band-bucket grouping
     (the one shuffle; bucket key is (band, hash-of-band-slice)) → exact
-    verify on candidates only.
+    Jaccard on candidates only, through ``verify_pairs``.
 
-    ``persist_shingles``: the (id, shingles) projection is consumed three
-    times (bucketing + both sides of the candidate verify join). Carrying
-    shingles through the LSH shuffle instead would move ~n_bands× the
-    corpus text through the exchange — strictly worse at scale — so the
-    right plan is ONE computation persisted (MEMORY_AND_DISK, spills
-    gracefully; Spark evicts LRU). Disable for fire-and-forget plans where
-    recompute is preferable to pinning executor storage. The persist is NOT
-    auto-unpersisted (the result is lazy; the operator never sees the
-    consuming action) — long-lived sessions invoking this repeatedly should
-    ``spark.catalog.clearCache()`` / unpersist after consuming the result,
-    or pass ``persist_shingles=False``.
+    The (id, shingles) projection is consumed three times (bucketing and
+    both sides of the verify join), so it is persisted once
+    (MEMORY_AND_DISK, which spills and is evicted LRU). Carrying shingles
+    through the LSH shuffle instead would move ~n_bands× the corpus text
+    through the exchange. The persist is not released here, because the
+    result is lazy and the operator never sees the consuming action:
+    long-lived sessions that call this repeatedly should
+    ``spark.catalog.clearCache()`` after consuming the result.
 
     Band tuning: with b bands of r rows, P(candidate) = 1-(1-j^r)^b.
     Defaults (b=21, r=3) give recall ≥ 0.9998 at j=0.7 and ≥ 0.99 at the
     0.6 threshold while pruning j≈0.1 pairs to ~2% candidate rate; raise r
     (and num_hashes) for higher thresholds at bigger scale.
     """
-    base = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
-    ).select("id", word_shingles_from_tokens(F.col("__toks"), shingle_k).alias("sh"))
-    if persist_shingles:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    # signature as ONE array expression and band keys as ONE nested
-    # transform (r06): the former 63 mh_i columns + 21 band structs were a
-    # constant-size-per-row computation carried by an O(num_hashes) plan —
-    # analysis + codegen paid for every expression on every run. Values are
-    # bit-identical (see minhash_sig_array).
+    base = (
+        df.select(F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks"))
+        .select("id", word_shingles_from_tokens(F.col("__toks"), shingle_k).alias("sh"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    # the signature as one array expression and the band keys as one nested
+    # transform: a constant-size plan, not one expression per hash or band
     sig = base.select("id", minhash_sig_array(F.col("sh"), num_hashes).alias("__sig"))
     buckets = sig.select(
         "id", F.explode(band_keys(F.col("__sig"), num_hashes, n_bands)).alias("bb")
@@ -468,14 +495,13 @@ def minhash_near_duplicates(
     candidates = lsh_candidate_pairs(
         buckets, ["band", "bh"], ["id"], max_bucket_size, "minhash_lsh"
     ).select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-    sh = base.select(F.col("id"), F.col("sh"))
-    verified = (
-        candidates.join(sh.select(F.col("id").alias("a_id"), F.col("sh").alias("sh_a")), "a_id")
-        .join(sh.select(F.col("id").alias("b_id"), F.col("sh").alias("sh_b")), "b_id")
-        .withColumn("jac", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .where(F.col("jac") >= F.lit(threshold))
+    return verify_pairs(
+        candidates,
+        base,
+        jaccard(F.col("sh_a"), F.col("sh_b")),
+        lambda jac: jac >= F.lit(threshold),
+        "jac",
     )
-    return verified.select("a_id", "b_id", F.round("jac", 4).alias("jac"))
 
 
 def exact_jaccard_pairs(
@@ -564,8 +590,8 @@ def simhash_near_duplicates(
     n_tables > max_hamming, since ≤ max_hamming differing bits can touch at
     most max_hamming of the n_tables chunks). Candidate recall is exact; the
     Hamming filter afterwards is exact; ``max_bucket_size`` bounds degenerate
-    buckets (see _drop_oversized_buckets — capped buckets are logged, and
-    capping can only lose pairs confined to dropped buckets).
+    buckets (see drop_hot_buckets: capped buckets are logged, and capping
+    can only lose pairs confined to dropped buckets).
 
     Sizing at scale: sub-key width bounds the table count (w = 64 // t), so
     a web-scale corpus tunes max_bucket_size rather than w — expected bucket

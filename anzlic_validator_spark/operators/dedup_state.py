@@ -30,13 +30,17 @@ parameters would silently break agreement estimates, so a mismatch raises.
 from __future__ import annotations
 
 import logging
+from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from anzlic_validator_spark.operators.dedup import (
     band_keys,
+    drop_hot_buckets,
     minhash_sig_array,
+    verify_pairs,
     word_shingles_from_tokens,
 )
 from anzlic_validator_spark.state_log import StateLog
@@ -114,27 +118,25 @@ def incremental_fingerprints(
     fingerprint_fn,
     commit: bool,
     run_id: int | None,
-    persist_new: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared scaffold of every incremental-store operator (text minhash,
     audio content, audio perceptual, embedding): meta guard → fold-aware
     live inputs → fingerprint only the new batch → commit (or persist for
     a what-if probe) → union with the stored corpus. Returns
     ``(new_fps, all_fps)``; ``fingerprint_fn`` maps the new batch to its
-    store-row DataFrame.
+    store-row DataFrame. ``all_fps is new_fps`` when the store holds no
+    rows yet.
 
     ``run_id``: None appends the next run. An explicit id replaces that
     run and pairs only against runs before it, so a retried batch
     reproduces its first attempt.
 
-    ``persist_new`` applies to the ``commit=False`` what-if path only (a
-    commit's parquet write is the materialization): the new batch's
-    fingerprints are persisted because bucketing and both verify-join
-    sides consume them. The handle is internal, so repeated what-if probes
-    in a long-lived session accumulate cached blocks until ContextCleaner
-    runs; such callers should pass ``persist_new=False`` (recompute per
-    consumer) or ``spark.catalog.clearCache()`` after consuming, the
-    minhash_near_duplicates ``persist_shingles`` ownership contract."""
+    With ``commit=False`` the new batch's fingerprints are persisted
+    (MEMORY_AND_DISK), because bucketing and both verify-join sides consume
+    them; a commit's parquet write is that materialization instead. The
+    persisted handle is internal, so a long-lived session that runs many
+    what-if probes should ``spark.catalog.clearCache()`` after consuming
+    each result."""
     spark = new_df.sparkSession
     store = StateLog(store_dir, spark)
     _check_meta(store, meta, create=commit)
@@ -151,9 +153,7 @@ def incremental_fingerprints(
             lambda tmp: fps.write.mode("overwrite").parquet(tmp),
         )
         new_fps = spark.read.parquet(path)
-    elif persist_new:
-        from pyspark import StorageLevel
-
+    else:
         new_fps = new_fps.persist(StorageLevel.MEMORY_AND_DISK)
     all_fps = (
         spark.read.parquet(*prior).unionByName(new_fps) if prior else new_fps
@@ -161,53 +161,57 @@ def incremental_fingerprints(
     return new_fps, all_fps
 
 
-def _hot_bucket_message(what: str, n_buckets: int, cap: int, n_rows: int) -> str:
-    return (
-        f"{what}: dropped {n_buckets} hot buckets (> {cap} carriers across "
-        f"store+batch among batch-touched buckets, {n_rows} bucket-rows) "
-        "from candidate generation — pairs supported only by those buckets "
-        "are not reported (ADVISORY count: retries/speculation inflate it)"
-    )
-
-
-def exclude_hot_buckets(
-    nb: DataFrame,
-    ab: DataFrame,
+def incremental_candidates(
+    new_fps: DataFrame,
+    all_fps: DataFrame,
+    rows: Callable[[DataFrame], DataFrame],
     keys: list[str],
     cap: int | None,
     what: str,
-    restrict_touched: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared hot-bucket handling for the incremental candidate joins
-    (text minhash bands, audio halves, embedding SRP buckets): FIRST
-    restrict the store side to buckets TOUCHED by the new batch (left-semi
-    against the batch's distinct key set — small and broadcastable), so
-    both the census and the candidate join scan O(rows in touched
-    buckets), never the whole store; THEN drop touched buckets with more
-    than ``cap`` carriers via the ONE hot-bucket pattern shared with the
-    batch LSH caps (``dedup.drop_hot_buckets``): a map-side-combined count
-    aggregate + pinned broadcast anti-join, with the lazy advisory
-    accumulator census, so no eager job runs at plan-construction time.
+    id_col: str = "id",
+    min_shared: int | None = None,
+) -> DataFrame:
+    """The candidate join of every incremental-store operator: the new
+    batch's bucket rows against those of (store ∪ batch) →
+    ``(a_<id_col>, b_<id_col>)`` pairs with a < b, each involving at least
+    one new row (old-vs-old pairs were reported by the runs that introduced
+    them). ``new_fps`` and ``all_fps`` come from ``incremental_fingerprints``;
+    ``rows`` maps either to its bucket rows ``(id_col, *keys)``.
 
-    Only ``ab`` is filtered: every candidate join downstream is an INNER
-    join on ``keys``, so dropping the store/batch side's hot rows already
-    removes every pair a hot bucket would have generated. ``nb`` is
-    returned unchanged.
+    The join is on ``keys``; self-pairs drop and each pair is ordered by
+    ``least``/``greatest``. Pairs are distinct, or, with ``min_shared``,
+    kept when they share at least that many distinct keys (both
+    orientations of a new-new pair meet in the join, so the count is of
+    distinct keys).
 
-    ``restrict_touched=False`` skips the semi-restriction when the caller
-    knows ``ab`` and ``nb`` derive from the SAME batch (an empty store —
-    every first run): every ab bucket is then touched by construction and
-    the semi-join would only add plan weight. Callers detect it as
-    ``all_fps is new_fps`` (incremental_fingerprints returns the identical
-    object when there are no prior runs)."""
-    from anzlic_validator_spark.operators.dedup import drop_hot_buckets
-
-    if restrict_touched:
-        touched = nb.select(*keys).distinct()
-        ab = ab.join(F.broadcast(touched), keys, "left_semi")
-    if cap is None:
-        return nb, ab
-    return nb, drop_hot_buckets(ab, keys, int(cap), what, _hot_bucket_message)
+    With a ``cap``, the store side is first restricted to the keys the
+    batch touches (a broadcast left-semi join against the batch's distinct
+    keys), so the census and the join scan only that slice of the store;
+    then buckets with more than ``cap`` carriers drop through
+    ``drop_hot_buckets``, which logs the census. Only the store side is
+    filtered: the join is inner, so that removes every pair a hot bucket
+    would generate. The restriction is skipped when the store was empty
+    (every bucket is then touched), and without a cap both steps are,
+    because the inner join already keeps only touched keys."""
+    n_id, o_id = f"n_{id_col}", f"o_{id_col}"
+    a, b = f"a_{id_col}", f"b_{id_col}"
+    nb = rows(new_fps).withColumnRenamed(id_col, n_id)
+    ab = rows(all_fps).withColumnRenamed(id_col, o_id)
+    if cap is not None:
+        if all_fps is not new_fps:
+            touched = nb.select(*keys).distinct()
+            ab = ab.join(F.broadcast(touched), keys, "left_semi")
+        ab = drop_hot_buckets(ab, keys, int(cap), what)
+    joined = nb.join(ab, keys).where(F.col(n_id) != F.col(o_id))
+    pair = [F.least(n_id, o_id).alias(a), F.greatest(n_id, o_id).alias(b)]
+    if min_shared is None:
+        return joined.select(*pair).distinct()
+    return (
+        joined.groupBy(*pair)
+        .agg(F.countDistinct(*keys).alias("n_shared"))
+        .where(F.col("n_shared") >= int(min_shared))
+        .select(a, b)
+    )
 
 
 def minhash_sigs(
@@ -253,49 +257,44 @@ def incremental_minhash_pairs(
     max_bucket_size: int | None = 10_000,
     commit: bool = True,
     run_id: int | None = None,
-    persist_new: bool = True,
 ) -> DataFrame:
     """One incremental dedup step → (a_id, b_id, sig_sim) near-dup pairs
-    involving AT LEAST ONE new row (a_id < b_id, sig_sim = signature
+    involving at least one new row (a_id < b_id, sig_sim = signature
     agreement >= min_agreement, rounded to 4 decimals).
 
-    EAGER by design (unlike the corpus-pass operators): committing the
-    batch and computing its pairs are one transaction-ish step, and the
-    commit write doubles as the signatures' single materialization. With
+    Eager by design, unlike the corpus-pass operators: committing the
+    batch and computing its pairs are one step, and the commit write
+    doubles as the signatures' single materialization. With
     ``commit=False`` (a what-if probe) nothing is written and the new
     signatures are computed in-plan instead.
 
-    ``run_id``: None (default) appends the next run. An EXPLICIT id makes
-    the step IDEMPOTENT under retry — the commit replaces run_<id> and the
-    pairing considers only runs strictly BEFORE it as "old", so an
+    ``run_id``: None (default) appends the next run. An explicit id makes
+    the step idempotent under retry: the commit replaces run_<id> and the
+    pairing considers only runs strictly before it as "old", so an
     at-least-once caller (streaming foreachBatch keyed by epoch) re-running
     a batch reproduces the same pairs instead of self-matching its own
     earlier attempt. Ids must be committed in increasing order.
 
-    ID CONTRACT: ids must be unique across the store's whole history
+    Id contract: ids must be unique across the store's whole history
     (outside the run_id retry mechanism, which replaces its own run). A
     re-ingested id would carry several sig rows through the verify joins
-    and emit duplicate — or, with changed text, conflicting — pairs; the
+    and emit duplicate (or, with changed text, conflicting) pairs; the
     store is payload-free, so it cannot detect this itself.
 
-    ``max_bucket_size``: the band join is routed through
-    ``exclude_hot_buckets`` — the store side is first semi-restricted to
-    bands the batch touches, then bands with more than this many carriers
-    drop with the logged census. A boilerplate band key shared by 10^9
-    stored docs (the near-empty-doc/template band) otherwise turns one new
-    row into 10^9 candidate rows — the exact degeneracy the batch
-    ``lsh_candidate_pairs`` caps. ``None`` disables (small corpora /
-    exact-oracle runs only).
+    ``max_bucket_size``: band keys with more carriers among the bands the
+    batch touches drop from the candidate join, with the logged census (see
+    ``incremental_candidates``). A boilerplate band key shared by 10^9
+    stored docs would otherwise turn one new row into 10^9 candidate rows,
+    the degeneracy the batch ``lsh_candidate_pairs`` caps. ``None``
+    disables the cap (small corpora and exact-oracle runs only).
 
-    Scale shape: signatures for the new batch only (no shuffle); ONE
-    band-key join of new-batch band rows (21x batch) against the
-    batch-touched, hot-capped slice of (store ∪ batch) band rows —
-    broadcastable new side against a 10^12-row store; verify joins are
-    PINNED broadcast-hash with the candidate side as build (AQE
-    falling back to sort-merge would shuffle the whole (id, sig) store
-    twice), so the store side streams through two scans and never
-    shuffles. The store read is a parquet scan of (id, sig) — document
-    payloads are never stored, never read, never shuffled.
+    Scale shape: signatures for the new batch only (no shuffle); one
+    band-key join of new-batch band rows (21x batch) against the band rows
+    of (store ∪ batch), broadcastable new side against a 10^12-row store;
+    verify joins pinned as broadcast-hash with the candidate side as build
+    (``verify_pairs``), so the store side streams through two scans and
+    never shuffles. The store read is a parquet scan of (id, sig):
+    document payloads are never stored, read or shuffled.
     """
     if num_hashes % n_bands != 0:
         raise ValueError(f"n_bands {n_bands} must divide num_hashes {num_hashes}")
@@ -306,37 +305,16 @@ def incremental_minhash_pairs(
         lambda df: minhash_sigs(df, text_col, id_col, num_hashes, shingle_k),
         commit,
         run_id,
-        persist_new,
     )
-
-    nb = _band_rows(new_sigs, num_hashes, n_bands).withColumnRenamed("id", "n_id")
-    ab = _band_rows(all_sigs, num_hashes, n_bands).withColumnRenamed("id", "o_id")
-    nb, ab = exclude_hot_buckets(
-        nb, ab, ["band", "bh"], max_bucket_size, "incremental_minhash_pairs",
-        restrict_touched=all_sigs is not new_sigs,
+    cand = incremental_candidates(
+        new_sigs, all_sigs, lambda sigs: _band_rows(sigs, num_hashes, n_bands),
+        ["band", "bh"], max_bucket_size, "incremental_minhash_pairs",
     )
-    cand = (
-        nb.join(ab, ["band", "bh"])
-        .where(F.col("n_id") != F.col("o_id"))
-        .select(
-            F.least("n_id", "o_id").alias("a_id"),
-            F.greatest("n_id", "o_id").alias("b_id"),
-        )
-        .distinct()
+    return verify_pairs(
+        cand,
+        all_sigs.select("id", "sig"),
+        sig_agreement(F.col("sig_a"), F.col("sig_b"), num_hashes),
+        lambda sim: sim >= F.lit(float(min_agreement)),
+        "sig_sim",
+        pin=True,
     )
-    sv = all_sigs.select(F.col("id"), F.col("sig"))
-    # candidate side pinned as the broadcast build of BOTH verify joins:
-    # the store sig table only ever streams (join 1's output is again
-    # candidate-bounded, so re-broadcasting it is bounded too)
-    j1 = F.broadcast(cand).join(
-        sv.select(F.col("id").alias("a_id"), F.col("sig").alias("__sa")), "a_id"
-    )
-    verified = (
-        F.broadcast(j1)
-        .join(sv.select(F.col("id").alias("b_id"), F.col("sig").alias("__sb")), "b_id")
-        .withColumn(
-            "sig_sim", sig_agreement(F.col("__sa"), F.col("__sb"), num_hashes)
-        )
-        .where(F.col("sig_sim") >= F.lit(float(min_agreement)))
-    )
-    return verified.select("a_id", "b_id", F.round("sig_sim", 4).alias("sig_sim"))

@@ -17,9 +17,16 @@ import math
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from anzlic_validator_spark.operators.dedup import lsh_candidate_pairs, verify_pairs
+from anzlic_validator_spark.operators.dedup_state import (
+    incremental_candidates,
+    incremental_fingerprints,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -132,7 +139,6 @@ def embedding_near_duplicates(
     n_tables: int = 8,
     seed: int = 42,
     max_bucket_size: int | None = None,
-    persist_vectors: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs → (a_id, b_id, cos), a_id < b_id.
 
@@ -146,24 +152,21 @@ def embedding_near_duplicates(
     ``max_bucket_size`` caps degenerate buckets (e.g. a mass of zero-ish
     embeddings) exactly like the text-LSH dedup caps.
 
-    ``persist_vectors`` is not auto-unpersisted (the result is lazy) —
-    long-lived sessions should unpersist after the consuming action or pass
-    ``persist_vectors=False`` (see minhash_near_duplicates).
+    The (id, vector, norm) projection is consumed three times (bucketing
+    and both verify-join sides), so it is persisted once rather than
+    re-running the SRP pandas UDF and the norm folds. It is not released
+    here, because the result is lazy: long-lived sessions should
+    ``spark.catalog.clearCache()`` after the consuming action.
     """
-    from anzlic_validator_spark.operators.dedup import lsh_candidate_pairs
-
     buckets_udf = make_srp_buckets_udf(dim, bits, n_tables, seed)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    ).withColumn("__vn", l2_norm(F.col("__v")))
-    if persist_vectors:
-        # consumed three times (bucketing + both verify-join sides); one
-        # computation persisted beats re-running the SRP pandas UDF and
-        # norm folds (see minhash_near_duplicates.persist_shingles)
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = (
+        df.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("__v"),
+        )
+        .withColumn("__vn", l2_norm(F.col("__v")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     bucketed = base.select(
         "id", F.posexplode(buckets_udf(F.col("__v"))).alias("tbl", "bkt")
     )
@@ -176,36 +179,19 @@ def embedding_near_duplicates(
     )
 
 
-def cosine_verify_pairs(
-    cand: DataFrame, vectors: DataFrame, threshold: float,
-    broadcast_cand: bool = False,
-) -> DataFrame:
-    """Exact-cosine verify shared by the batch and incremental embedding
-    dedups (review r05: the verify shape was drifting into copies):
-    ``cand (a_id, b_id)`` joined against ``vectors (id, v, nrm)`` on both
-    sides → (a_id, b_id, cos) with cos >= threshold, compared UNROUNDED
-    and rounded to 4 decimals for output.
+def _pair_cosine() -> Column:
+    """Cosine of the ``v_a``/``v_b`` sides of a verify join, from the
+    stored norms ``nrm_a``/``nrm_b``."""
+    return dot(F.col("v_a"), F.col("v_b")) / (F.col("nrm_a") * F.col("nrm_b"))
 
-    ``broadcast_cand=True`` (the incremental-store path, VERDICT r05 #2)
-    PINS the candidate side as the broadcast build of both joins — join
-    1's output is again candidate-bounded, so re-broadcasting it is
-    bounded too — so a huge ``vectors`` table (the store) only ever
-    streams; an AQE fallback to sort-merge would shuffle it twice. Batch
-    callers leave it False: their vector table is the persisted in-memory
-    projection, and AQE's choice is already right."""
-    va = vectors.select(
-        F.col("id").alias("a_id"), F.col("v").alias("__va"), F.col("nrm").alias("__na")
-    )
-    vb = vectors.select(
-        F.col("id").alias("b_id"), F.col("v").alias("__vb"), F.col("nrm").alias("__nb")
-    )
-    cos = dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
-    j1 = (F.broadcast(cand) if broadcast_cand else cand).join(va, "a_id")
-    joined = (F.broadcast(j1) if broadcast_cand else j1).join(vb, "b_id")
-    return (
-        joined.withColumn("__cos", cos)
-        .where(F.col("__cos") >= F.lit(float(threshold)))
-        .select("a_id", "b_id", F.round("__cos", 4).alias("cos"))
+
+def cosine_verify_pairs(cand: DataFrame, vectors: DataFrame, threshold: float) -> DataFrame:
+    """Exact-cosine verify of candidate pairs ``cand (a_id, b_id)`` against
+    ``vectors (id, v, nrm)`` through ``verify_pairs`` → (a_id, b_id, cos)
+    with cos >= threshold, compared unrounded and rounded to 4 decimals
+    for output."""
+    return verify_pairs(
+        cand, vectors, _pair_cosine(), lambda cos: cos >= F.lit(float(threshold)), "cos"
     )
 
 
@@ -222,29 +208,22 @@ def incremental_embedding_neardup(
     max_bucket_size: int | None = 10_000,
     commit: bool = True,
     run_id: int | None = None,
-    persist_new: bool = True,
 ) -> DataFrame:
-    """Cross-run incremental EMBEDDING near-dup — the vector twin of the
-    minhash/audio fingerprint stores (operators/dedup_state.py scaffold:
-    atomic run commits, meta param guard incl. the SRP configuration,
-    run_id retry idempotency, fold-aware compaction): run N+1 embeds
-    nothing and SRP-hashes ONLY its new vectors; stored rows carry both
-    the vector (for the exact-cosine verify) and the precomputed SRP
-    bucket array (so pairing against 10^12 stored vectors never re-runs
-    the hashing UDF over the store — only parquet scans move).
+    """Cross-run incremental embedding near-dup, the vector twin of the
+    minhash and audio fingerprint stores (the operators/dedup_state.py
+    scaffold: atomic run commits, the meta guard including the SRP
+    configuration, run_id retry idempotency, fold-aware compaction). Run
+    N+1 SRP-hashes only its new vectors. Stored rows carry the vector and
+    its norm, computed once at commit, for the exact-cosine verify, and the
+    SRP bucket array, so pairing against 10^12 stored vectors never re-runs
+    the hashing UDF over the store: only parquet scans move.
 
     Returns (a_id, b_id, cos) pairs involving >= 1 new vector, cos >=
-    threshold. Hot SRP buckets (zero-ish embeddings concentrate there)
-    are handled by the shared ``exclude_hot_buckets`` helper: the store
-    side is first restricted to buckets the batch touches — so the census
-    and join scan that slice, never the whole store — then over-cap
-    buckets drop with an exact logged census. Norms are computed ONCE at
-    commit and stored (the verify re-reads them; review r05)."""
-    from anzlic_validator_spark.operators.dedup_state import (
-        exclude_hot_buckets,
-        incremental_fingerprints,
-    )
-
+    threshold. Candidates come from ``incremental_candidates``: hot SRP
+    buckets (zero-ish embeddings concentrate there) with more than
+    ``max_bucket_size`` carriers among those the batch touches drop, with a
+    logged census. The cosine verify is ``verify_pairs`` pinned on the
+    candidate side."""
     buckets_udf = make_srp_buckets_udf(dim, bits, n_tables, seed)
     new_v, all_v = incremental_fingerprints(
         new_df,
@@ -259,29 +238,22 @@ def incremental_embedding_neardup(
         .withColumn("nrm", l2_norm(F.col("v"))),
         commit,
         run_id,
-        persist_new,
     )
-    nb = new_v.select(
-        F.col("id").alias("n_id"), F.posexplode("bkts").alias("tbl", "bkt")
+    cand = incremental_candidates(
+        new_v,
+        all_v,
+        lambda v: v.select("id", F.posexplode("bkts").alias("tbl", "bkt")),
+        ["tbl", "bkt"],
+        max_bucket_size,
+        "incremental_embedding_neardup",
     )
-    ab = all_v.select(
-        F.col("id").alias("o_id"), F.posexplode("bkts").alias("tbl", "bkt")
-    )
-    nb, ab = exclude_hot_buckets(
-        nb, ab, ["tbl", "bkt"], max_bucket_size, "incremental_embedding_neardup",
-        restrict_touched=all_v is not new_v,
-    )
-    cand = (
-        nb.join(ab, ["tbl", "bkt"])
-        .where(F.col("n_id") != F.col("o_id"))
-        .select(
-            F.least("n_id", "o_id").alias("a_id"),
-            F.greatest("n_id", "o_id").alias("b_id"),
-        )
-        .distinct()
-    )
-    return cosine_verify_pairs(
-        cand, all_v.select("id", "v", "nrm"), threshold, broadcast_cand=True
+    return verify_pairs(
+        cand,
+        all_v.select("id", "v", "nrm"),
+        _pair_cosine(),
+        lambda cos: cos >= F.lit(float(threshold)),
+        "cos",
+        pin=True,
     )
 
 

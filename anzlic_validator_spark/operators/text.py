@@ -244,8 +244,8 @@ def repetition_features(
         # without the persist each is an independent subtree re-reading the
         # source and re-tokenizing every document (review r05: two extra
         # full passes at corpus scale). Same ownership contract as
-        # minhash's persist_shingles: the result is lazy, so long-lived
-        # sessions unpersist after consuming.
+        # minhash_near_duplicates' shingle persist: the result is lazy, so
+        # long-lived sessions unpersist after consuming.
         g = g.persist(StorageLevel.MEMORY_AND_DISK)
         light = g.select(
             F.col(id_col),

@@ -458,8 +458,8 @@ def test_incremental_embedding_neardup_store(spark, tmp_path):
     assert {"id", "v", "bkts", "nrm"} <= set(r0.columns)
 
 
-def test_exclude_hot_buckets_census_and_drop(spark, caplog):
-    """Review r05: the hand-rolled hot-bucket path must actually DROP and
+def test_incremental_candidates_census_and_drop(spark, caplog):
+    """The capped incremental candidate join must actually DROP and
     actually LOG. Identical-direction vectors land in one SRP bucket per
     table; with a cap below the carrier count every candidate disappears
     and the census warning fires; with the cap above, pairs return."""
@@ -504,11 +504,15 @@ def test_exclude_hot_buckets_census_and_drop(spark, caplog):
             out = incremental_embedding_neardup(run2, s, dim=16, max_bucket_size=100)
             assert out.count() == 4  # cap above carriers: all pairs back
     assert any("hot buckets" in r.message for r in caplog.records)
+    assert any(
+        r.message.startswith("incremental_embedding_neardup: dropped ")
+        for r in caplog.records
+    )
 
 
 def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
-    """VERDICT r05 #1: the text store's band join now routes through
-    exclude_hot_buckets. Staging a hot band (many identical docs in the
+    """The text store's band join routes through the capped
+    incremental_candidates. Staging a hot band (many identical docs in the
     store) and a cap below its carrier count must (a) drop every pair
     supported only by the hot bands, with the census logged, while (b)
     pairs in non-hot bands survive the same run."""
@@ -560,19 +564,67 @@ def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
     ]
 
 
-def test_incremental_verify_join_plan_pinned(spark, tmp_path):
-    """VERDICT r05 #2: the verify joins against the store sig table must be
-    broadcast-hash with the candidate side as build — an AQE fallback to
-    sort-merge would shuffle the whole (id, sig) store twice. Pin the
-    executed plan: no sort-merge / shuffled-hash join anywhere, and the
-    two verify joins appear as BroadcastHashJoins."""
-    store = str(tmp_path / "store")
-    base = _docs(spark, [(d, _vocab_doc(d)) for d in range(5)])
-    incremental_minhash_pairs(base, store, "text", "doc_id")
-    p2 = incremental_minhash_pairs(
+def _pinned_minhash(spark, store):
+    incremental_minhash_pairs(
+        _docs(spark, [(d, _vocab_doc(d)) for d in range(5)]), store, "text", "doc_id"
+    )
+    return incremental_minhash_pairs(
         _docs(spark, [(103, _vocab_doc(3))]), store, "text", "doc_id"
     )
-    p2.collect()
+
+
+def _pinned_audio_perceptual(spark, store):
+    from anzlic_validator_spark.functions.audio import encode, ref_signal
+    from anzlic_validator_spark.operators.audio_dedup import incremental_audio_neardup
+
+    sr = 8000
+
+    def clips(rows):
+        return spark.createDataFrame(
+            [
+                (k, encode(ref_signal(j, sr, 2 * sr, seed=21), sr, "pcm_s16le"), "pcm_s16le", sr)
+                for k, j in rows
+            ],
+            "clip_id string, bytes binary, codec string, sr_hz int",
+        )
+
+    incremental_audio_neardup(clips([("a0", 0), ("a1", 1)]), store)
+    return incremental_audio_neardup(clips([("b0", 0)]), store)
+
+
+def _pinned_embedding(spark, store):
+    import numpy as np
+
+    from anzlic_validator_spark.operators.similarity import (
+        incremental_embedding_neardup,
+    )
+
+    vecs = np.random.Generator(np.random.Philox(key=np.uint64(3))).standard_normal((6, 16))
+
+    def df(rows):
+        return spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in rows],
+            "vec_id long, embedding array<double>",
+        )
+
+    incremental_embedding_neardup(df([(i, vecs[i]) for i in range(6)]), store, dim=16)
+    return incremental_embedding_neardup(df([(100, vecs[2] * 1.01)]), store, dim=16)
+
+
+@pytest.mark.parametrize(
+    "second_batch",
+    [_pinned_minhash, _pinned_audio_perceptual, _pinned_embedding],
+    ids=["minhash", "audio_perceptual", "embedding"],
+)
+def test_incremental_verify_join_plan_pinned(spark, tmp_path, second_batch):
+    """Every incremental family's verify joins against the store must be
+    broadcast-hash with the candidate side as build: an AQE fallback to
+    sort-merge would shuffle the whole store table twice. Pin the executed
+    plan of a second batch against a non-empty store: no sort-merge or
+    shuffled-hash join anywhere, and the two verify joins appear as
+    BroadcastHashJoins."""
+    p2 = second_batch(spark, str(tmp_path / "store"))
+    assert p2.collect()  # a real pair, so AQE cannot prune the verify joins
     plan = p2._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
