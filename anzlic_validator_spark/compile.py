@@ -1,10 +1,20 @@
-"""Rule-spec → Catalyst ``Column`` compiler for row-level rules.
+"""Rule spec → Spark SQL text compiler for row-level rules.
 
-Each row-level rule compiles to ONE nullable struct column: NULL when the row
-passes, ``struct(rule_id, observed, expected, rule_order)`` when it fails.
-The engine packs all rule structs into an array, filters nulls and explodes —
-so every rule is evaluated for every row in a single whole-stage-codegen'd
-projection (no per-row Python, no shuffle).
+Each row-level rule compiles to ONE nullable struct expression written as
+Spark SQL text: NULL when the row passes, ``struct(… AS rule_id, … AS
+observed, … AS expected, … AS rule_order)`` when it fails. The engine
+hands all of them to the JVM in one ``selectExpr`` (array → filter nulls →
+explode, see ``explode_violations``), so every rule is evaluated for every
+row in a single whole-stage-codegen'd projection (no per-row Python, no
+shuffle) and the plan costs a handful of py4j calls however many rules the
+catalog holds. The compile itself is pure Python.
+
+Quoting: ``_ident`` backquotes every column name and ``_lit`` writes every
+literal with the type PySpark's ``lit()`` gives it. A string holding a quote, a
+backslash, ``${`` or a non-printable character is written as a UTF-8 hex
+binary cast: neither setting of ``spark.sql.parser.escapedStringLiterals``
+nor SQL variable substitution rewrites it, and the optimizer folds it back
+to a plain string literal.
 
 Violation classes mirror the reference's exception taxonomy
 (scripts/errorChecker.py):
@@ -22,152 +32,179 @@ afterwards so the headline verdict matches while every violation is reported
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import datetime
+import math
+
+from pyspark.sql import DataFrame
 
 from anzlic_validator_spark.errors import InvalidConfigException
-from anzlic_validator_spark.rules import Rule
+from anzlic_validator_spark.rules import Rule, _validate_spec
 
 _NONE = "None"  # observed marker for missing values (reference prints None)
 _EMPTY = "''"  # observed marker for blank values
 
 
-def _viol(rule: Rule, cls: str, observed: Column, expected: str) -> Column:
-    rid = rule.rule_id if cls == "" else f"{rule.rule_id}.{cls}"
-    return F.struct(
-        F.lit(rid).alias("rule_id"),
-        observed.cast("string").alias("observed"),
-        F.lit(expected).alias("expected"),
-        F.lit(rule.order).cast("int").alias("rule_order"),
+def _ident(name: object) -> str:
+    """A column name as a backquoted SQL identifier."""
+    name = str(name)
+    if "${" in name:
+        # variable substitution runs on the raw text, before the lexer
+        raise InvalidConfigException(
+            f"column name {name!r}: '${{' cannot be written in Spark SQL text"
+        )
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(value: object) -> str:
+    """A SQL literal of the type ``lit(value)`` gives: INT, BIGINT,
+    DOUBLE (never DECIMAL), BOOLEAN, DATE or STRING."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, int):
+        if -(2**31) <= value < 2**31:
+            return str(value)
+        if -(2**63) <= value < 2**63:
+            return f"{value}L"
+        raise InvalidConfigException(f"integer literal {value} does not fit BIGINT")
+    if isinstance(value, float):
+        if math.isnan(value):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(value):
+            return "CAST('Infinity' AS DOUBLE)" if value > 0 else "CAST('-Infinity' AS DOUBLE)"
+        return f"{value!r}D"
+    if isinstance(value, str):
+        if value.isprintable() and "'" not in value and "\\" not in value and "${" not in value:
+            return f"'{value}'"
+        return f"CAST(X'{value.encode('utf-8').hex()}' AS STRING)"
+    if isinstance(value, datetime.date) and not isinstance(value, datetime.datetime):
+        return f"DATE '{value.isoformat()}'"
+    raise InvalidConfigException(f"unsupported literal {value!r} ({type(value).__name__})")
+
+
+def _case(branches: list[tuple[str, str]], otherwise: str | None = None) -> str:
+    whens = " ".join(f"WHEN {cond} THEN {val}" for cond, val in branches)
+    return f"CASE {whens}{'' if otherwise is None else f' ELSE {otherwise}'} END"
+
+
+def _any(conds: list[str]) -> str:
+    return "(" + " OR ".join(conds) + ")" if conds else "false"
+
+
+def _struct(rule_id: str, observed: str, expected: str, order: int) -> str:
+    """The violation struct over SQL expressions ``rule_id``, ``observed``
+    and ``expected`` (a string expression)."""
+    return (
+        f"struct({rule_id} AS rule_id, CAST({observed} AS STRING) AS observed, "
+        f"{expected} AS expected, {int(order)} AS rule_order)"
     )
 
 
-def _is_blank(col: Column) -> Column:
-    return F.length(F.trim(col.cast("string"))) == 0
+def _viol(rule: Rule, cls: str, observed: str, expected: str) -> str:
+    return _struct(_lit(f"{rule.rule_id}.{cls}"), observed, _lit(expected), rule.order)
 
 
-def _presence_chain(rule: Rule, col: Column, expected_desc: str):
+def _blank(c: str) -> str:
+    return f"(length(trim(CAST({c} AS STRING))) = 0)"
+
+
+def _presence(rule: Rule, c: str, expected: str) -> tuple[list[tuple[str, str]], str]:
     """Shared missing/empty prelude for value-bearing rules.
 
-    Returns (when_chain_start, guard) where guard is the condition under
-    which the value check should run (non-null, non-blank unless tolerated).
+    Returns (branches, guard) where guard is the condition under which the
+    value check should run (non-null, non-blank unless tolerated).
     """
-    allow_none = bool(rule.get("allow_none", False))
-    allow_empty = bool(rule.get("allow_empty", False))
-    chain = None
-    if not allow_none:
-        chain = F.when(col.isNull(), _viol(rule, "missing", F.lit(_NONE), expected_desc))
-    if not allow_empty:
-        cond = col.isNotNull() & _is_blank(col)
-        v = _viol(rule, "empty", F.lit(_EMPTY), expected_desc)
-        chain = F.when(cond, v) if chain is None else chain.when(cond, v)
-    guard = col.isNotNull() & ~_is_blank(col)
-    return chain, guard
+    branches = []
+    if not rule.get("allow_none", False):
+        branches.append((f"{c} IS NULL", _viol(rule, "missing", _lit(_NONE), expected)))
+    if not rule.get("allow_empty", False):
+        branches.append(
+            (f"({c} IS NOT NULL AND {_blank(c)})", _viol(rule, "empty", _lit(_EMPTY), expected))
+        )
+    return branches, f"({c} IS NOT NULL AND NOT {_blank(c)})"
 
 
-def _finish(chain, guard: Column, fail: Column, viol: Column) -> Column:
-    cond = guard & fail
-    return F.when(cond, viol) if chain is None else chain.when(cond, viol)
+def _in(s: str, vals: list[str]) -> str:
+    return f"({s} IN ({', '.join(_lit(v) for v in vals)}))" if vals else "false"
 
 
-def compile_row_rule(rule: Rule) -> list[Column]:
-    """Compile one row rule to nullable violation-struct column(s)."""
+def compile_row_rule(rule: Rule) -> list[str]:
+    """Compile one row rule to nullable violation-struct SQL expression(s)."""
     t = rule.type
     if t == "exists":
-        col = F.col(rule.get("column"))
-        chain, _ = _presence_chain(rule, col, "present and non-empty")
-        if chain is None:
+        branches, _ = _presence(rule, _ident(rule.get("column")), "present and non-empty")
+        if not branches:
             raise InvalidConfigException(
                 f"rule {rule.rule_id}: exists with allow_none and allow_empty checks nothing"
             )
-        return [chain]
+        return [_case(branches)]
 
-    if t == "value":
-        col = F.col(rule.get("column"))
-        val = rule.get("value")
-        expected = str(val)
-        chain, guard = _presence_chain(rule, col, expected)
-        fail = col.cast("string") != F.lit(str(val))
-        return [_finish(chain, guard, fail, _viol(rule, "incorrect", col, expected))]
-
-    if t == "in_set":
-        col = F.col(rule.get("column"))
-        vals = [str(v) for v in rule.get("values")]
-        expected = "one of [" + ",".join(vals) + "]"
-        chain, guard = _presence_chain(rule, col, expected)
-        fail = ~col.cast("string").isin(vals)
-        return [_finish(chain, guard, fail, _viol(rule, "incorrect", col, expected))]
-
-    if t == "contains":
-        # every literal must be a substring (checkContains,
-        # errorChecker.py:548-562) — AND-folded native `contains`
-        col = F.col(rule.get("column"))
-        vals = [str(v) for v in rule.get("values")]
-        expected = "contains [" + ",".join(vals) + "]"
-        chain, guard = _presence_chain(rule, col, expected)
-        fail = None
-        for v in vals:
-            c = ~col.cast("string").contains(F.lit(v))
-            fail = c if fail is None else (fail | c)
-        return [_finish(chain, guard, fail, _viol(rule, "incorrect", col, expected))]
-
-    if t == "format":
-        # regex format check — generalizes DATEFORMAT's length+dash test
-        # (checkDateFormat, errorChecker.py:435-459)
-        col = F.col(rule.get("column"))
-        pattern = rule.get("pattern")
-        expected = f"matches {pattern}"
-        chain, guard = _presence_chain(rule, col, expected)
-        fail = ~col.cast("string").rlike(pattern)
-        return [_finish(chain, guard, fail, _viol(rule, "incorrect", col, expected))]
+    if t in ("value", "in_set", "contains", "format"):
+        c = _ident(rule.get("column"))
+        s = f"CAST({c} AS STRING)"
+        if t == "value":
+            expected = str(rule.get("value"))
+            fail = f"({s} != {_lit(expected)})"
+        elif t == "in_set":
+            vals = [str(v) for v in rule.get("values")]
+            expected = "one of [" + ",".join(vals) + "]"
+            fail = f"NOT {_in(s, vals)}"
+        elif t == "contains":
+            # every literal must be a substring (checkContains,
+            # errorChecker.py:548-562) — one native `contains` per literal
+            vals = [str(v) for v in rule.get("values")]
+            expected = "contains [" + ",".join(vals) + "]"
+            fail = _any([f"(NOT contains({s}, {_lit(v)}))" for v in vals])
+        else:
+            # regex format check — generalizes DATEFORMAT's length+dash test
+            # (checkDateFormat, errorChecker.py:435-459)
+            pattern = rule.get("pattern")
+            expected = f"matches {pattern}"
+            fail = f"NOT ({s} RLIKE {_lit(pattern)})"
+        branches, guard = _presence(rule, c, expected)
+        branches.append((f"({guard} AND {fail})", _viol(rule, "incorrect", c, expected)))
+        return [_case(branches)]
 
     if t == "range":
-        col = F.col(rule.get("column"))
+        c = _ident(rule.get("column"))
         lo, hi = rule.get("min"), rule.get("max")
         expected = f"in [{lo},{hi}]"
-        allow_none = bool(rule.get("allow_none", False))
-        chain = None
-        if not allow_none:
-            chain = F.when(col.isNull(), _viol(rule, "missing", F.lit(_NONE), expected))
-        fail = F.lit(False)
-        if lo is not None:
-            fail = fail | (col < F.lit(lo))
-        if hi is not None:
-            fail = fail | (col > F.lit(hi))
-        return [_finish(chain, col.isNotNull(), fail, _viol(rule, "incorrect", col, expected))]
+        branches = []
+        if not rule.get("allow_none", False):
+            branches.append((f"{c} IS NULL", _viol(rule, "missing", _lit(_NONE), expected)))
+        fails = [f"{c} {op} {_lit(b)}" for op, b in (("<", lo), (">", hi)) if b is not None]
+        branches.append(
+            (f"({c} IS NOT NULL AND {_any(fails)})", _viol(rule, "incorrect", c, expected))
+        )
+        return [_case(branches)]
 
     if t == "not_both":
         # mutual exclusion, e.g. "Cannot be both Scale and Resolution"
         # (config/config-layer.yaml:110)
         a, b = rule.get("columns")[:2]
-        observed = F.concat_ws(",", F.col(a).cast("string"), F.col(b).cast("string"))
-        expected = f"not both {a} and {b}"
-        fail = F.col(a).isNotNull() & F.col(b).isNotNull()
-        return [F.when(fail, _viol(rule, "incorrect", observed, expected))]
+        ia, ib = _ident(a), _ident(b)
+        observed = f"concat_ws(',', CAST({ia} AS STRING), CAST({ib} AS STRING))"
+        fail = f"({ia} IS NOT NULL AND {ib} IS NOT NULL)"
+        return [_case([(fail, _viol(rule, "incorrect", observed, f"not both {a} and {b}"))])]
 
     if t == "equal_fields":
         # hierarchy-group same-value constraint (config-layer.yaml:76-81)
         cols = rule.get("columns")
-        first = F.col(cols[0])
-        fail = None
-        for c in cols[1:]:
-            neq = ~first.eqNullSafe(F.col(c))
-            fail = neq if fail is None else (fail | neq)
-        observed = F.concat_ws(",", *[F.col(c).cast("string") for c in cols])
+        first = _ident(cols[0])
+        fail = _any([f"(NOT ({first} <=> {_ident(c)}))" for c in cols[1:]])
+        observed = "concat_ws(',', " + ", ".join(f"CAST({_ident(c)} AS STRING)" for c in cols) + ")"
         expected = "all equal: " + ",".join(cols)
-        return [F.when(fail, _viol(rule, "incorrect", observed, expected))]
+        return [_case([(fail, _viol(rule, "incorrect", observed, expected))])]
 
     if t == "conditional":
         # cross-field conditional (SCHMD.conditional, validate.py:188-224)
-        when_spec = rule.get("when")
-        cond = _compile_when(when_spec)
+        cond = _compile_when(rule.get("when"))
         inner_raw = dict(rule.get("then"))
         inner_raw.setdefault("id", rule.rule_id)
-        from anzlic_validator_spark.rules import _validate_spec
-
         inner = _validate_spec(rule.order, inner_raw)
         inner = Rule(rule_id=rule.rule_id, type=inner.type, order=rule.order, spec=inner.spec)
-        return [F.when(cond, struct_col) for struct_col in compile_row_rule(inner)]
+        return [_case([(cond, s)]) for s in compile_row_rule(inner)]
 
     if t == "any_of":
         # disjunctive composition — the reference's conditional requires
@@ -175,67 +212,69 @@ def compile_row_rule(rule: Rule) -> list[Column]:
         # the record passes if ANY alternative passes; a violation is
         # emitted only when EVERY alternative fails, reporting each
         # alternative's own observation.
-        from anzlic_validator_spark.rules import _validate_spec
-
-        sub_structs: list[Column] = []
+        subs: list[str] = []
         descs: list[str] = []
         for j, raw in enumerate(rule.get("rules")):
             inner = _validate_spec(rule.order, dict(raw))
             sub = Rule(
                 rule_id=f"{rule.rule_id}[{j}]", type=inner.type, order=rule.order, spec=inner.spec
             )
-            cols = compile_row_rule(sub)
+            exprs = compile_row_rule(sub)
             # a multi-struct alternative (empty_scan) fails if any of its
             # structs fires — coalesce gives "first non-null" semantics
-            sub_structs.append(cols[0] if len(cols) == 1 else F.coalesce(*cols))
+            subs.append(exprs[0] if len(exprs) == 1 else f"coalesce({', '.join(exprs)})")
             descs.append(str(raw.get("column") or inner.type))
-        all_fail = sub_structs[0].isNotNull()
-        for s in sub_structs[1:]:
-            all_fail = all_fail & s.isNotNull()
-        observed = F.concat_ws(
-            "; ",
-            *[F.concat(F.lit(d + "="), F.coalesce(s["observed"], F.lit("ok")))
-              for d, s in zip(descs, sub_structs)],
+        all_fail = "(" + " AND ".join(f"({s}) IS NOT NULL" for s in subs) + ")"
+        observed = (
+            "concat_ws('; ', "
+            + ", ".join(
+                f"concat({_lit(d + '=')}, coalesce(({s}).observed, 'ok'))"
+                for d, s in zip(descs, subs)
+            )
+            + ")"
         )
         expected = "any of [" + ",".join(descs) + "]"
-        return [F.when(all_fail, _viol(rule, "incorrect", observed, expected))]
+        return [_case([(all_fail, _viol(rule, "incorrect", observed, expected))])]
 
     if t == "empty_scan":
         # whole-record blank scan (emptyTagCheck, errorChecker.py:534-545):
         # one violation struct per scanned column
-        cols = rule.get("columns")
         out = []
-        for c in cols:
-            sub = Rule(rule_id=f"{rule.rule_id}.{c}", type="empty_scan", order=rule.order, spec={})
-            out.append(
-                F.when(
-                    F.col(c).isNotNull() & _is_blank(F.col(c)),
-                    _viol(sub, "empty", F.lit(_EMPTY), "non-empty"),
-                )
-            )
+        for col in rule.get("columns"):
+            c = _ident(col)
+            sub = Rule(f"{rule.rule_id}.{col}", "empty_scan", rule.order)
+            blank = f"({c} IS NOT NULL AND {_blank(c)})"
+            out.append(_case([(blank, _viol(sub, "empty", _lit(_EMPTY), "non-empty"))]))
         return out
 
     raise InvalidConfigException(f"not a row rule: {t}")
 
 
-def _compile_when(spec: dict) -> Column:
+def _compile_when(spec: dict) -> str:
     if "column" not in spec:
         raise InvalidConfigException(f"conditional 'when' needs a column: {spec}")
-    col = F.col(spec["column"])
     extras = set(spec) - {"column", "equals", "in", "not_null"}
     if extras:
         raise InvalidConfigException(f"conditional 'when': unknown keys {sorted(extras)}")
+    c = _ident(spec["column"])
     if "equals" in spec:
-        return col.cast("string") == F.lit(str(spec["equals"]))
+        return f"(CAST({c} AS STRING) = {_lit(str(spec['equals']))})"
     if "in" in spec:
-        return col.cast("string").isin([str(v) for v in spec["in"]])
+        return _in(f"CAST({c} AS STRING)", [str(v) for v in spec["in"]])
     if spec.get("not_null"):
-        return col.isNotNull()
+        return f"{c} IS NOT NULL"
     raise InvalidConfigException(f"conditional 'when' needs equals/in/not_null: {spec}")
 
 
-def compile_row_rules(rules: list[Rule]) -> list[Column]:
-    out: list[Column] = []
-    for r in rules:
-        out.extend(compile_row_rule(r))
-    return out
+def compile_row_rules(rules: list[Rule]) -> list[str]:
+    return [e for r in rules for e in compile_row_rule(r)]
+
+
+def explode_violations(df: DataFrame, key_col: str, structs: list[str]) -> DataFrame:
+    """Violation rows (key, rule_id, observed, expected, rule_order) of the
+    nullable violation-struct expressions ``structs`` over ``df``: one
+    array → filter → explode projection, parsed by the JVM in one call."""
+    arr = f"filter(array({', '.join(structs)}), v -> v IS NOT NULL)"
+    return df.selectExpr(
+        f"CAST({_ident(key_col)} AS STRING) AS key", f"explode({arr}) AS __v"
+    ).selectExpr("key", "__v.rule_id", "__v.observed", "__v.expected", "__v.rule_order")

@@ -5,15 +5,19 @@ and scripts/validate.py:419-458 process loop): rule-catalog pass → schema/
 decode pass → conditional pass → verdict per record, except everything is ONE
 declarative Spark plan:
 
-    row rules    -> a single projection: array(rule_structs) → filter nulls
-                    → explode  (whole-stage codegen, zero shuffle)
-    dataset rules-> uniqueness (salted 2-phase agg), referential (joins),
-                    all_of (grouped collect_set), drift (grid aggregate),
-                    audio_decode (Arrow pandas UDF projection)
+    row rules    -> one projection built from SQL text (compile.py):
+                    array(rule structs) → filter nulls → explode
+                    (whole-stage codegen, zero shuffle); broadcast
+                    referential joins and the Arrow decode UDF ride the
+                    same scan
+    dataset rules-> uniqueness (one map-side-combined count), referential
+                    (one pruned join per authority and join key), all_of
+                    (grouped collect_set), drift (grid aggregate)
     violations   = UNION ALL of the above
-    verdicts     = keys LEFT JOIN min-rule-order violation   (the reference is
-                   fail-fast with a fixed dispatch order, errorChecker.py:
-                   573-654 — we evaluate everything and rank afterwards)
+    verdicts     = records UNION violations → ONE groupBy(key) taking the
+                   min (rule_order, rule_id) (the reference is fail-fast
+                   with a fixed dispatch order, errorChecker.py:573-654 — we
+                   evaluate everything and rank afterwards)
 
 Violations never fail the job (the reference catches per-record exceptions
 and keeps sweeping, scripts/validate.py:451-458).
@@ -23,10 +27,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from anzlic_validator_spark.compile import compile_row_rules
+from anzlic_validator_spark.compile import _ident, _lit, compile_row_rules, explode_violations
 from anzlic_validator_spark.errors import InvalidConfigException
 from anzlic_validator_spark.rules import Rule, RuleCatalog
 from anzlic_validator_spark.schema import VIOLATION_FIELDS
@@ -41,12 +45,13 @@ _INTERNAL_SCHEMA = "key string, rule_id string, observed string, expected string
 RESERVED_KEY_PREFIX = "__"
 
 
-def is_record_key(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
+def is_record_key(col: str) -> str:
+    """SQL condition: column ``col`` holds a record key, not a reserved one."""
+    c = _ident(col)
     # NULL keys are record keys: startswith(NULL) yields NULL, which where()
     # would silently drop — a record with a NULL key column must still have
     # its violations surfaced, not vanish from the output
-    return c.isNull() | ~c.startswith(RESERVED_KEY_PREFIX)
+    return f"({c} IS NULL OR (NOT startswith({c}, {_lit(RESERVED_KEY_PREFIX)})))"
 
 
 def _empty_violations(spark: SparkSession) -> DataFrame:
@@ -81,32 +86,21 @@ def single_scan_violations(
     read exactly once per job no matter how many rules the catalog holds.
     """
     from anzlic_validator_spark.functions.audio import augment_audio
-    from anzlic_validator_spark.operators.referential import (
-        augment_referential,
-        augment_referential_mapped,
-    )
+    from anzlic_validator_spark.operators.referential import augment_referential
 
     structs = compile_row_rules(catalog.row_rules)
     aug = df
     for rule in catalog.dataset_rules:
         if not _fuse_in_scan(rule):
             continue
-        if rule.type == "referential":
-            aug, s = augment_referential(aug, rule, key_col, refs)
-            structs.append(s)
-        elif rule.type == "referential_mapped":
-            aug, s = augment_referential_mapped(aug, rule, key_col, refs)
-            structs.append(s)
-        elif rule.type == "audio_decode":
+        if rule.type == "audio_decode":
             aug, ss = augment_audio(aug, rule, key_col)
-            structs.extend(ss)
+        else:
+            aug, ss = augment_referential(aug, rule, key_col, refs)
+        structs.extend(ss)
     if not structs:
         return _empty_violations(df.sparkSession)
-    arr = F.filter(F.array(*structs), lambda v: v.isNotNull())
-    return (
-        aug.select(F.col(key_col).cast("string").alias("key"), F.explode(arr).alias("__v"))
-        .select("key", "__v.rule_id", "__v.observed", "__v.expected", "__v.rule_order")
-    )
+    return explode_violations(aug, key_col, structs)
 
 
 def dataset_rule_violations(
@@ -154,84 +148,35 @@ class ValidationResult:
         Reserved-key violations ('__table__', '__group__|...') are excluded
         from per-record verdicts but present in .violations.
 
-        Shape (r06, guide §2.4): records (as NULL markers) and violation
-        rows UNION into ONE groupBy on the key — min() skips the NULL
-        markers and count(col) counts only violation rows, so a single
-        map-side-combined exchange replaces the former
-        distinct + groupBy + null-safe-join (3 exchanges + a join). NULL
-        keys are one group, matching the old eqNullSafe pairing.
+        Shape: records (as NULL markers) and violation rows UNION into ONE
+        groupBy on the key — min() skips the NULL markers and count(col)
+        counts only violation rows, so a single map-side-combined exchange
+        yields every key's verdict with no distinct and no join. NULL keys
+        are one group.
 
-        Planner note: min over a struct (or string) marker only plans as a
+        Planner note: min over a struct marker only plans as a
         SortAggregate — non-primitive aggregation buffers are not
-        hash-aggregatable — but the single sorted aggregate still beat the
-        old three-exchange shape in A/B (3.89 → 2.64 s warm on
-        lineitem_verdicts); a fully hash-aggregatable encoding would need
-        the rule_id tie-break collapsed into a primitive, which no faithful
+        hash-aggregatable — and a hash-aggregatable encoding would need the
+        rule_id tie-break collapsed into a primitive, which no faithful
         encoding provides.
         """
-        marker_t = "struct<rule_order:int,rule_id:string>"
-        records = self.df.select(
-            F.col(self.key_col).cast("string").alias("key"),
-            F.lit(None).cast(marker_t).alias("__v"),
+        records = self.df.selectExpr(
+            f"CAST({_ident(self.key_col)} AS STRING) AS key",
+            "CAST(NULL AS STRUCT<rule_order: INT, rule_id: STRING>) AS __v",
         )
-        viol = self.violations_ranked.where(is_record_key("key")).select(
-            "key", F.struct("rule_order", "rule_id").alias("__v")
+        viol = self.violations_ranked.where(is_record_key("key")).selectExpr(
+            "key", "struct(rule_order, rule_id) AS __v"
         )
         return (
             records.unionByName(viol)
             .groupBy("key")
-            .agg(
-                F.min("__v").alias("__first"),
-                F.count("__v").alias("n_violations"),
-            )
-            .select(
+            .agg(F.expr("min(__v) AS __first"), F.expr("count(__v) AS n_violations"))
+            .selectExpr(
                 "key",
-                F.col("__first").isNull().alias("passed"),
-                F.col("__first.rule_id").alias("first_rule_id"),
+                "__first IS NULL AS passed",
+                "__first.rule_id AS first_rule_id",
                 "n_violations",
             )
-        )
-
-    def partition_summary(self, n_buckets: int = 16) -> DataFrame:
-        """Per-partition pass/fail aggregates (north_rule).
-
-        'Partition' is the deterministic hash bucket of the key —
-        independent of physical task layout, so resumed runs agree.
-
-        Computed from two independent aggregates joined at bucket
-        granularity (≤ n_buckets rows) instead of re-deriving the full
-        per-key verdict join — the key set aggregates map-side in one pass
-        and never shuffles row-level data.
-        """
-        key_bucket = F.pmod(F.xxhash64(F.col("key")), F.lit(n_buckets)).alias("bucket")
-        # count_distinct skips NULLs, but NULL keys ARE record keys (see
-        # is_record_key): coalesce to a sentinel so a NULL-keyed failing
-        # record counts in rows/failed_rows instead of yielding the
-        # contradiction rows=0, passed=true, violations>0
-        counted_key = F.coalesce(F.col("key"), F.lit("\x00<null-key>"))
-        rows_per_bucket = (
-            self.df.select(F.col(self.key_col).cast("string").alias("key"))
-            .groupBy(key_bucket)
-            .agg(F.count_distinct(counted_key).alias("rows"))
-        )
-        viol_per_bucket = (
-            self.violations_ranked.where(is_record_key("key"))
-            .groupBy(key_bucket)
-            .agg(
-                F.count_distinct(counted_key).alias("failed_rows"),
-                F.count(F.lit(1)).alias("violations"),
-            )
-        )
-        return (
-            rows_per_bucket.join(viol_per_bucket, on="bucket", how="left")
-            .select(
-                "bucket",
-                "rows",
-                F.coalesce("failed_rows", F.lit(0)).alias("failed_rows"),
-                F.coalesce("violations", F.lit(0)).alias("violations"),
-                (F.coalesce("failed_rows", F.lit(0)) == 0).alias("passed"),
-            )
-            .orderBy("bucket")
         )
 
 
@@ -253,8 +198,7 @@ def validate(
 
     parts = [single_scan_violations(df, catalog, key_col, refs)]
     # non-broadcast referential rules sharing (authority, join key, ref key)
-    # are evaluated through ONE pruned scan + ONE authority join (r06, guide
-    # §2.4) instead of one join per rule
+    # are evaluated through ONE pruned scan + ONE authority join
     ref_groups: dict[tuple, list[Rule]] = {}
     for rule in catalog.dataset_rules:
         if _fuse_in_scan(rule):

@@ -32,10 +32,11 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from anzlic_validator_spark.compile import _case, _ident, _lit, _viol
 from anzlic_validator_spark.rules import Rule
 
 from anzlic_validator_spark.functions.flac import FlacError, decode_flac, encode_flac
@@ -232,8 +233,8 @@ def make_decode_check_udf(ref_seed: int | None):
         srs: list[int | None] = [None] * n_rows
         counts: list[int | None] = [None] * n_rows
         snrs: list[float | None] = [None] * n_rows
-        # zip over the series (values iteration) — per-element .iloc paid a
-        # pandas positional-indexing call 4x per row (r06 cleanup)
+        # zip over the series (values iteration): per-element .iloc would
+        # pay a pandas positional-indexing call 4x per row
         for j, (bb, cc, ss, cid) in enumerate(zip(b, codec, sr_hz, clip_id)):
             pcm, sr_emb, err = decode(bb, cc, registry)
             errs[j], srs[j] = err, sr_emb
@@ -255,12 +256,12 @@ def make_decode_check_udf(ref_seed: int | None):
 
 # ------------------------------------------------------------- violations
 
-def augment_audio(df: DataFrame, rule: Rule, key_col: str) -> tuple[DataFrame, list[Column]]:
+def augment_audio(df: DataFrame, rule: Rule, key_col: str) -> tuple[DataFrame, list[str]]:
     """Attach the decode-check struct column and return nullable violation
-    structs, so the audio pass rides the SAME single scan as every other
-    row rule — ``bytes`` is read exactly once per job (the 100 TB
-    requirement; a second pass over a petabyte-scale binary column is the
-    difference between one day and two).
+    struct expressions (SQL text), so the audio pass rides the SAME single
+    scan as every other row rule — ``bytes`` is read exactly once per job
+    (the 100 TB requirement; a second pass over a petabyte-scale binary
+    column is the difference between one day and two).
 
     Classes (each rides the same Arrow batch — one UDF invocation per batch):
       <id>.decode  bytes not decodable under codec
@@ -278,43 +279,36 @@ def augment_audio(df: DataFrame, rule: Rule, key_col: str) -> tuple[DataFrame, l
     udf = make_decode_check_udf(int(ref_seed) if ref_seed is not None else None)
 
     cname = f"__audio_{rule.order}"
-    aug = df.withColumn(
-        cname, udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col), F.col(key_col))
-    )
-    c = F.col(cname)
-    eff_sr = F.coalesce(c["sr_stream"], F.col(sr_col))
-    dur_dec = c["n_samples"] * 1000.0 / eff_sr
-    rid = rule.rule_id
+    aug = df.withColumn(cname, udf(bytes_col, codec_col, sr_col, key_col))
+    c, sr, dur = _ident(cname), _ident(sr_col), _ident(dur_col)
+    dur_dec = f"(({c}.n_samples * 1000.0D) / coalesce({c}.sr_stream, {sr}))"
 
-    def v(cls: str, observed: Column, expected: str) -> Column:
-        return F.struct(
-            F.lit(f"{rid}.{cls}").alias("rule_id"),
-            observed.cast("string").alias("observed"),
-            F.lit(expected).alias("expected"),
-            F.lit(rule.order).cast("int").alias("rule_order"),
-        )
+    def check(cond: str, cls: str, observed: str, expected: str) -> str:
+        return _case([(cond, _viol(rule, cls, observed, expected))])
 
     checks = [
-        F.when(
-            c["err"].isNotNull(),
-            v("decode", c["err"], "decodable per codec column"),
+        check(f"{c}.err IS NOT NULL", "decode", f"{c}.err", "decodable per codec column"),
+        check(
+            f"({c}.sr_stream IS NOT NULL AND {c}.sr_stream != {sr})",
+            "sr",
+            f"{c}.sr_stream",
+            "sr_hz column matches stream",
         ),
-        F.when(
-            c["sr_stream"].isNotNull() & (c["sr_stream"] != F.col(sr_col)),
-            v("sr", c["sr_stream"], "sr_hz column matches stream"),
-        ),
-        F.when(
-            c["n_samples"].isNotNull()
-            & F.col(dur_col).isNotNull()
-            & (F.abs(dur_dec - F.col(dur_col)) > F.lit(tol)),
-            v("dur", F.round(dur_dec, 1), f"dur_ms column ±{tol}ms of decoded"),
+        check(
+            f"({c}.n_samples IS NOT NULL AND {dur} IS NOT NULL"
+            f" AND abs({dur_dec} - {dur}) > {_lit(tol)})",
+            "dur",
+            f"round({dur_dec}, 1)",
+            f"dur_ms column ±{tol}ms of decoded",
         ),
     ]
     if ref_seed is not None and snr_min is not None:
         checks.append(
-            F.when(
-                c["snr_db"].isNotNull() & (c["snr_db"] < F.lit(float(snr_min))),
-                v("snr", F.round(c["snr_db"], 2), f"SNR>={snr_min}dB vs reference"),
+            check(
+                f"({c}.snr_db IS NOT NULL AND {c}.snr_db < {_lit(float(snr_min))})",
+                "snr",
+                f"round({c}.snr_db, 2)",
+                f"SNR>={snr_min}dB vs reference",
             )
         )
     return aug, checks

@@ -19,77 +19,85 @@ otherwise; AQE skew-join splits hot key ranges at runtime.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anzlic_validator_spark.compile import _case, _ident, _lit, _struct, explode_violations
 from anzlic_validator_spark.errors import InvalidConfigException
 from anzlic_validator_spark.rules import Rule
 
 
-def _viol(rule: Rule, cls: Column, observed: Column, expected: Column) -> Column:
-    return F.struct(
-        cls.alias("rule_id"),
-        observed.cast("string").alias("observed"),
-        expected.cast("string").alias("expected"),
-        F.lit(rule.order).cast("int").alias("rule_order"),
-    )
+def _ref_col(rule: Rule) -> str:
+    """The joined authority column a referential rule compares against."""
+    return f"__ref_{rule.order}"
 
 
-def _ref_struct(rule: Rule, ref_col_name: str) -> Column:
-    """Nullable violation struct for a plain referential rule, given the
-    joined authority column — shared by the fused single-scan path and the
-    grouped pruned path (one authority join serving several rules)."""
+def _ref_struct(rule: Rule) -> str:
+    """Nullable violation struct (SQL text) for a plain referential rule
+    over its joined authority column — shared by the fused single-scan path
+    and the grouped pruned path (one authority join serving several
+    rules)."""
     col = str(rule.get("column"))
-    v = F.col(col).cast("string")
-    r = F.col(ref_col_name)
-    missing = r.isNull()
-    mismatch = r.isNotNull() & ~v.eqNullSafe(r)
-    cls = (
-        F.when(missing, F.lit(f"{rule.rule_id}.missing_ref"))
-        .when(mismatch, F.lit(f"{rule.rule_id}.incorrect"))
-    )
-    cond = mismatch if rule.get("on_missing", "violation") == "ignore" else (missing | mismatch)
-    return F.when(
-        cond,
-        _viol(
-            rule,
-            cls,
-            F.coalesce(v, F.lit("None")),
-            F.coalesce(r, F.lit(f"reference row for {col}")),
-        ),
-    )
+    rid = rule.rule_id
+    v = f"CAST({_ident(col)} AS STRING)"
+    r = _ident(_ref_col(rule))
+    missing = f"{r} IS NULL"
+    mismatch = f"({r} IS NOT NULL AND NOT ({v} <=> {r}))"
+    cls = _case([(missing, _lit(f"{rid}.missing_ref")), (mismatch, _lit(f"{rid}.incorrect"))])
+    cond = f"({missing} OR {mismatch})"
+    if rule.get("on_missing", "violation") == "ignore":
+        cond = mismatch
+    observed = f"coalesce({v}, 'None')"
+    expected = f"coalesce({r}, {_lit(f'reference row for {col}')})"
+    return _case([(cond, _struct(cls, observed, expected, rule.order))])
 
 
-def _mapped_ref_struct(rule: Rule, ref_col_name: str) -> Column:
-    """Mapped-variant violation struct given the joined authority column
-    (see augment_referential_mapped for the mapping semantics)."""
+def _mapped_ref_struct(rule: Rule) -> str:
+    """Mapped-variant violation struct (SQL text) over the joined authority
+    column. Mirrors checkSpatialRepresentation's kind→code dict
+    ({'raster':'grid','grid':'grid','table':'textTable','vector':'vector'},
+    errorChecker.py:509-527): the authority value passes through the literal
+    mapping before comparison, and an authority value absent from the
+    mapping is itself a violation (unknown kind → incorrect, :528-530)
+    unless on_unmapped == 'ignore'."""
     mapping = rule.get("mapping") or {}
     if not isinstance(mapping, dict) or not mapping:
         raise InvalidConfigException(f"rule {rule.rule_id}: 'mapping' must be a non-empty dict")
     col = str(rule.get("column"))
-    map_expr = F.create_map(*[F.lit(str(x)) for kv in mapping.items() for x in kv])
-    v = F.col(col).cast("string")
-    r = F.col(ref_col_name)
-    mapped = map_expr[r]
-    missing = r.isNull()
-    unmapped = r.isNotNull() & mapped.isNull()
-    mismatch = mapped.isNotNull() & ~v.eqNullSafe(mapped)
-    cls = (
-        F.when(missing, F.lit(f"{rule.rule_id}.missing_ref"))
-        .when(unmapped, F.lit(f"{rule.rule_id}.unmapped"))
-        .when(mismatch, F.lit(f"{rule.rule_id}.incorrect"))
+    rid = rule.rule_id
+    v = f"CAST({_ident(col)} AS STRING)"
+    r = _ident(_ref_col(rule))
+    mapped = "map(" + ", ".join(_lit(str(x)) for kv in mapping.items() for x in kv) + f")[{r}]"
+    missing = f"{r} IS NULL"
+    unmapped = f"({r} IS NOT NULL AND {mapped} IS NULL)"
+    mismatch = f"({mapped} IS NOT NULL AND NOT ({v} <=> {mapped}))"
+    cls = _case(
+        [
+            (missing, _lit(f"{rid}.missing_ref")),
+            (unmapped, _lit(f"{rid}.unmapped")),
+            (mismatch, _lit(f"{rid}.incorrect")),
+        ]
     )
-    cond = mismatch
+    conds = [mismatch]
     if rule.get("on_missing", "violation") != "ignore":
-        cond = cond | missing
+        conds.append(missing)
     if rule.get("on_unmapped", "violation") != "ignore":
-        cond = cond | unmapped
-    expected = (
-        F.when(missing, F.lit(f"reference row for {col}"))
-        .when(unmapped, F.lit("mapped value for " + ",".join(sorted(mapping))))
-        .otherwise(mapped)
+        conds.append(unmapped)
+    expected = _case(
+        [
+            (missing, _lit(f"reference row for {col}")),
+            (unmapped, _lit("mapped value for " + ",".join(sorted(mapping)))),
+        ],
+        otherwise=mapped,
     )
-    return F.when(cond, _viol(rule, cls, F.coalesce(v, F.lit("None")), expected))
+    observed = f"coalesce({v}, 'None')"
+    return _case([("(" + " OR ".join(conds) + ")", _struct(cls, observed, expected, rule.order))])
+
+
+def _violation_struct(rule: Rule) -> str:
+    if rule.type == "referential_mapped":
+        return _mapped_ref_struct(rule)
+    return _ref_struct(rule)
 
 
 def rule_join_key(rule: Rule, key_col: str) -> str:
@@ -97,54 +105,41 @@ def rule_join_key(rule: Rule, key_col: str) -> str:
     return str(rule.get("join_on", rule.get("key", key_col)))
 
 
+def _authority(rules: list[Rule], join_on: str, refs: dict[str, DataFrame]) -> DataFrame:
+    """The authority pruned to its key (renamed ``join_on``) and one
+    string column ``_ref_col(rule)`` per rule; ``rules`` share the table and
+    the key."""
+    ref = _lookup_ref(rules[0], refs)
+    right = ref.selectExpr(
+        f"{_ident(rules[0].get('ref_key'))} AS {_ident(join_on)}",
+        *[
+            f"CAST({_ident(r.get('ref_column'))} AS STRING) AS {_ident(_ref_col(r))}"
+            for r in rules
+        ],
+    )
+    if any(r.get("broadcast", False) for r in rules):
+        right = F.broadcast(right)
+    return right
+
+
 def augment_referential(
     df: DataFrame, rule: Rule, key_col: str, refs: dict[str, DataFrame]
-) -> tuple[DataFrame, Column]:
+) -> tuple[DataFrame, list[str]]:
     """LEFT-join the authority onto the row stream and return the augmented
-    frame plus a nullable violation-struct column — so referential checks
-    ride the SAME single scan as every other row rule (one pass over the
-    table regardless of rule count; the 100 TB requirement).
+    frame plus the rule's nullable violation-struct expression — so
+    referential checks (plain and mapped) ride the SAME single scan as every
+    other row rule (one pass over the table regardless of rule count; the
+    100 TB requirement).
 
     Authority keys must be unique (a non-unique authority would multiply
     rows) — same contract as the reference's one-CRS-per-layer API.
     """
-    ref = _lookup_ref(rule, refs)
     # join_on lets FK-style lookups join on the FK column while reporting
     # violations against the record key (default: join on the key itself,
     # the clip_id↔clip_id shape of the transcript index)
     join_on = rule_join_key(rule, key_col)
-    ref_col_name = f"__ref_{rule.order}"
-    right = ref.select(
-        F.col(str(rule.get("ref_key"))).alias(join_on),
-        F.col(str(rule.get("ref_column"))).cast("string").alias(ref_col_name),
-    )
-    if rule.get("broadcast", False):
-        right = F.broadcast(right)
-    joined = df.join(right, on=join_on, how="left")
-    return joined, _ref_struct(rule, ref_col_name)
-
-
-def augment_referential_mapped(
-    df: DataFrame, rule: Rule, key_col: str, refs: dict[str, DataFrame]
-) -> tuple[DataFrame, Column]:
-    """Mapped variant: the authority value passes through a literal mapping
-    before comparison. Mirrors checkSpatialRepresentation's kind→code dict
-    ({'raster':'grid','grid':'grid','table':'textTable','vector':'vector'},
-    errorChecker.py:509-527); an authority value absent from the mapping is
-    itself a violation (unknown kind → incorrect, :528-530) unless
-    on_unmapped == 'ignore'.
-    """
-    ref = _lookup_ref(rule, refs)
-    join_on = rule_join_key(rule, key_col)
-    ref_col_name = f"__ref_{rule.order}"
-    right = ref.select(
-        F.col(str(rule.get("ref_key"))).alias(join_on),
-        F.col(str(rule.get("ref_column"))).cast("string").alias(ref_col_name),
-    )
-    if rule.get("broadcast", False):
-        right = F.broadcast(right)
-    joined = df.join(right, on=join_on, how="left")
-    return joined, _mapped_ref_struct(rule, ref_col_name)
+    joined = df.join(_authority([rule], join_on, refs), on=join_on, how="left")
+    return joined, [_violation_struct(rule)]
 
 
 def referential_violations(
@@ -170,43 +165,13 @@ def referential_violations_grouped(
     unique (same contract as the fused path).
 
     ``rules`` must share the same authority table and join key (the engine
-    groups them): ONE join serves every rule in the group — r06, guide
-    §2.4; previously each referential rule ran its own pruned scan and its
-    own authority join, so a catalog with N rules against one index paid
-    the join N times."""
-    ref = _lookup_ref(rules[0], refs)
+    groups them): ONE join serves every rule in the group, so a catalog with
+    N rules against one index pays the join once."""
     join_on = rule_join_key(rules[0], key_col)
-    cols = list(
-        dict.fromkeys(
-            [key_col, join_on] + [str(r.get("column")) for r in rules]
-        )
-    )
-    pruned = df.select(*[F.col(c) for c in cols])
-    right = ref.select(
-        F.col(str(rules[0].get("ref_key"))).alias(join_on),
-        *[
-            F.col(str(r.get("ref_column"))).cast("string").alias(f"__ref_{r.order}")
-            for r in rules
-        ],
-    )
-    if any(r.get("broadcast", False) for r in rules):
-        right = F.broadcast(right)
-    joined = pruned.join(right, on=join_on, how="left")
-    structs = [
-        (
-            _mapped_ref_struct(r, f"__ref_{r.order}")
-            if r.type == "referential_mapped"
-            else _ref_struct(r, f"__ref_{r.order}")
-        )
-        for r in rules
-    ]
-    arr = F.filter(F.array(*structs), lambda v: v.isNotNull())
-    return (
-        joined.select(
-            F.col(key_col).cast("string").alias("key"), F.explode(arr).alias("__v")
-        )
-        .select("key", "__v.rule_id", "__v.observed", "__v.expected", "__v.rule_order")
-    )
+    cols = list(dict.fromkeys([key_col, join_on] + [str(r.get("column")) for r in rules]))
+    pruned = df.selectExpr(*[_ident(c) for c in cols])
+    joined = pruned.join(_authority(rules, join_on, refs), on=join_on, how="left")
+    return explode_violations(joined, key_col, [_violation_struct(r) for r in rules])
 
 
 def _lookup_ref(rule: Rule, refs: dict[str, DataFrame]) -> DataFrame:

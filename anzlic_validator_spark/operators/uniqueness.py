@@ -6,14 +6,12 @@ checkAddress :411-432) and the duplicate-field sweep
 (testing-dublin-core.py:72-83).
 
 Scale design: ONE map-side-combined hash aggregate. count() is algebraic, so
-Spark's partial aggregation already does the "salting" for free — each map
+Spark's partial aggregation does the skew treatment for free — each map
 partition collapses to ONE row per key BEFORE the exchange, so a hot key
 holding a large share of a 10^12-row table ships O(#map partitions) partial
-rows, never O(occurrences). The r01–r05 explicit salt phase
-(groupBy(key, salt) → groupBy(key)) duplicated that guarantee at the cost of
-a SECOND full exchange of (key, salt) rows — removed in r06 (optimization
-guide §2.3/§2.4: partial aggregation IS the skew treatment for algebraic
-aggregates; salting is for joins and non-combinable aggregates). AQE
+rows, never O(occurrences). An explicit salt phase (groupBy(key, salt) →
+groupBy(key)) would buy the same guarantee at the cost of a second full
+exchange; salting is for joins and non-combinable aggregates. AQE
 (`spark.sql.adaptive.enabled`) still splits any residual skewed shuffle
 partition at runtime. The dup-key set is then joined back (Catalyst/AQE
 picks broadcast when the dup set is small — the common case) to emit one
@@ -26,27 +24,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anzlic_validator_spark.compile import _ident, _lit
 from anzlic_validator_spark.rules import Rule
 
-DEFAULT_SALTS = 32  # kept for API compatibility; see duplicate_keys
 
-
-def duplicate_keys(df: DataFrame, cols: list[str], n_salts: int = DEFAULT_SALTS) -> DataFrame:
+def duplicate_keys(df: DataFrame, cols: list[str]) -> DataFrame:
     """Keys occurring more than once, with their total count.
 
     Returns DataFrame[cols..., n: long] — only keys with n > 1.
-
-    ``n_salts`` is accepted for API compatibility but unused: the partial
-    (map-side) aggregation of count() already collapses hot keys to one row
-    per map partition before the shuffle, which is exactly what the former
-    explicit salt phase bought — minus its extra exchange (see module doc).
     """
-    return (
-        df.select(*cols)
-        .groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )
+    return df.select(*cols).groupBy(*cols).agg(F.expr("count(1) AS n")).where("n > 1")
 
 
 def unique_violations(df: DataFrame, rule: Rule, key_col: str) -> DataFrame:
@@ -59,10 +46,10 @@ def unique_violations(df: DataFrame, rule: Rule, key_col: str) -> DataFrame:
     cols = [str(c) for c in rule.get("columns")]
     dupes = duplicate_keys(df, cols)
     joined = df.select(key_col, *[c for c in cols if c != key_col]).join(dupes, on=cols, how="inner")
-    return joined.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.lit(f"{rule.rule_id}.incorrect").alias("rule_id"),
-        F.concat(F.lit("count="), F.col("n").cast("string")).alias("observed"),
-        F.lit("unique (" + ",".join(cols) + ")").alias("expected"),
-        F.lit(rule.order).cast("int").alias("rule_order"),
+    return joined.selectExpr(
+        f"CAST({_ident(key_col)} AS STRING) AS key",
+        f"{_lit(f'{rule.rule_id}.incorrect')} AS rule_id",
+        "concat('count=', CAST(n AS STRING)) AS observed",
+        f"{_lit('unique (' + ','.join(cols) + ')')} AS expected",
+        f"{int(rule.order)} AS rule_order",
     )

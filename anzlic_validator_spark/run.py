@@ -190,13 +190,14 @@ def run_validation(
         .partitionBy("bucket")
         .parquet(f"{output}/verdicts")
     )
-    # per-bucket metrics from the verdicts JUST WRITTEN (r06, guide §2.4):
-    # one verdict row per distinct record key with its bucket and violation
-    # count, so rows/failed_rows/violations fold out of a tiny parquet scan
-    # — the former partition_summary() re-scanned the input keys AND
-    # re-aggregated the persisted violations, then joined. Restricted to
-    # pending buckets: on a resume, completed buckets' verdicts survive on
-    # disk but were not validated by THIS run.
+    # per-bucket metrics from the verdicts JUST WRITTEN: one verdict row per
+    # distinct record key with its bucket and violation count, so
+    # rows/failed_rows/violations fold out of a tiny parquet scan instead of
+    # re-scanning the input keys and re-aggregating the violations. A NULL
+    # key is one record: xxhash64(NULL) is the seed 42, so it lands in
+    # bucket pmod(42, n_buckets) and counts there. Restricted to pending
+    # buckets: on a resume, completed buckets' verdicts survive on disk but
+    # were not validated by THIS run.
     metrics_rows = (
         read_verdicts(spark, output)
         .where(F.col("bucket").isin(pending))

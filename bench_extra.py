@@ -5,6 +5,9 @@ instrumentation the optimization round needs:
 
   --plans  [names...]   write .explain("formatted") for each query to
                         plans/r06/<name>_<tag>.txt (tag via --tag)
+  --normalize           with --plans: strip expression ids (#NNN),
+                        plan_id=NNN and lambda-variable names, so dumps
+                        of two builds of the same plan diff byte-for-byte
   --time   [names...]   time each query with the bench protocol
                         (count + clearCache), N repeats via --repeats
   --noop   [names...]   time with the noop sink instead of count()
@@ -18,6 +21,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -30,11 +34,26 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+_EXPR_ID = re.compile(r"#\d+")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+_LAMBDA_VAR = re.compile(r"\blambda \w+")
+
+
+def normalize_plan(txt: str) -> str:
+    """Drop the parts of an explain string that differ between two builds
+    of the same plan: expression ids, plan ids and lambda-variable names
+    (PySpark numbers its lambda variables, SQL text names them)."""
+    txt = _EXPR_ID.sub("#", txt)
+    txt = _PLAN_ID.sub("plan_id=", txt)
+    return _LAMBDA_VAR.sub("lambda v", txt)
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--plans", action="store_true")
     ap.add_argument("--time", action="store_true")
     ap.add_argument("--noop", action="store_true")
+    ap.add_argument("--normalize", action="store_true")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--repeats", type=int, default=1)
     ap.add_argument("names", nargs="*")
@@ -62,6 +81,8 @@ def main(argv=None) -> int:
                     "formatted"
                 )
             )
+            if args.normalize:
+                txt = normalize_plan(txt)
             with open(
                 os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w"
             ) as fh:

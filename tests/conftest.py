@@ -32,3 +32,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def run_buckets(spark, tmp_path):
+    """``run(df, catalog, key_col, n_buckets)``: one ``run_validation`` sweep
+    of ``df`` under the catalog dict, returning the per-bucket metrics it
+    records in its manifest ({bucket: {rows, failed_rows, violations,
+    passed, ...}})."""
+    import json
+    import uuid
+
+    from anzlic_validator_spark.run import run_validation
+
+    def run(df, catalog, key_col, n_buckets):
+        d = tmp_path / uuid.uuid4().hex
+        d.mkdir()
+        (d / "catalog.json").write_text(json.dumps(catalog))
+        run_validation(
+            spark, df, catalog_path=str(d / "catalog.json"), output=str(d / "out"),
+            key_col=key_col, n_buckets=n_buckets,
+        )
+        doc = json.loads((d / "out" / "manifest.json").read_text())
+        return {int(b): e for b, e in doc["buckets"].items()}
+
+    return run

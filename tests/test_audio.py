@@ -70,6 +70,30 @@ def result(spark, small_clips, catalog):
     return validate(small_clips, catalog, key_col="clip_id", refs={"transcript_index": idx})
 
 
+def test_validate_round_trip_budget(spark, catalog, monkeypatch):
+    """Building the default catalog's plan costs a bounded number of py4j
+    round trips: every rule is SQL text handed over in a few selectExpr
+    calls, not a graph of Column calls that each cross the socket."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    df = clips(spark, 40, seed=3, num_partitions=2)
+    refs = {"transcript_index": transcript_index(spark, 40, seed=3)}
+    send = ClientServerConnection.send_command
+    calls = []
+
+    def counting(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    gc.collect()  # no finalizer traffic from earlier tests in the count
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    validate(df, catalog, key_col="clip_id", refs=refs)
+    monkeypatch.undo()
+    assert len(calls) <= 400, len(calls)
+
+
 def test_clean_clips_pass(spark, catalog):
     df = clips(spark, 500, seed=42, clean=True, num_partitions=2)
     idx = transcript_index(spark, 500, seed=42, missing_every=10**9, mismatch_every=10**9)
@@ -140,10 +164,19 @@ def test_correct_rows_have_no_audio_violations(result):
 
 
 def test_verdicts_and_partition_summary(result):
+    from pyspark.sql import functions as F
+
+    from anzlic_validator_spark.run import bucket_col
+
     verd = result.verdicts
     n_keys = result.df.select("clip_id").distinct().count()
     assert verd.count() == n_keys
-    summ = result.partition_summary(n_buckets=8).collect()
+    # the per-bucket fold run_validation records in its manifest
+    summ = (
+        verd.groupBy(bucket_col("key", 8).alias("bucket"))
+        .agg(F.count(F.lit(1)).alias("rows"), F.min("passed").alias("passed"))
+        .collect()
+    )
     assert sum(r.rows for r in summ) == n_keys
     assert any(not r.passed for r in summ)
 

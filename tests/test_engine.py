@@ -315,6 +315,22 @@ def test_any_of_validation_errors(spark):
         ]}]}), key_col="k")
 
 
+def test_range_date_bounds(spark):
+    """A YAML date bound (``min: 2020-01-01`` loads as a datetime.date)
+    compiles to a DATE literal."""
+    import datetime
+
+    df = spark.createDataFrame(
+        [("a", datetime.date(2019, 12, 31)), ("b", datetime.date(2020, 1, 1))], "k string, d date"
+    )
+    cat = parse_catalog(
+        {"rules": [{"id": "d.range", "type": "range", "column": "d",
+                    "min": datetime.date(2020, 1, 1)}]}
+    )
+    v = _viol_map(validate(df, cat, key_col="k"))
+    assert v == {"a": [("d.range.incorrect", "2019-12-31", "in [2020-01-01,None]")]}
+
+
 def test_null_key_violations_surface(spark):
     """ADVICE r02 (low): a record with a NULL key column must keep its
     violations (startswith(NULL) is NULL → where() silently dropped them)
@@ -340,16 +356,18 @@ def test_null_key_violations_surface(spark):
     assert verd[None].first_rule_id == "name.exists.missing"
 
 
-def test_null_key_partition_summary_counts(spark):
-    """Review r03: count_distinct skips NULLs — a NULL-keyed failing record
-    must still count in rows/failed_rows (no passed=true with violations>0)."""
+def test_null_key_partition_summary_counts(spark, run_buckets):
+    """A NULL-keyed failing record is one record in run_validation's
+    per-bucket metrics: xxhash64(NULL) is the seed 42, so it lands in bucket
+    pmod(42, n) and counts in rows/failed_rows there (no passed=true with
+    violations>0, and no record lost to a NULL bucket)."""
     df = spark.createDataFrame(
         [(None, None, "z", 99, "goodbye", None)],
         "k string, name string, kind string, n long, note string, alt string",
     )
-    res = validate(df, parse_catalog(CATALOG), key_col="k")
-    rows = res.partition_summary(n_buckets=4).collect()
-    nonzero = [r for r in rows if r.violations > 0]
-    assert len(nonzero) == 1
-    r = nonzero[0]
-    assert r.rows == 1 and r.failed_rows == 1 and not r.passed
+    summ = run_buckets(df, CATALOG, key_col="k", n_buckets=4)
+    nonzero = {b: m for b, m in summ.items() if m["violations"] > 0}
+    assert list(nonzero) == [42 % 4]
+    m = nonzero[42 % 4]
+    assert m["rows"] == 1 and m["failed_rows"] == 1 and not m["passed"]
+    assert m["violations"] == 4

@@ -26,7 +26,7 @@ def test_duplicate_keys_salted(spark):
     # heavy skew: one key holds half the table
     data = [("hot",)] * 500 + [(f"k{i}",) for i in range(500)]
     df = spark.createDataFrame(data, "k string")
-    dupes = duplicate_keys(df, ["k"], n_salts=8).collect()
+    dupes = duplicate_keys(df, ["k"]).collect()
     assert len(dupes) == 1 and dupes[0].k == "hot" and dupes[0].n == 500
 
 
@@ -160,10 +160,11 @@ def test_profile_and_histogram(spark, sf_dir):
     assert 20.0 <= qp["columns"]["l_quantity"]["quantiles"][0] <= 30.0
 
 
-def test_partition_summary(spark):
+def test_partition_summary(spark, run_buckets):
+    """run_validation's per-bucket metrics count every record once."""
     df = spark.createDataFrame([Row(k=f"k{i}", v="x" if i % 3 else None) for i in range(30)])
-    cat = parse_catalog({"rules": [{"id": "v.exists", "type": "exists", "column": "v"}]})
-    summ = validate(df, cat, key_col="k").partition_summary(n_buckets=4).collect()
-    assert sum(r.rows for r in summ) == 30
-    assert sum(r.failed_rows for r in summ) == 10
-    assert all(r.bucket in range(4) for r in summ)
+    cat = {"rules": [{"id": "v.exists", "type": "exists", "column": "v"}]}
+    summ = run_buckets(df, cat, key_col="k", n_buckets=4)
+    assert sum(m["rows"] for m in summ.values()) == 30
+    assert sum(m["failed_rows"] for m in summ.values()) == 10
+    assert all(b in range(4) for b in summ)
