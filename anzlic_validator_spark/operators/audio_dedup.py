@@ -461,7 +461,9 @@ def incremental_audio_dedup(
     Scale shape: one Arrow decode pass over the new batch only; the store
     read is a payload-free (key, 32-hex content_fp) parquet scan; one join
     on content_fp (``incremental_candidates``, uncapped) with the small new
-    side broadcastable against a 10^12-row store."""
+    side broadcastable against a 10^12-row store. Consume the pairs before
+    the next committing call on the same store: its fold may delete the
+    runs they read."""
     new_fps, all_fps = incremental_fingerprints(
         new_clips,
         store_dir,
@@ -504,7 +506,8 @@ def incremental_audio_neardup(
     with more than ``max_bucket_size`` carriers among those the batch
     touches drop, with a logged census. The BER verify (``verify_pairs``
     pinned on the candidate side) reads the stored subfp sequences, so it
-    is decode-free."""
+    is decode-free. Consume the pairs before the next committing call on
+    the same store: its fold may delete the runs they read."""
     new_fps, all_fps = incremental_fingerprints(
         new_clips,
         store_dir,

@@ -22,8 +22,9 @@ no payload. An incremental pass:
 
 The layout is ``state_log``'s: ``meta.json`` pins the signature parameters
 (num_hashes, n_bands, shingle_k, or a store kind), ``run_NNNNN`` holds
-each committed batch, and ``fold_NNNNN/_FOLDED`` the runs ``compact_store``
-merged. Every open checks ``meta.json``: signatures computed under other
+each committed batch, and ``fold_NNNNN/_FOLDED`` the runs a fold merged:
+a committing call folds on ``StateLog.fold_due``, ``compact_store`` on
+demand. Every open checks ``meta.json``: signatures computed under other
 parameters would silently break agreement estimates, so a mismatch raises.
 """
 
@@ -76,37 +77,30 @@ def store_live_inputs(
     ``before_run_id`` restricts to rows from runs strictly older (the
     retry semantics of an epoch-keyed caller) and raises if that horizon
     reaches into a fold: a retry of a folded run cannot be served exactly,
-    as its rows are merged. Compact only quiescent stores, or pass
-    ``up_to`` below the oldest retryable run to ``compact_store``."""
+    as its rows are merged."""
     store = StateLog(store_dir)
     if before_run_id is not None:
         store.check_horizon(before_run_id)
     return store.live_inputs(before_run_id), store.next_id()
 
 
-def compact_store(spark: SparkSession, store_dir: str, up_to: int | None = None) -> str | None:
-    """Fold the store's live runs into one dir and delete what the fold
-    supersedes: a long-lived store otherwise accumulates one parquet dir
-    per batch, and every incremental run pays an ever-growing scan.
-    ``state_log`` makes the fold crash-safe.
+def _fold(spark: SparkSession, store: StateLog, covers: int) -> str:
+    """Fold every live unit up to ``covers`` into ``fold_<covers>``;
+    full-row duplicates across units collapse."""
+    merged = spark.read.parquet(*store.live_inputs(before=covers + 1)).dropDuplicates()
+    return store.fold(covers, lambda tmp: merged.write.mode("overwrite").parquet(tmp))
 
-    ``up_to``: fold only runs with id <= up_to (an epoch-keyed caller
-    passes current_epoch - 1 so its own epoch stays retryable). Full-row
-    duplicates across runs collapse in the fold. Returns the fold path, or
-    None when no run is left to fold; a single live run does fold."""
+
+def compact_store(spark: SparkSession, store_dir: str, up_to: int | None = None) -> str | None:
+    """Fold the store's live runs into one dir now, below the trigger
+    committing calls fold on, and delete what the fold supersedes.
+
+    ``up_to``: fold only runs with id <= up_to, so later runs stay
+    individually retryable. Returns the fold path, or None when no run is
+    left to fold; a single live run does fold."""
     store = StateLog(store_dir, spark)
-    covers = store.newest_fold()
-    runs = [
-        i for i in store.runs()
-        if (covers is None or i > covers) and (up_to is None or i <= up_to)
-    ]
-    final = None
-    if runs:
-        inputs = store.live_inputs(before=runs[-1] + 1)
-        final = store.fold(
-            runs[-1],
-            lambda tmp: spark.read.parquet(*inputs).dropDuplicates().write.mode("overwrite").parquet(tmp),
-        )
+    _, runs = store.live_units(None if up_to is None else up_to + 1)
+    final = _fold(spark, store, runs[-1]) if runs else None
     store.prune()  # also finishes the prune of a fold published before a crash
     return final
 
@@ -120,9 +114,9 @@ def incremental_fingerprints(
     run_id: int | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared scaffold of every incremental-store operator (text minhash,
-    audio content, audio perceptual, embedding): meta guard → fold-aware
-    live inputs → fingerprint only the new batch → commit (or persist for
-    a what-if probe) → union with the stored corpus. Returns
+    audio content, audio perceptual, embedding): meta guard → fold → live
+    inputs → fingerprint only the new batch → commit (or persist for a
+    what-if probe) → union with the stored corpus. Returns
     ``(new_fps, all_fps)``; ``fingerprint_fn`` maps the new batch to its
     store-row DataFrame. ``all_fps is new_fps`` when the store holds no
     rows yet.
@@ -131,27 +125,35 @@ def incremental_fingerprints(
     run and pairs only against runs before it, so a retried batch
     reproduces its first attempt.
 
-    With ``commit=False`` the new batch's fingerprints are persisted
-    (MEMORY_AND_DISK), because bucketing and both verify-join sides consume
-    them; a commit's parquet write is that materialization instead. The
-    persisted handle is internal, so a long-lived session that runs many
-    what-if probes should ``spark.catalog.clearCache()`` after consuming
-    each result."""
+    A committing call first folds the units before its run when
+    ``StateLog.fold_due`` says so, then prunes below its run: its plan
+    reads the fold, and the run stays retryable. A later committing call
+    may thus delete what this call's plan reads: consume each result before
+    the next committing call on the same store.
+
+    With ``commit=False`` nothing is folded or written, and the new
+    batch's fingerprints are persisted (MEMORY_AND_DISK), because
+    bucketing and both verify-join sides consume them; a commit's parquet
+    write is that materialization instead. The persisted handle is
+    internal, so a long-lived session that runs many what-if probes should
+    ``spark.catalog.clearCache()`` after consuming each result."""
     spark = new_df.sparkSession
     store = StateLog(store_dir, spark)
     _check_meta(store, meta, create=commit)
     if run_id is not None:
         store.check_horizon(run_id)
-    prior = store.live_inputs(run_id)
+    unit = store.next_id() if run_id is None else run_id
+    if commit:
+        if store.fold_due(unit):
+            _fold(spark, store, unit - 1)
+        store.prune(unit)
+    prior = store.live_inputs(unit)
     new_fps = fingerprint_fn(new_df)
     if commit:
         # the commit write doubles as the batch's single fingerprint
         # materialization; the pair plan reads it back from parquet
         fps = new_fps
-        path = store.commit(
-            store.next_id() if run_id is None else run_id,
-            lambda tmp: fps.write.mode("overwrite").parquet(tmp),
-        )
+        path = store.commit(unit, lambda tmp: fps.write.mode("overwrite").parquet(tmp))
         new_fps = spark.read.parquet(path)
     else:
         new_fps = new_fps.persist(StorageLevel.MEMORY_AND_DISK)
@@ -266,7 +268,9 @@ def incremental_minhash_pairs(
     batch and computing its pairs are one step, and the commit write
     doubles as the signatures' single materialization. With
     ``commit=False`` (a what-if probe) nothing is written and the new
-    signatures are computed in-plan instead.
+    signatures are computed in-plan instead. Consume the pairs before the
+    next committing call on the same store, whose fold may delete what
+    they read.
 
     ``run_id``: None (default) appends the next run. An explicit id makes
     the step idempotent under retry: the commit replaces run_<id> and the

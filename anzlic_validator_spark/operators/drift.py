@@ -20,13 +20,12 @@ filtered on the KS expression, no driver collect.
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from anzlic_validator_spark.errors import InvalidConfigException
 from anzlic_validator_spark.rules import Rule
+from anzlic_validator_spark.state_log import read_json
 
 
 def ks_distance_df(df: DataFrame, col: str, probs: list[float], quantiles: list[float]) -> DataFrame:
@@ -44,11 +43,13 @@ def ks_distance_df(df: DataFrame, col: str, probs: list[float], quantiles: list[
     return one.select(ks.alias("ks"))
 
 
-def _load_baseline(rule: Rule) -> tuple[list[float], list[float]]:
+def _load_baseline(rule: Rule, spark: SparkSession) -> tuple[list[float], list[float]]:
+    """The rule's {probs, quantiles}: inline, or read from a path or URI."""
     baseline = rule.get("baseline")
     if isinstance(baseline, str):
-        with open(baseline, encoding="utf-8") as fh:
-            baseline = json.load(fh)
+        path, baseline = baseline, read_json(baseline, spark)
+        if baseline is None:
+            raise FileNotFoundError(f"rule {rule.rule_id}: baseline {path} does not exist")
         col = str(rule.get("column"))
         if "columns" in baseline:  # full profile file → pick our column
             baseline = baseline["columns"].get(col)
@@ -64,7 +65,7 @@ def _load_baseline(rule: Rule) -> tuple[list[float], list[float]]:
 def drift_violations(df: DataFrame, rule: Rule, key_col: str) -> DataFrame:
     col = str(rule.get("column"))
     max_ks = float(rule.get("max_ks", 0.1))
-    probs, quantiles = _load_baseline(rule)
+    probs, quantiles = _load_baseline(rule, df.sparkSession)
     ks_df = ks_distance_df(df, col, probs, quantiles)
     return ks_df.where(F.col("ks") > max_ks).select(
         F.lit("__table__").alias("key"),

@@ -212,7 +212,7 @@ def incremental_embedding_neardup(
     """Cross-run incremental embedding near-dup, the vector twin of the
     minhash and audio fingerprint stores (the operators/dedup_state.py
     scaffold: atomic run commits, the meta guard including the SRP
-    configuration, run_id retry idempotency, fold-aware compaction). Run
+    configuration, run_id retry idempotency, the state log's fold trigger). Run
     N+1 SRP-hashes only its new vectors. Stored rows carry the vector and
     its norm, computed once at commit, for the exact-cosine verify, and the
     SRP bucket array, so pairing against 10^12 stored vectors never re-runs
@@ -223,7 +223,8 @@ def incremental_embedding_neardup(
     buckets (zero-ish embeddings concentrate there) with more than
     ``max_bucket_size`` carriers among those the batch touches drop, with a
     logged census. The cosine verify is ``verify_pairs`` pinned on the
-    candidate side."""
+    candidate side. Consume the pairs before the next committing call on
+    the same store: its fold may delete the runs they read."""
     buckets_udf = make_srp_buckets_udf(dim, bits, n_tables, seed)
     new_v, all_v = incremental_fingerprints(
         new_df,

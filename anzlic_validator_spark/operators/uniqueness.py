@@ -36,6 +36,31 @@ def duplicate_keys(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.select(*cols).groupBy(*cols).agg(F.expr("count(1) AS n")).where("n > 1")
 
 
+def tuple_keys(df: DataFrame, rule: Rule, key_col: str) -> DataFrame:
+    """(key, k): each row's key as a string and the tuple key of the rule's
+    columns. A tuple holding a NULL drops, as the in-batch join never pairs
+    it (concat_ws skips NULLs, so ('x', NULL) and (NULL, 'x') would collide)."""
+    cast = [f"CAST({_ident(c)} AS STRING)" for c in rule.get("columns")]
+    nulls = " OR ".join(f"{c} IS NULL" for c in cast)
+    k = f"CASE WHEN {nulls} THEN NULL ELSE concat_ws({_lit(chr(0x1F))}, {', '.join(cast)}) END"
+    return df.selectExpr(f"CAST({_ident(key_col)} AS STRING) AS key", f"{k} AS k").where(
+        "k IS NOT NULL"
+    )
+
+
+def violation_cols(rule: Rule, key: str, observed: str) -> list[str]:
+    """The select list of every uniqueness violation row (key, rule_id,
+    observed, expected, rule_order), given SQL for its key and observed."""
+    cols = ",".join(str(c) for c in rule.get("columns"))
+    return [
+        f"{key} AS key",
+        f"{_lit(f'{rule.rule_id}.incorrect')} AS rule_id",
+        f"{observed} AS observed",
+        f"{_lit(f'unique ({cols})')} AS expected",
+        f"{int(rule.order)} AS rule_order",
+    ]
+
+
 def unique_violations(df: DataFrame, rule: Rule, key_col: str) -> DataFrame:
     """Per-record violation rows for duplicated keys.
 
@@ -46,10 +71,5 @@ def unique_violations(df: DataFrame, rule: Rule, key_col: str) -> DataFrame:
     cols = [str(c) for c in rule.get("columns")]
     dupes = duplicate_keys(df, cols)
     joined = df.select(key_col, *[c for c in cols if c != key_col]).join(dupes, on=cols, how="inner")
-    return joined.selectExpr(
-        f"CAST({_ident(key_col)} AS STRING) AS key",
-        f"{_lit(f'{rule.rule_id}.incorrect')} AS rule_id",
-        "concat('count=', CAST(n AS STRING)) AS observed",
-        f"{_lit('unique (' + ','.join(cols) + ')')} AS expected",
-        f"{int(rule.order)} AS rule_order",
-    )
+    key = f"CAST({_ident(key_col)} AS STRING)"
+    return joined.selectExpr(*violation_cols(rule, key, "concat('count=', CAST(n AS STRING))"))

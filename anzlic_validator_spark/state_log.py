@@ -25,6 +25,12 @@ The protocol:
 - the units a fold supersedes are deleted later, by ``prune``, so a crash
   at any point leaves either the old units or a complete fold over them.
 
+One policy for every root: ``fold_due`` is the fold trigger, and each
+unit calls ``prune(before=<its own id>)``. A fold covering the current
+unit (the seen-keys log's) is pruned one unit later, so a retry still
+finds what its first attempt read; a fold stopping at the previous unit
+(a fingerprint store's) is pruned at once.
+
 This needs an atomic directory rename: the local filesystem and HDFS have
 one, S3A does not.
 """
@@ -39,6 +45,7 @@ from py4j.java_gateway import is_instance_of
 from pyspark.sql import SparkSession
 
 MARKER = "_FOLDED"
+FOLD_AT = 16  # fold_due's default threshold, read at call time
 _UNIT_RE = re.compile(r"^(run|fold)_(\d{5,})$")
 
 
@@ -81,6 +88,23 @@ def file_stats(path: str, spark: SparkSession | None = None) -> list[tuple[str, 
     return sorted(out)
 
 
+def read_json(path: str, spark: SparkSession | None = None) -> dict | None:
+    """The JSON document at ``path`` (a plain path or any Hadoop URI), or
+    None when it does not exist."""
+    spark = _session(spark)
+    return _read_json(spark, *_filesystem(spark, path), path)
+
+
+def _read_json(spark: SparkSession, fs, hpath, path: str) -> dict | None:
+    if not fs.exists(hpath(path)):
+        return None
+    stream = fs.open(hpath(path))
+    try:
+        return json.loads(bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)))
+    finally:
+        stream.close()
+
+
 class StateLog:
     """The state under one root dir. Child paths keep the form of
     ``root`` (a plain path stays plain), so callers may open them with
@@ -89,8 +113,7 @@ class StateLog:
     def __init__(self, root: str, spark: SparkSession | None = None):
         spark = _session(spark)
         self.root = root.rstrip("/")
-        self._jvm = spark._jvm
-        self._gateway = spark.sparkContext._gateway
+        self._spark = spark
         self.fs, self._hpath = _filesystem(spark, self.root)
 
     def path(self, name: str) -> str:
@@ -102,14 +125,7 @@ class StateLog:
     # -- small JSON documents ------------------------------------------------
 
     def read_json(self, name: str) -> dict | None:
-        p = self._p(name)
-        if not self.fs.exists(p):
-            return None
-        stream = self.fs.open(p)
-        try:
-            return json.loads(bytes(self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)))
-        finally:
-            stream.close()
+        return _read_json(self._spark, self.fs, self._hpath, self.path(name))
 
     def write_json(self, name: str, doc: dict) -> None:
         """Write ``name`` whole or not at all: a temp file, then a rename
@@ -140,27 +156,36 @@ class StateLog:
                 return f
         return None
 
-    def runs(self) -> list[int]:
-        return self._units()[0]
-
     def newest_fold(self, before: int | None = None) -> int | None:
         """Coverage of the newest fold below ``before`` that has its marker."""
         return self._newest(self._units()[1], before)
 
     def next_id(self) -> int:
-        runs, folds = self._units()
-        covers = self._newest(folds, None)
+        covers, runs = self.live_units()
         return max([-1 if covers is None else covers] + runs) + 1
+
+    def live_units(self, before: int | None = None) -> tuple[int | None, list[int]]:
+        """(coverage of the newest valid fold below ``before``, the ids of
+        the runs after it and below ``before``)."""
+        runs, folds = self._units()
+        covers = self._newest(folds, before)
+        floor = -1 if covers is None else covers
+        return covers, [i for i in runs if i > floor and (before is None or i < before)]
 
     def live_inputs(self, before: int | None = None) -> list[str]:
         """The dirs holding every unit below ``before``: the newest valid
         fold below it, then the runs after that fold and below it."""
-        runs, folds = self._units()
-        covers = self._newest(folds, before)
-        floor = -1 if covers is None else covers
+        covers, runs = self.live_units(before)
         return ([self.path(f"fold_{covers:05d}")] if covers is not None else []) + [
-            self.path(f"run_{i:05d}") for i in runs if i > floor and (before is None or i < before)
+            self.path(f"run_{i:05d}") for i in runs
         ]
+
+    def fold_due(self, before: int, at: int | None = None) -> bool:
+        """The fold trigger: at least ``at`` (default ``FOLD_AT``) live
+        units precede unit ``before``, and one of them is a run past the
+        newest fold, so a retry never re-folds a lone fold onto itself."""
+        covers, runs = self.live_units(before)
+        return bool(runs) and len(runs) + (covers is not None) >= (FOLD_AT if at is None else at)
 
     def check_horizon(self, run_id: int) -> None:
         """Raise when ``run_id`` is at or below a fold's coverage: the
@@ -233,9 +258,9 @@ class StateLog:
             if not ok and replace and self.fs.exists(d):
                 # HDFS refuses a plain rename onto an existing file (a local
                 # rename replaces it); its overwriting rename is atomic too
-                fs_pkg = self._jvm.org.apache.hadoop.fs
+                fs_pkg = self._spark._jvm.org.apache.hadoop.fs
                 opt = getattr(fs_pkg, "Options$Rename")
-                opts = self._gateway.new_array(opt, 1)
+                opts = self._spark.sparkContext._gateway.new_array(opt, 1)
                 opts[0] = opt.OVERWRITE
                 fs_pkg.FileContext.getFileContext(d.toUri(), self.fs.getConf()).rename(s, d, opts)
                 ok = True

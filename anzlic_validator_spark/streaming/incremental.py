@@ -27,13 +27,18 @@ new, then stop, the streaming twin of the updater's resumable sweep
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from anzlic_validator_spark.engine import ValidationResult, validate
 from anzlic_validator_spark.errors import InvalidConfigException
+from anzlic_validator_spark.operators.uniqueness import (
+    tuple_keys,
+    unique_violations,
+    violation_cols,
+)
 from anzlic_validator_spark.rules import Rule, RuleCatalog
 from anzlic_validator_spark.schema import CLIPS_SCHEMA
 from anzlic_validator_spark.state_log import StateLog
@@ -45,17 +50,12 @@ CROSS_BATCH_UNSAFE = {"all_of", "drift"}
 _SEEN_SCHEMA = "rule_id string, k string, first_epoch long"
 
 
-def _unique_key_expr(rule: Rule) -> F.Column:
-    """NULL-safe tuple encoding. concat_ws silently SKIPS NULLs, so distinct
-    tuples like ('x', NULL) and (NULL, 'x') would both encode to 'x' and read
-    as false cross-batch duplicates. Tuples containing any NULL encode to
-    NULL instead (callers drop them), matching the in-batch path where the
-    uniqueness join never pairs NULL-keyed tuples."""
-    cast = [F.col(str(c)).cast("string") for c in rule.get("columns")]
-    any_null = cast[0].isNull()
-    for c in cast[1:]:
-        any_null = any_null | c.isNull()
-    return F.when(any_null, F.lit(None)).otherwise(F.concat_ws("\x1f", *cast))
+def _write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Write ``df`` as the ``epoch`` partition of ``path``, replacing only
+    that partition, so a retried epoch rewrites its own output."""
+    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    out = df.withColumn("epoch", F.lit(int(epoch_id)))
+    out.write.mode("overwrite").partitionBy("epoch").parquet(path)
 
 
 def validate_stream(
@@ -79,13 +79,13 @@ def validate_stream(
     Raises InvalidConfigException for table-global rules (CROSS_BATCH_UNSAFE)
     BEFORE the stream starts.
 
-    Seen-keys log folding: once at least ``seen_log_max_partitions``
-    live units precede the epoch, the epoch's keys are written as a fold
-    of the whole history (min first_epoch per key) instead of a run. What
-    a fold supersedes is pruned by a later epoch, so a retried epoch still
-    finds every unit its first attempt read. Each batch thereby reads at
-    most ~seen_log_max_partitions units however long the stream lives,
-    and ``first_epoch`` reporting survives folding.
+    Seen-keys log folding: when ``StateLog.fold_due`` fires at
+    ``seen_log_max_partitions``, the epoch's keys are written as a fold of
+    the whole history (min first_epoch per key) instead of a run, and
+    every epoch prunes below itself, so a retried epoch still finds every
+    unit its first attempt read. Each batch thereby reads at most
+    ``seen_log_max_partitions`` units (two when it is 1) however long the
+    stream lives, and ``first_epoch`` reporting survives folding.
     """
     bad = [r.rule_id for r in catalog.rules if r.type in CROSS_BATCH_UNSAFE]
     if bad:
@@ -106,10 +106,7 @@ def validate_stream(
     stream = reader.parquet(input_path)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from anzlic_validator_spark.operators.uniqueness import unique_violations
-
         s = batch_df.sparkSession
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         result = validate(batch_df, local_catalog, key_col=key_col, refs=refs or {})
         ranked = result.violations_ranked
         seen_parts = []
@@ -119,12 +116,9 @@ def validate_stream(
         inputs = seen.live_inputs(epoch_id) if seen else []
         prior = s.read.schema(_SEEN_SCHEMA).parquet(*inputs) if inputs else None
         for rule in unique_rules:
-            # intra-batch duplicates: the same salted aggregate as batch mode
+            # intra-batch duplicates: the same aggregate as batch mode
             ranked = ranked.unionByName(unique_violations(batch_df, rule, key_col))
-            kexpr = _unique_key_expr(rule)
-            bk = batch_df.select(
-                F.col(key_col).cast("string").alias("key"), kexpr.alias("k")
-            ).where(F.col("k").isNotNull())
+            bk = tuple_keys(batch_df, rule, key_col)
             if prior is not None:
                 # cross-batch duplicates: batch keys seen in ANY prior epoch.
                 # The log is (rule_id, key tuple, first_epoch): scalars only.
@@ -140,16 +134,11 @@ def validate_stream(
                     # of their units
                     .agg(F.min("first_epoch").alias("first_epoch"))
                 )
-                cols = ",".join(str(c) for c in rule.get("columns"))
                 ranked = ranked.unionByName(
-                    hits.select(
-                        F.col("key"),
-                        F.lit(f"{rule.rule_id}.incorrect").alias("rule_id"),
-                        F.concat(F.lit("seen_in_epoch="), F.col("first_epoch").cast("string")).alias(
-                            "observed"
-                        ),
-                        F.lit(f"unique ({cols})").alias("expected"),
-                        F.lit(rule.order).cast("int").alias("rule_order"),
+                    hits.selectExpr(
+                        *violation_cols(
+                            rule, "key", "concat('seen_in_epoch=', CAST(first_epoch AS STRING))"
+                        )
                     )
                 )
             seen_parts.append(
@@ -158,27 +147,14 @@ def validate_stream(
         full = ValidationResult(
             df=batch_df, key_col=key_col, catalog=catalog, violations_ranked=ranked.persist()
         )
-        (
-            full.violations.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .parquet(f"{output_path}/violations")
-        )
-        (
-            full.verdicts.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .parquet(f"{output_path}/verdicts")
-        )
+        _write_epoch(full.violations, epoch_id, f"{output_path}/violations")
+        _write_epoch(full.verdicts, epoch_id, f"{output_path}/verdicts")
         full.violations_ranked.unpersist()
         if seen_parts:
-            log = seen_parts[0]
-            for p in seen_parts[1:]:
-                log = log.unionByName(p)
-            new_keys = log.select("rule_id", "k").withColumn(
+            new_keys = reduce(DataFrame.unionByName, seen_parts).withColumn(
                 "first_epoch", F.lit(epoch_id).cast("long")
             )
-            if prior is not None and len(inputs) >= seen_log_max_partitions:
+            if seen.fold_due(epoch_id, seen_log_max_partitions):
                 # the fold absorbs this epoch's keys in the same write
                 folded = (
                     prior.unionByName(new_keys)
@@ -212,15 +188,14 @@ def dedup_stream(
     id_col: str = "doc_id",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    compact_every: int | None = None,
     **minhash_params,
 ):
-    """STREAMING near-duplicate detection over a growing parquet corpus —
-    the composition of the incremental fingerprint store
-    (operators/dedup_state.py) with the foreachBatch machinery here: each
-    micro-batch fingerprints ONLY its own rows, pairs them against the
-    persisted store (new-vs-all-history + new-vs-new), commits its
-    signatures, and writes the pairs epoch-partitioned.
+    """Streaming near-duplicate detection over a growing parquet corpus:
+    the incremental fingerprint store (operators/dedup_state.py) driven by
+    ``foreachBatch``. Each micro-batch fingerprints only its own rows,
+    pairs them against the persisted store (new-vs-all-history and
+    new-vs-new), commits its signatures and writes the pairs
+    epoch-partitioned.
 
     Exactly-once-effective under at-least-once foreachBatch, twice over:
     the store commit is keyed by epoch (``run_id=epoch`` replaces the
@@ -229,20 +204,16 @@ def dedup_stream(
     as validate_stream's sinks. ``minhash_params`` forward to
     ``incremental_minhash_pairs`` (threshold, bands, agreement...).
 
-    ``compact_every``: with N set, once the store has more than N live
-    dirs (its runs and fold) the batch folds the store up to the previous
-    epoch (compact_store ``up_to=epoch-1``; the current epoch stays
-    individually retryable), bounding every batch's store scan to ~N dirs
-    however long the stream lives, the fingerprint-store analog of the
-    seen-keys log folding above.
+    The store folds on ``state_log``'s one trigger at the start of an
+    epoch, up to the previous epoch, so the current epoch stays retryable
+    and every batch scans at most ``state_log.FOLD_AT`` store dirs however
+    long the stream lives. Each epoch writes its pairs before the next
+    epoch's fold can delete what they read.
 
     Returns the started StreamingQuery; pairs land at
     ``{output_path}/pairs`` as (a_id, b_id, sig_sim, epoch).
     """
-    from anzlic_validator_spark.operators.dedup_state import (
-        compact_store,
-        incremental_minhash_pairs,
-    )
+    from anzlic_validator_spark.operators.dedup_state import incremental_minhash_pairs
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
@@ -250,26 +221,10 @@ def dedup_stream(
     stream = reader.parquet(input_path)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         pairs = incremental_minhash_pairs(
-            batch_df, store_dir, text_col, id_col,
-            run_id=int(epoch_id), **minhash_params,
+            batch_df, store_dir, text_col, id_col, run_id=int(epoch_id), **minhash_params
         )
-        (
-            pairs.withColumn("epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .parquet(f"{output_path}/pairs")
-        )
-        # compaction AFTER the pair write consumed the store, and only up
-        # to the previous epoch so this one stays retryable
-        if (
-            compact_every
-            and epoch_id > 0
-            and len(StateLog(store_dir, s).live_inputs()) > compact_every
-        ):
-            compact_store(s, store_dir, up_to=int(epoch_id) - 1)
+        _write_epoch(pairs, epoch_id, f"{output_path}/pairs")
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)
@@ -287,7 +242,7 @@ def stateful_unique_stream(
     Structured Streaming's checkpointed state store (RocksDB/HDFS-backed on
     a cluster) via ``applyInPandasWithState`` — the state-store alternative
     to ``validate_stream``'s seen-keys log. The log re-reads up to
-    ~seen_log_max_partitions partitions every micro-batch; the state store
+    ``seen_log_max_partitions`` units every micro-batch; the state store
     touches only the keys PRESENT in the batch and checkpoints
     incrementally, which is the scale-safe shape for unbounded streams.
 
@@ -304,40 +259,27 @@ def stateful_unique_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    rid = f"{rule.rule_id}.incorrect"
-    order = int(rule.order)
-    cols = ",".join(str(c) for c in rule.get("columns"))
-    expected = f"unique ({cols})"
-    out_cols = ["key", "rule_id", "observed", "expected", "rule_order"]
-
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"), _unique_key_expr(rule).alias("k")
-    ).where(F.col("k").isNotNull())
 
     def track(tuple_key, pdfs, state: GroupState):
         n_prior = state.get[0] if state.exists else 0
-        rows = []
+        keys, counts = [], []
         for pdf in pdfs:
             for key in pdf["key"]:
                 if n_prior > 0:
-                    rows.append((key, rid, f"n_prior={n_prior}", expected, order))
+                    keys.append(key)
+                    counts.append(n_prior)
                 n_prior += 1
         state.update((n_prior,))
-        if rows:
-            yield pd.DataFrame(rows, columns=out_cols)
+        if keys:
+            yield pd.DataFrame({"key": keys, "n_prior": counts})
 
-    return keyed.groupBy("k").applyInPandasWithState(
+    return tuple_keys(stream, rule, key_col).groupBy("k").applyInPandasWithState(
         track,
-        outputStructType=_SEEN_OUT_SCHEMA,
+        outputStructType="key string, n_prior long",
         stateStructType="n long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-_SEEN_OUT_SCHEMA = (
-    "key string, rule_id string, observed string, expected string, rule_order int"
-)
+    ).selectExpr(*violation_cols(rule, "key", "concat('n_prior=', CAST(n_prior AS STRING))"))
 
 
 def violation_rate_stream(

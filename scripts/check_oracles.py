@@ -5,7 +5,10 @@ matching oracle_sql() in DuckDB on the same parquet, and compares row count,
 column names and an order-insensitive value multiset. Rows-only queries are
 just executed and counted.
 
-Usage: python scripts/check_oracles.py [name ...]
+Usage: python scripts/check_oracles.py [name|group ...]
+
+A group name stands for its queries: ``state`` for the state-dependent
+oracles, ``validate`` for the queries that run through ``validate()``.
 """
 
 from __future__ import annotations
@@ -20,6 +23,17 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+GROUPS = {
+    "state": (
+        "stream_unique resume_buckets dedup_incremental audio_dedup_incremental "
+        "stream_dedup audio_neardup_incremental embedding_dedup_incremental"
+    ).split(),
+    "validate": (
+        "lineitem_rules lineitem_verdicts unique_custkey ref_missing ref_mapped "
+        "all_of_status events_rules conditional_any_of audio_violations "
+        "audio_verdict_summary stream_unique resume_buckets"
+    ).split(),
+}
 
 
 def norm(v):
@@ -34,6 +48,8 @@ def norm(v):
 
 def main(names: list[str]) -> int:
     from pyspark.sql import SparkSession
+
+    names = [q for n in names for q in GROUPS.get(n, [n])]
 
     import __spark_entry__ as e
 

@@ -370,20 +370,23 @@ def test_compact_store_crash_safety_and_retry_horizon(spark, tmp_path):
         )
 
 
-def test_dedup_stream_auto_compaction(spark, tmp_path):
-    """compact_every bounds per-batch store reads without changing output:
-    same 3-epoch fixture as the uncompacted test, identical pairs, store
-    ends as one fold + the last epoch's run."""
+def test_dedup_stream_auto_compaction(spark, tmp_path, monkeypatch):
+    """The store's fold trigger bounds per-batch store reads without
+    changing output: at a fold threshold of 1, the same 3-epoch fixture as
+    the uncompacted test gives identical pairs, and the store ends as one
+    fold + the last epoch's run."""
     import time as _time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    import anzlic_validator_spark.state_log as state_log_mod
     from anzlic_validator_spark.streaming.incremental import dedup_stream
 
     inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
     store = str(tmp_path / "store")
     os.makedirs(inp)
+    monkeypatch.setattr(state_log_mod, "FOLD_AT", 1)
     epochs = [
         [(d, _vocab_doc(d)) for d in range(6)],
         [(100, _vocab_doc(100)), (103, _vocab_doc(3))],
@@ -400,7 +403,7 @@ def test_dedup_stream_auto_compaction(spark, tmp_path):
         os.utime(p, (now - 600 + e * 120,) * 2)
     q = dedup_stream(
         spark, inp, "doc_id long, text string", store, out, ckpt,
-        max_files_per_trigger=1, compact_every=1,
+        max_files_per_trigger=1,
     )
     assert q.awaitTermination(300)
     got = {
@@ -412,6 +415,68 @@ def test_dedup_stream_auto_compaction(spark, tmp_path):
         d for d in os.listdir(store) if d.startswith(("run_", "fold_"))
     )
     assert names == ["fold_00001", "run_00002"]
+
+
+def test_store_auto_fold_bounds_live_dirs_and_keeps_pairs(spark, tmp_path, monkeypatch):
+    """Twenty batches into one store with no compact_store call: after
+    every batch the store holds at most FOLD_AT live dirs, and the pairs
+    equal those of the same batches with folding off (FOLD_AT above 20).
+    A commit=False probe on a store past the threshold writes nothing."""
+    import anzlic_validator_spark.state_log as state_log_mod
+    from anzlic_validator_spark.operators.dedup_state import store_live_inputs
+
+    n = state_log_mod.FOLD_AT
+    # each batch copies one of the first five docs, so later batches pair
+    # against rows that sit in a fold
+    batches = [[(10 * k, _vocab_doc(k)), (10 * k + 1, _vocab_doc(k % 5))] for k in range(20)]
+
+    def run(store):
+        pairs, live = [], []
+        for rows in batches:
+            got = incremental_minhash_pairs(_docs(spark, rows), store, "text", "doc_id")
+            pairs.append(sorted((r.a_id, r.b_id) for r in got.collect()))
+            live.append(len(store_live_inputs(store)[0]))
+        return pairs, live
+
+    folded, live = run(str(tmp_path / "folded"))
+    assert max(live) <= n
+    assert live == list(range(1, n + 1)) + list(range(2, 22 - n))
+    monkeypatch.setattr(state_log_mod, "FOLD_AT", 21)
+    plain_store = str(tmp_path / "plain")
+    plain, plain_live = run(plain_store)
+    assert plain_live == list(range(1, 21))
+    assert folded == plain
+    assert any(folded[n:])  # pairs were found against the fold
+
+    monkeypatch.undo()
+    listing = sorted(os.listdir(plain_store))
+    probe = incremental_minhash_pairs(
+        _docs(spark, [(999, _vocab_doc(2))]), plain_store, "text", "doc_id", commit=False
+    )
+    assert {(r.a_id, r.b_id) for r in probe.collect()} == {
+        (20, 999), (21, 999), (71, 999), (121, 999), (171, 999)
+    }
+    assert sorted(os.listdir(plain_store)) == listing
+    spark.catalog.clearCache()
+
+
+def test_result_kept_past_a_fold_fails_loudly(spark, tmp_path, monkeypatch):
+    """A committing call's fold prunes the runs it merged, so pairs kept
+    lazy past the call that folds can no longer be read: collecting them
+    raises instead of returning fewer rows."""
+    import anzlic_validator_spark.state_log as state_log_mod
+
+    monkeypatch.setattr(state_log_mod, "FOLD_AT", 2)
+    store = str(tmp_path / "store")
+    first = incremental_minhash_pairs(
+        _docs(spark, [(0, _vocab_doc(0)), (1, _vocab_doc(0))]), store, "text", "doc_id"
+    )
+    incremental_minhash_pairs(_docs(spark, [(2, _vocab_doc(2))]), store, "text", "doc_id")
+    # the third call folds runs 0 and 1 and deletes them
+    incremental_minhash_pairs(_docs(spark, [(3, _vocab_doc(3))]), store, "text", "doc_id")
+    assert sorted(os.listdir(store)) == ["fold_00001", "meta.json", "run_00002"]
+    with pytest.raises(Exception, match="FileNotFound|does not exist|FAILED_READ_FILE"):
+        first.collect()
 
 
 def test_incremental_embedding_neardup_store(spark, tmp_path):

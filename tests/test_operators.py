@@ -1,6 +1,8 @@
 """Dataset-level operators: uniqueness (R10/R19), referential (R13/R14),
 all_of set-cover (R7/R8), drift (KS vs baseline)."""
 
+import json
+
 import pytest
 from pyspark.sql import Row
 
@@ -139,6 +141,23 @@ def test_ks_distance_and_drift(spark):
         }
     )
     assert validate(base, cat, key_col="v").violations.count() == 0
+    rows = validate(shifted, cat, key_col="v").violations.collect()
+    assert len(rows) == 1 and rows[0].key == "__table__" and "ks=" in rows[0].observed
+
+
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "uri"])
+def test_drift_baseline_read_from_a_path_or_uri(spark, tmp_path, as_uri):
+    """A drift rule's baseline may be a plain path or a Hadoop URI: it is
+    read through the state log's JSON reader, not ``open()``."""
+    path = tmp_path / "profile.json"
+    path.write_text(json.dumps(
+        {"columns": {"v": {"probs": [0.25, 0.5, 0.75], "quantiles": [24.0, 49.0, 74.0]}}}
+    ))
+    cat = parse_catalog(
+        {"rules": [{"id": "v.drift", "type": "drift", "column": "v", "max_ks": 0.1,
+                    "baseline": path.as_uri() if as_uri else str(path)}]}
+    )
+    shifted = spark.range(0, 10000).selectExpr("cast(id % 100 as double) + 50.0 as v")
     rows = validate(shifted, cat, key_col="v").violations.collect()
     assert len(rows) == 1 and rows[0].key == "__table__" and "ks=" in rows[0].observed
 

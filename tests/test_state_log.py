@@ -1,6 +1,7 @@
 """The state-on-disk protocol (anzlic_validator_spark/state_log.py) under
-its three users: the checkpoint manifest, the fingerprint store and the
-streaming seen-keys log.
+its three users: the checkpoint manifest, the fingerprint store (folded
+by ``compact_store`` or by its own fold trigger) and the streaming
+seen-keys log.
 
 - a crash between the protocol's steps (after the data write, after the
   rename, before the marker), followed by the caller's retry, ends in the
@@ -166,12 +167,37 @@ def run_store(spark, base: str, fault) -> dict:
     return {"pairs": pairs, "rows": rows, "listing": _listing(store.replace("file://", ""))}
 
 
+def run_store_fold(spark, base: str, fault) -> dict:
+    """Three epoch-keyed batches into one store at a fold threshold of 2:
+    the third batch folds the first two before it commits."""
+    store = f"{base}/store"
+    batches = [
+        [(d, _doc(d)) for d in range(4)],
+        [(100, _doc(100)), (102, _doc(2))],
+        [(200, _doc(200)), (201, _doc(1)), (203, _doc(100))],
+    ]
+    pairs = []
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(state_log_mod, "FOLD_AT", 2)
+        for run_id, rows in enumerate(batches):
+            df = spark.createDataFrame(rows, "doc_id long, text string")
+            pairs.append(fault.retry(lambda: sorted(
+                (r.a_id, r.b_id) for r in incremental_minhash_pairs(
+                    df, store, "text", "doc_id", run_id=run_id
+                ).collect()
+            )))
+    live, _ = dedup_state_mod.store_live_inputs(store)
+    rows = sorted(r.id for r in spark.read.parquet(*live).collect())
+    return {"pairs": pairs, "rows": rows, "listing": _listing(store.replace("file://", ""))}
+
+
 def run_seen_log(spark, base: str, fault) -> dict:
-    """Three epochs through validate_stream: a run, then two folds."""
+    """Four epochs through validate_stream at a fold threshold of 1: a run,
+    a fold, a run (a lone fold does not refold), then a fold over both."""
     local = base.replace("file://", "")
     inp = os.path.join(local, "in")
     os.makedirs(inp, exist_ok=True)
-    epochs = [["a", "b"], ["c", "a"], ["d", "b", "c"]]
+    epochs = [["a", "b"], ["c", "a"], ["d", "b", "c"], ["e", "d", "a"]]
     now = time.time()
     for e, keys in enumerate(epochs):
         p = os.path.join(inp, f"epoch{e}.parquet")
@@ -204,7 +230,12 @@ def run_seen_log(spark, base: str, fault) -> dict:
     }
 
 
-USERS = {"manifest": run_manifest, "store": run_store, "seen_log": run_seen_log}
+USERS = {
+    "manifest": run_manifest,
+    "store": run_store,
+    "store_fold": run_store_fold,
+    "seen_log": run_seen_log,
+}
 
 
 @pytest.fixture(scope="module")
@@ -222,7 +253,10 @@ def uninterrupted(spark, tmp_path_factory):
 # (user, point, nth): nth counts the point's steps in the user's sequence.
 #   manifest: rename 1 = manifest.json
 #   store:    rename 1 = meta.json, 2 = run_0, 3 = run_1, 4 = fold; marker 1 = fold
-#   seen_log: rename 1 = run_0, 2 = fold_1, 3 = fold_2; marker 1 = fold_1
+#   store_fold: rename 1 = meta.json, 2 = run_0, 3 = run_1, 4 = fold_1, 5 = run_2;
+#             marker 1 = fold_1
+#   seen_log: rename 1 = run_0, 2 = fold_1, 3 = run_2, 4 = fold_3;
+#             marker 1 = fold_1, 2 = fold_3
 CASES = [
     ("manifest", "after_write", 1),
     ("manifest", "after_rename", 1),
@@ -231,10 +265,14 @@ CASES = [
     ("store", "after_write", 4),
     ("store", "after_rename", 4),
     ("store", "before_marker", 1),
+    ("store_fold", "after_write", 4),
+    ("store_fold", "after_rename", 4),
+    ("store_fold", "before_marker", 1),
     ("seen_log", "after_write", 1),
     ("seen_log", "after_rename", 2),
     ("seen_log", "before_marker", 1),
     ("seen_log", "after_rename", 3),
+    ("seen_log", "after_rename", 4),
 ]
 
 
