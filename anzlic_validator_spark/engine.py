@@ -7,12 +7,12 @@ declarative Spark plan:
 
     row rules    -> one projection built from SQL text (compile.py):
                     array(rule structs) → filter nulls → explode
-                    (whole-stage codegen, zero shuffle); broadcast
-                    referential joins and the Arrow decode UDF ride the
-                    same scan
+                    (whole-stage codegen, zero shuffle); the Arrow decode
+                    UDF rides the same scan
     dataset rules-> uniqueness (one map-side-combined count), referential
-                    (one pruned join per authority and join key), all_of
-                    (grouped collect_set), drift (grid aggregate)
+                    (one pruned join per authority and join key, its
+                    strategy left to the planner), all_of (grouped
+                    collect_set), drift (grid aggregate)
     violations   = UNION ALL of the above
     verdicts     = records UNION violations → ONE groupBy(key) taking the
                    min (rule_order, rule_id) (the reference is fail-fast
@@ -58,61 +58,32 @@ def _empty_violations(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], _INTERNAL_SCHEMA)
 
 
-def _fuse_in_scan(rule: Rule) -> bool:
-    """Rules that fold into the single-scan row pass (they augment the row
-    stream rather than re-scanning it). Referential rules fuse ONLY when the
-    authority is broadcast: fusing a sort-merge join would shuffle the full
-    row — including the binary payload — on the join key. Non-broadcast
-    referential rules instead run on a pruned (key, column) projection
-    (operators/referential.referential_violations) and union their rows in,
-    keeping ``bytes`` shuffle-free at any authority size.
-    """
-    if rule.type == "audio_decode":
-        return True
-    if rule.type in ("referential", "referential_mapped"):
-        return bool(rule.get("broadcast", False))
-    return False
+def single_scan_violations(df: DataFrame, catalog: RuleCatalog, key_col: str) -> DataFrame:
+    """Every row rule and the audio decode check in ONE scan of the table.
 
-
-def single_scan_violations(
-    df: DataFrame, catalog: RuleCatalog, key_col: str, refs: dict[str, DataFrame]
-) -> DataFrame:
-    """ALL per-row rule families in ONE scan of the table.
-
-    Row rules compile to struct expressions; referential rules LEFT-join
-    their authority onto the stream; the audio rule attaches its Arrow
-    decode-check struct. Everything lands in one array → filter → explode
-    projection, so the table — including the heavy ``bytes`` column — is
-    read exactly once per job no matter how many rules the catalog holds.
+    Row rules compile to struct expressions; the audio rule attaches its
+    Arrow decode-check struct. Everything lands in one array → filter →
+    explode projection, so the table — including the heavy ``bytes``
+    column — is read exactly once per job no matter how many rules the
+    catalog holds.
     """
     from anzlic_validator_spark.functions.audio import augment_audio
-    from anzlic_validator_spark.operators.referential import augment_referential
 
     structs = compile_row_rules(catalog.row_rules)
     aug = df
     for rule in catalog.dataset_rules:
-        if not _fuse_in_scan(rule):
-            continue
         if rule.type == "audio_decode":
             aug, ss = augment_audio(aug, rule, key_col)
-        else:
-            aug, ss = augment_referential(aug, rule, key_col, refs)
-        structs.extend(ss)
+            structs.extend(ss)
     if not structs:
         return _empty_violations(df.sparkSession)
     return explode_violations(aug, key_col, structs)
 
 
-def dataset_rule_violations(
-    df: DataFrame,
-    rule: Rule,
-    key_col: str,
-    refs: dict[str, DataFrame],
-) -> DataFrame:
+def dataset_rule_violations(df: DataFrame, rule: Rule, key_col: str) -> DataFrame:
     """Rules that genuinely need their own aggregate pass (their scans are
     pruned to the rule's columns — never the binary payload)."""
     from anzlic_validator_spark.operators.drift import drift_violations
-    from anzlic_validator_spark.operators.referential import referential_violations
     from anzlic_validator_spark.operators.setcover import all_of_violations
     from anzlic_validator_spark.operators.uniqueness import unique_violations
 
@@ -122,9 +93,22 @@ def dataset_rule_violations(
         return all_of_violations(df, rule, key_col)
     if rule.type == "drift":
         return drift_violations(df, rule, key_col)
-    if rule.type in ("referential", "referential_mapped"):
-        return referential_violations(df, rule, key_col, refs)
     raise InvalidConfigException(f"unknown dataset rule type: {rule.type}")
+
+
+def table_global(rule: Rule, dtypes: dict[str, str]) -> bool:
+    """Rules whose groups are NOT functions of the record key: drift and
+    grouped or scalar all_of. Their violations can span hash buckets and
+    micro-batches, so the batch sweep evaluates them over the full input
+    into the reserved bucket and the stream rejects them. An array-typed
+    all_of without group_by checks each record on its own."""
+    if rule.type == "drift":
+        return True
+    if rule.type == "all_of":
+        if rule.get("group_by"):
+            return True
+        return not dtypes.get(str(rule.get("column")), "").startswith("array")
+    return False
 
 
 @dataclass
@@ -133,7 +117,6 @@ class ValidationResult:
 
     df: DataFrame
     key_col: str
-    catalog: RuleCatalog
     violations_ranked: DataFrame = field(repr=False)  # + rule_order
 
     @property
@@ -186,22 +169,26 @@ def validate(
     key_col: str,
     refs: dict[str, DataFrame] | None = None,
 ) -> ValidationResult:
-    """Build the full validation plan for ``df`` under ``catalog``."""
-    refs = refs or {}
-    missing = [c for r in catalog.row_rules for c in _rule_columns(r) if c not in df.columns]
-    if missing:
-        raise InvalidConfigException(f"catalog references unknown columns: {sorted(set(missing))}")
+    """Build the full validation plan for ``df`` under ``catalog``.
+
+    Raises InvalidConfigException, before any Spark job, when a rule names a
+    column ``df`` lacks."""
     from anzlic_validator_spark.operators.referential import (
         referential_violations_grouped,
         rule_join_key,
     )
 
-    parts = [single_scan_violations(df, catalog, key_col, refs)]
-    # non-broadcast referential rules sharing (authority, join key, ref key)
-    # are evaluated through ONE pruned scan + ONE authority join
+    refs = refs or {}
+    missing = [c for r in catalog.rules for c in _rule_columns(r, key_col) if c not in df.columns]
+    if missing:
+        raise InvalidConfigException(f"catalog references unknown columns: {sorted(set(missing))}")
+
+    parts = [single_scan_violations(df, catalog, key_col)]
+    # referential rules sharing (authority, join key, ref key) are evaluated
+    # through ONE pruned scan + ONE authority join
     ref_groups: dict[tuple, list[Rule]] = {}
     for rule in catalog.dataset_rules:
-        if _fuse_in_scan(rule):
+        if rule.type == "audio_decode":
             continue  # already folded into the single-scan pass
         if rule.type in ("referential", "referential_mapped"):
             gk = (
@@ -211,30 +198,33 @@ def validate(
             )
             ref_groups.setdefault(gk, []).append(rule)
             continue
-        parts.append(dataset_rule_violations(df, rule, key_col, refs))
+        parts.append(dataset_rule_violations(df, rule, key_col))
     for group in ref_groups.values():
         parts.append(referential_violations_grouped(df, group, key_col, refs))
     violations = parts[0]
     for p in parts[1:]:
         violations = violations.unionByName(p)
-    return ValidationResult(
-        df=df, key_col=key_col, catalog=catalog, violations_ranked=violations
-    )
+    return ValidationResult(df=df, key_col=key_col, violations_ranked=violations)
 
 
-def _rule_columns(rule: Rule) -> list[str]:
+def _rule_columns(rule: Rule, key_col: str) -> list[str]:
+    from anzlic_validator_spark.operators.referential import rule_join_key
+
     cols = []
     if rule.get("column"):
         cols.append(str(rule.get("column")))
-    if isinstance(rule.get("columns"), (list, tuple)):
-        cols.extend(str(c) for c in rule.get("columns"))
+    for key in ("columns", "group_by"):
+        if isinstance(rule.get(key), (list, tuple)):
+            cols.extend(str(c) for c in rule.get(key))
+    if rule.type in ("referential", "referential_mapped"):
+        cols.append(rule_join_key(rule, key_col))
     if rule.type == "any_of":
         for sub in rule.get("rules") or []:
-            cols.extend(_rule_columns(Rule("", str(sub.get("type")), rule.order, dict(sub))))
+            cols.extend(_rule_columns(Rule("", str(sub.get("type")), rule.order, dict(sub)), key_col))
     if rule.type == "conditional":
         when = rule.get("when") or {}
         if when.get("column"):
             cols.append(str(when["column"]))
         then = dict(rule.get("then") or {})
-        cols.extend(_rule_columns(Rule("", str(then.get("type")), rule.order, then)))
+        cols.extend(_rule_columns(Rule("", str(then.get("type")), rule.order, then), key_col))
     return cols

@@ -15,10 +15,10 @@ physical layouts, so a job restarted at 4N executors skips exactly the
 buckets the N-executor run completed.
 
 Scope: rules whose groups are functions of the key (uniqueness: duplicate
-keys hash to the same bucket) resume safely. A rule grouping by a non-key
-column (all_of with group_by) can have groups spanning buckets; for
-catalogs containing such rules run with n_buckets=1 or accept per-bucket
-group semantics.
+keys hash to the same bucket) resume per bucket. A table-global rule
+(``engine.table_global``: drift, grouped or scalar all_of) has groups
+spanning buckets, so the batch sweep re-evaluates it over the full input
+on every run into a reserved bucket outside the resume accounting.
 """
 
 from __future__ import annotations
@@ -99,7 +99,7 @@ def input_snapshots_per_bucket(
     per_bucket: dict[int, list] = {b: [] for b in range(n_buckets)}
     residue: list = []
     for p in sorted(paths):
-        snap = iceberg_snapshot(p)
+        snap = iceberg_snapshot(p, spark)
         if snap is not None:
             pf = iceberg_partition_fingerprints(spark, p, n_buckets)
             if pf is not None:
@@ -127,6 +127,12 @@ def input_snapshots_per_bucket(
     return {b: _fingerprint([per_bucket[b], residue]) for b in range(n_buckets)}
 
 
+def run_snapshot(snapshots: dict[int, str]) -> str:
+    """One fingerprint of a run's input: the hash of its per-bucket
+    fingerprints."""
+    return _fingerprint(sorted(snapshots.items()))
+
+
 @dataclass
 class Manifest:
     log: StateLog
@@ -145,22 +151,17 @@ class Manifest:
         doc["n_buckets"] = n_buckets
         return cls(log=log, n_buckets=n_buckets, doc=doc)
 
-    def pending_buckets(
-        self, rule_versions: str, snapshot_id: str | dict[int, str]
-    ) -> list[int]:
+    def pending_buckets(self, rule_versions: str, snapshots: dict[int, str]) -> list[int]:
         """Buckets needing (re)validation: not complete, or completed under a
-        different rule catalog / input snapshot (I3 skip-if-no-change).
-        ``snapshot_id`` may be per-bucket (input_snapshots_per_bucket) —
-        then each bucket compares against ITS OWN fingerprint."""
-        def snap_for(b: int) -> str:
-            return snapshot_id.get(b, "") if isinstance(snapshot_id, dict) else snapshot_id
-
+        different rule catalog or input fingerprint.
+        ``snapshots`` holds each bucket's own fingerprint
+        (input_snapshots_per_bucket)."""
         done = {
             int(b)
             for b, e in self.doc["buckets"].items()
             if e.get("status") == "complete"
             and e.get("rule_versions") == rule_versions
-            and e.get("snapshot_id") == snap_for(int(b))
+            and e.get("snapshot_id") == snapshots.get(int(b), "")
         }
         return [b for b in range(self.n_buckets) if b not in done]
 
@@ -168,17 +169,16 @@ class Manifest:
         self,
         run_id: str,
         rule_versions: str,
-        snapshot_id: str | dict[int, str],
+        snapshots: dict[int, str],
         files: list[str],
         bucket_metrics: dict[int, dict[str, Any]],
         wall_clock_s: float,
     ) -> None:
         for b, m in bucket_metrics.items():
-            snap = snapshot_id.get(b, "") if isinstance(snapshot_id, dict) else snapshot_id
             self.doc["buckets"][str(b)] = {
                 "status": "complete",
                 "rule_versions": rule_versions,
-                "snapshot_id": snap,
+                "snapshot_id": snapshots.get(b, ""),
                 "files": files,
                 "rows": m.get("rows", 0),
                 "failed_rows": m.get("failed_rows", 0),
@@ -191,11 +191,7 @@ class Manifest:
             {
                 "run_id": run_id,
                 "rule_versions": rule_versions,
-                "snapshot_id": (
-                    _fingerprint(sorted(snapshot_id.items()))
-                    if isinstance(snapshot_id, dict)
-                    else snapshot_id
-                ),
+                "snapshot_id": run_snapshot(snapshots),
                 "buckets": sorted(bucket_metrics),
                 "rows": int(sum(m.get("rows", 0) for m in bucket_metrics.values())),
                 "violations": int(sum(m.get("violations", 0) for m in bucket_metrics.values())),

@@ -395,37 +395,17 @@ def jaccard(a: Column, b: Column) -> Column:
 
 # ---------------------------------------------------------------- minhash
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> list[Column]:
-    """num_hashes min-hash values; hash i = xxhash64(shingle, i).
-
-    Per-row Catalyst transforms — zero shuffle, codegen'd.
-
-    NB: the hash-function index must be baked in via a factory — a
-    two-parameter lambda would make pyspark's ``transform`` pass the array
-    POSITION as the second argument.
-    """
-
-    def hasher(seed: int):
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    return [
-        F.array_min(F.transform(shingles, hasher(i))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def minhash_sig_array(shingles: Column, num_hashes: int = 64) -> Column:
-    """The same signature as ``minhash_signature`` as ONE array<long>
-    column: sig[i] = min over shingles of xxhash64(shingle, i), expressed
-    as a single nested-lambda transform (the hash index is the OUTER
-    lambda's variable — ``xxhash64(s, i)`` with an int lambda variable
-    hashes exactly like ``xxhash64(s, lit(i))``, verified bit-identical).
+    """MinHash signature as ONE array<long> column: sig[i] = min over
+    shingles of xxhash64(shingle, i), expressed as a single nested-lambda
+    transform (the hash index is the OUTER lambda's variable —
+    ``xxhash64(s, i)`` with an int lambda variable hashes exactly like
+    ``xxhash64(s, lit(i))``, verified bit-identical).
 
-    Why (r06, guide §1.2/§7.2): the per-column form materializes
-    ``num_hashes`` separate expressions — 63 lambdas to analyze, optimize
-    and code-generate PER PLAN, a fixed multi-second cost for every
-    minhash-family query at any data size. One nested expression does the
-    identical per-row arithmetic with a constant-size plan."""
+    One nested expression keeps the plan constant-size: ``num_hashes``
+    separate expressions would be as many lambdas to analyze, optimize and
+    code-generate PER PLAN, a fixed multi-second cost for every
+    minhash-family query at any data size."""
     idx = F.sequence(F.lit(0), F.lit(int(num_hashes) - 1))
     return F.transform(
         idx, lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, i)))
@@ -501,25 +481,6 @@ def minhash_near_duplicates(
         jaccard(F.col("sh_a"), F.col("sh_b")),
         lambda jac: jac >= F.lit(threshold),
         "jac",
-    )
-
-
-def exact_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, threshold: float = 0.6, shingle_k: int = 3
-) -> DataFrame:
-    """Brute-force O(n²) exact-Jaccard pairs — the small-scale oracle for
-    the LSH path; never run this at production scale."""
-    base = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__toks")
-    ).select("id", word_shingles_from_tokens(F.col("__toks"), shingle_k).alias("sh"))
-    a = base.select(F.col("id").alias("a_id"), F.col("sh").alias("sh_a"))
-    b = base.select(F.col("id").alias("b_id"), F.col("sh").alias("sh_b"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("a_id") < F.col("b_id"))
-        .withColumn("jac", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .where(F.col("jac") >= F.lit(threshold))
-        .select("a_id", "b_id", F.round("jac", 4).alias("jac"))
     )
 
 

@@ -4,23 +4,22 @@ Reference: per-record HTTPS GET to the LDS API comparing the metadata CRS
 against the authoritative one (checkReferenceSystem,
 scripts/errorChecker.py:462-500) and the kind→code mapped variant
 (checkSpatialRepresentation, :502-532).  The per-record network call becomes
-a single distributed JOIN against the authority table (north_star:
-"referential checks via broadcast/sort-merge anti-joins of clip_id against
-the transcript index").
+a single distributed JOIN against the authority table (clip_id against
+the transcript index).
 
 Scale design: one LEFT OUTER join on the key serves both violation classes
 in one shuffle — a NULL ref side is the 'no reference row' case (what a
 left-anti join would return), a non-NULL mismatch is the 'incorrect' case.
-Catalyst/AQE picks broadcast-hash when the authority fits
-``spark.sql.autoBroadcastJoinThreshold`` (set ``broadcast=True`` to force the
-hint for known-small authorities, e.g. a codec vocabulary), sort-merge
-otherwise; AQE skew-join splits hot key ranges at runtime.
+The join runs on a pruned (key, join key, columns) projection, so whatever
+strategy the planner picks never moves the binary payload: Catalyst/AQE
+broadcasts an authority that fits ``spark.sql.autoBroadcastJoinThreshold``
+and sort-merge joins a larger one, and AQE skew-join splits hot key ranges
+at runtime.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from anzlic_validator_spark.compile import _case, _ident, _lit, _struct, explode_violations
 from anzlic_validator_spark.errors import InvalidConfigException
@@ -34,9 +33,7 @@ def _ref_col(rule: Rule) -> str:
 
 def _ref_struct(rule: Rule) -> str:
     """Nullable violation struct (SQL text) for a plain referential rule
-    over its joined authority column — shared by the fused single-scan path
-    and the grouped pruned path (one authority join serving several
-    rules)."""
+    over its joined authority column."""
     col = str(rule.get("column"))
     rid = rule.rule_id
     v = f"CAST({_ident(col)} AS STRING)"
@@ -110,63 +107,31 @@ def _authority(rules: list[Rule], join_on: str, refs: dict[str, DataFrame]) -> D
     string column ``_ref_col(rule)`` per rule; ``rules`` share the table and
     the key."""
     ref = _lookup_ref(rules[0], refs)
-    right = ref.selectExpr(
+    return ref.selectExpr(
         f"{_ident(rules[0].get('ref_key'))} AS {_ident(join_on)}",
         *[
             f"CAST({_ident(r.get('ref_column'))} AS STRING) AS {_ident(_ref_col(r))}"
             for r in rules
         ],
     )
-    if any(r.get("broadcast", False) for r in rules):
-        right = F.broadcast(right)
-    return right
-
-
-def augment_referential(
-    df: DataFrame, rule: Rule, key_col: str, refs: dict[str, DataFrame]
-) -> tuple[DataFrame, list[str]]:
-    """LEFT-join the authority onto the row stream and return the augmented
-    frame plus the rule's nullable violation-struct expression — so
-    referential checks (plain and mapped) ride the SAME single scan as every
-    other row rule (one pass over the table regardless of rule count; the
-    100 TB requirement).
-
-    Authority keys must be unique (a non-unique authority would multiply
-    rows) — same contract as the reference's one-CRS-per-layer API.
-    """
-    # join_on lets FK-style lookups join on the FK column while reporting
-    # violations against the record key (default: join on the key itself,
-    # the clip_id↔clip_id shape of the transcript index)
-    join_on = rule_join_key(rule, key_col)
-    joined = df.join(_authority([rule], join_on, refs), on=join_on, how="left")
-    return joined, [_violation_struct(rule)]
-
-
-def referential_violations(
-    df: DataFrame, rule: Rule, key_col: str, refs: dict[str, DataFrame]
-) -> DataFrame:
-    """Non-broadcast referential path for a single rule — see
-    referential_violations_grouped (the engine routes through it so rules
-    sharing an authority+join-key pay ONE join)."""
-    return referential_violations_grouped(df, [rule], key_col, refs)
 
 
 def referential_violations_grouped(
     df: DataFrame, rules: list[Rule], key_col: str, refs: dict[str, DataFrame]
 ) -> DataFrame:
-    """Non-broadcast referential path: violation rows from a PRUNED
-    (key, join_on, columns) projection, so the sort-merge shuffle of a large
-    authority carries a few scalars per row — never the full record and in
-    particular never the binary payload (the fused-in-scan variant would
-    drag ``bytes`` through the exchange; at 100 TB that shuffle IS the job —
-    multimodal doctrine: never explode binary columns through a shuffle).
-    The resulting violations are unioned with the single-scan pass instead
-    of riding it; semantics are identical because the authority key is
-    unique (same contract as the fused path).
+    """Violation rows of referential rules from a PRUNED (key, join_on,
+    columns) projection, so the join carries a few scalars per row — never
+    the full record and in particular never the binary payload (multimodal
+    doctrine: never explode binary columns through a shuffle). The rows
+    union with the single-scan pass.
 
     ``rules`` must share the same authority table and join key (the engine
     groups them): ONE join serves every rule in the group, so a catalog with
-    N rules against one index pays the join once."""
+    N rules against one index pays the join once. Authority keys must be
+    unique (a non-unique authority would multiply rows) — same contract as
+    the reference's one-CRS-per-layer API. ``join_on`` lets FK-style lookups
+    join on the FK column while reporting violations against the record
+    key."""
     join_on = rule_join_key(rules[0], key_col)
     cols = list(dict.fromkeys([key_col, join_on] + [str(r.get("column")) for r in rules]))
     pruned = df.selectExpr(*[_ident(c) for c in cols])

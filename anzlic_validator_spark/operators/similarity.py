@@ -79,28 +79,6 @@ def brute_force_topk(
     )
 
 
-def srp_hash(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection bucket id: one bit per hyperplane, all Catalyst.
-
-    Fine for a handful of planes; for bits × tables hyperplanes use
-    ``make_srp_buckets_udf`` — one vectorized matmul instead of dozens of
-    per-row literal-array folds (measured ~3× on the LSH top-k)."""
-    bits = []
-    for j, p in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(F.when(dot(vec, arr) >= 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def _planes(dim: int, bits: int, table: int, seed: int) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (driver-side, tiny)."""
-    rng = np.random.Generator(np.random.Philox(key=np.uint64(seed) + np.uint64(table)))
-    return rng.standard_normal((bits, dim)).tolist()
-
-
 def make_srp_buckets_udf(dim: int, bits: int, n_tables: int, seed: int):
     """Arrow pandas UDF: embedding → array<int> of one bucket id per table.
 

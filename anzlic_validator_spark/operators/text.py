@@ -45,12 +45,6 @@ def subword_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_PRETOKEN_PATTERN))
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    toks = tokens(col)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
-    return hits.cast("double") / F.size(toks).cast("double")
-
-
 def predict_language_from_tokens(toks: Column, threshold: float = 0.05) -> Column:
     """Pick the language whose stopword ratio is highest (and above the
     threshold); 'unk' otherwise.

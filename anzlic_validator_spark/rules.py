@@ -54,7 +54,6 @@ _RULE_KEYS: dict[str, set[str]] = {
         "ref_key",
         "ref_column",
         "on_missing",
-        "broadcast",
     },
     "referential_mapped": {
         "column",
@@ -66,7 +65,6 @@ _RULE_KEYS: dict[str, set[str]] = {
         "mapping",
         "on_missing",
         "on_unmapped",
-        "broadcast",
     },
     "not_both": {"columns"},
     "equal_fields": {"columns"},
@@ -135,7 +133,7 @@ class RuleCatalog:
 
     def catalog_hash(self) -> str:
         """Stable fingerprint — the 'rule_versions' recorded in the
-        checkpoint manifest (north_rule); changing the catalog invalidates
+        checkpoint manifest; changing the catalog invalidates
         completed partitions."""
         blob = json.dumps(
             [(r.rule_id, r.type, r.order, r.spec) for r in self.rules],

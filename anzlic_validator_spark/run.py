@@ -1,4 +1,4 @@
-"""spark-submit entry point — the batch sweep (north_rule).
+"""spark-submit entry point — the batch sweep.
 
 The Spark re-expression of the reference's CLI batch path
 (scripts/validate.py:419-484 process/main: getopt flags → source select →
@@ -21,10 +21,10 @@ Outputs under --output:
     manifest.json checkpoint: per-bucket lineage (snapshot id, file list,
                   rule versions) + metrics (rows, violations, wall-clock)
 
-A rerun with the same catalog + input skips completed buckets; changing
-either revalidates only what changed semantics require (everything, since
-both are global fingerprints — per-bucket snapshots arrive with real Iceberg
-partition metadata).
+A rerun with the same catalog + input skips completed buckets. A changed
+catalog revalidates every bucket; a changed input revalidates the buckets
+whose fingerprint moved (manifest.input_snapshots_per_bucket: one bucket
+for a ``bucket=N``-partitioned input, every bucket otherwise).
 """
 
 from __future__ import annotations
@@ -37,9 +37,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from anzlic_validator_spark.engine import dataset_rule_violations, is_record_key, validate
-from anzlic_validator_spark.manifest import Manifest, input_snapshot, input_snapshots_per_bucket
-from anzlic_validator_spark.rules import Rule, RuleCatalog, load_catalog
+from anzlic_validator_spark.engine import is_record_key, table_global, validate
+from anzlic_validator_spark.manifest import Manifest, input_snapshots_per_bucket, run_snapshot
+from anzlic_validator_spark.rules import RuleCatalog, load_catalog
 from anzlic_validator_spark.schema import VIOLATION_FIELDS
 from anzlic_validator_spark.sources.tables import read_clips
 from anzlic_validator_spark.state_log import StateLog
@@ -73,21 +73,6 @@ def bucket_col(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets)).cast("int")
 
 
-def _is_global_rule(rule: Rule, df: DataFrame) -> bool:
-    """Rules whose groups are NOT functions of the record key: their
-    violations can span hash buckets, so they are evaluated over the FULL
-    (unpruned) input on every run and routed to the reserved bucket."""
-    if rule.type == "drift":
-        return True
-    if rule.type == "all_of":
-        if rule.get("group_by"):
-            return True
-        col = str(rule.get("column"))
-        # array-typed all_of is a per-record check (record-keyed → bucket-safe)
-        return not dict(df.dtypes).get(col, "").startswith("array")
-    return False
-
-
 def run_validation(
     spark: SparkSession,
     df: DataFrame,
@@ -112,7 +97,7 @@ def run_validation(
     summary = {
         "run_id": uuid.uuid4().hex[:12],
         "rule_versions": rule_versions,
-        "snapshot_id": input_snapshot(input_paths or []),
+        "snapshot_id": run_snapshot(snapshots),
         "n_buckets": n_buckets,
         "pending_buckets": pending,
         "skipped_buckets": sorted(set(range(n_buckets)) - set(pending)),
@@ -125,7 +110,8 @@ def run_validation(
     # table-global rules (drift; grouped/scalar all_of) are split out: they
     # must see the UNPRUNED input even on a partial resume, and their
     # synthetic keys route to the reserved bucket, never a key-hash bucket
-    global_rules = [r for r in catalog.dataset_rules if _is_global_rule(r, df)]
+    dtypes = dict(df.dtypes)
+    global_rules = [r for r in catalog.dataset_rules if table_global(r, dtypes)]
     local_catalog = RuleCatalog(
         rules=tuple(r for r in catalog.rules if r not in global_rules), version=catalog.version
     )
@@ -144,11 +130,8 @@ def run_validation(
     result.violations_ranked = result.violations_ranked.persist()
     global_viol = None
     if global_rules:
-        parts = [dataset_rule_violations(df_full, r, key_col, refs) for r in global_rules]
-        global_viol = parts[0]
-        for p in parts[1:]:
-            global_viol = global_viol.unionByName(p)
-        global_viol = global_viol.persist()
+        global_catalog = RuleCatalog(rules=tuple(global_rules), version=catalog.version)
+        global_viol = validate(df_full, global_catalog, key_col=key_col).violations_ranked.persist()
 
     # only the touched buckets are overwritten; completed ones stay intact.
     # Partition dirs for pending buckets are DELETED first: dynamic overwrite

@@ -1,14 +1,13 @@
 """Fixed logical schemas.
 
 The reference pins a 68-XPath logical schema over schema-flexible XML
-(linz_metadata.py:192-201); here the input table shape is pinned by
-BASELINE.json ``input_hint`` and violations/verdicts get fixed schemas so
-goldens are byte-comparable.
+(linz_metadata.py:192-201); here the input table shape is pinned and
+violations/verdicts get fixed schemas so goldens are byte-comparable.
 """
 
 from pyspark.sql import types as T
 
-# Input table per input_hint: audio clip + transcript pairs.
+# Input table: audio clip + transcript pairs.
 CLIPS_SCHEMA = T.StructType(
     [
         T.StructField("clip_id", T.StringType(), True),
@@ -51,7 +50,7 @@ VIOLATION_STRUCT = T.StructType(
 
 # Per-record verdict: pass/fail + first violation in catalog order
 # (reference is fail-fast with fixed rule order, errorChecker.py:573-654 —
-# the headline verdict is the min-rule-order violation, SURVEY §2.3).
+# the headline verdict is the min-rule-order violation).
 VERDICT_SCHEMA = T.StructType(
     [
         T.StructField("key", T.StringType(), True),

@@ -7,69 +7,70 @@ Iceberg jars at all. That id is an exact, engine-independent change signal:
 any commit bumps it, no commit leaves it unchanged — strictly stronger than
 the file-stat (size, mtime) fingerprints the manifest falls back to for
 plain parquet dirs (mtimes suffer clock skew and same-second rewrites).
+The metadata is listed and read through Hadoop ``FileSystem``
+(``state_log``), so a table may be a plain path or any Hadoop URI.
 
 Granularity ladder (manifest.py integrates all three):
 1. runtime present → per-partition fingerprints from the ``#files``
    metadata table: a single-partition append revalidates exactly one bucket;
 2. metadata JSON only (this module, no jars) → table-level snapshot id:
    exact skip-if-no-change, all-bucket revalidation on any commit;
-3. plain parquet dir → file-stat walk (manifest._walk_entries).
+3. plain parquet dir → file-stat walk (``state_log.file_stats``).
 
 Reference analog: the fetch-history pickle that makes resume exact
-(/root/reference/scripts/resolve.py:150-187).
+(scripts/resolve.py:150-187).
 """
 
 from __future__ import annotations
 
 import json
 import logging
-import os
 import re
+
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import SparkSession
+
+from anzlic_validator_spark.state_log import _filesystem, _read_bytes, _session, read_json
 
 log = logging.getLogger(__name__)
 
 _META_FILE = re.compile(r"^(?:v(\d+))?.*\.metadata\.json$")
 
 
-def _metadata_dir(path: str) -> str | None:
-    d = os.path.join(path, "metadata")
-    return d if os.path.isdir(d) else None
-
-
-def latest_metadata_file(path: str) -> str | None:
+def latest_metadata_file(path: str, spark: SparkSession | None = None) -> str | None:
     """The current ``*.metadata.json`` of an Iceberg table dir, else None.
 
     Prefers ``version-hint.text`` (Hadoop catalog); falls back to the
     highest version prefix, then newest mtime (UUID-named metadata from
     other catalogs).
     """
-    d = _metadata_dir(path)
-    if d is None:
+    spark = _session(spark)
+    d = f"{path.rstrip('/')}/metadata"
+    fs, hpath = _filesystem(spark, d)
+    if not fs.exists(hpath(d)):
         return None
-    hint = os.path.join(d, "version-hint.text")
-    if os.path.exists(hint):
+    hint = _read_bytes(spark, fs, hpath(f"{d}/version-hint.text"))
+    if hint is not None:
         try:
-            with open(hint, encoding="utf-8") as fh:
-                v = int(fh.read().strip())
-            cand = os.path.join(d, f"v{v}.metadata.json")
-            if os.path.exists(cand):
+            cand = f"{d}/v{int(hint.decode('utf-8').strip())}.metadata.json"
+            if fs.exists(hpath(cand)):
                 return cand
-        except (ValueError, OSError):
+        except ValueError:
             pass
-    best: tuple[int, float, str] | None = None
-    for name in os.listdir(d):
+    best: tuple[int, int, str] | None = None
+    for st in fs.listStatus(hpath(d)):
+        name = st.getPath().getName()
         m = _META_FILE.match(name)
         if not m:
             continue
-        fp = os.path.join(d, name)
         ver = int(m.group(1)) if m.group(1) else -1
-        key = (ver, os.stat(fp).st_mtime, fp)
+        key = (ver, st.getModificationTime(), f"{d}/{name}")
         if best is None or key > best:
             best = key
     return best[2] if best else None
 
 
-def iceberg_snapshot(path: str) -> dict | None:
+def iceberg_snapshot(path: str, spark: SparkSession | None = None) -> dict | None:
     """{"snapshot_id", "sequence_number", "schema_id", "spec_id",
     "metadata_file"} for an Iceberg table dir, None if ``path`` is not one
     (or metadata is unreadable — callers then fall back to file-stat
@@ -77,15 +78,14 @@ def iceberg_snapshot(path: str) -> dict | None:
     METADATA-ONLY commit (column rename/type change, new partition spec)
     still invalidates — snapshot id alone would miss it — while plain data
     appends leave them untouched (preserving per-partition granularity)."""
-    mf = latest_metadata_file(path)
+    mf = latest_metadata_file(path, spark)
     if mf is None:
         return None
     try:
-        with open(mf, encoding="utf-8") as fh:
-            doc = json.load(fh)
-    except (OSError, json.JSONDecodeError):
+        doc = read_json(mf, spark)
+    except (Py4JJavaError, json.JSONDecodeError):
         return None
-    snap_id = doc.get("current-snapshot-id")
+    snap_id = (doc or {}).get("current-snapshot-id")
     if snap_id in (None, -1):
         return None
     return {
@@ -93,7 +93,7 @@ def iceberg_snapshot(path: str) -> dict | None:
         "sequence_number": int(doc.get("last-sequence-number", 0)),
         "schema_id": int(doc.get("current-schema-id", 0)),
         "spec_id": int(doc.get("default-spec-id", 0)),
-        "metadata_file": os.path.basename(mf),
+        "metadata_file": mf.rsplit("/", 1)[-1],
     }
 
 
@@ -147,7 +147,7 @@ def iceberg_partition_fingerprints(spark, path: str, n_buckets: int) -> dict[int
 def _bucket_fingerprints_from_files(files, n_buckets: int) -> dict[int, str] | None:
     """The ``#files``-branch aggregation, factored off the runtime read so
     it is testable against a synthetic metadata-shaped DataFrame in images
-    without Iceberg jars (VERDICT r04 #6): schema qualification (identity
+    without Iceberg jars: schema qualification (identity
     ``bucket`` partition field), executor-side order-insensitive per-bucket
     fingerprints, and the residue rule — files in out-of-range/NULL buckets
     poison EVERY bucket's fingerprint, because such files are outside the
@@ -166,9 +166,8 @@ def _bucket_fingerprints_from_files(files, n_buckets: int) -> dict[int, str] | N
             "xxhash64(file_path, file_size_in_bytes, record_count) AS h",
         )
         # sum as decimal(38,0): a LONG sum of 64-bit hashes overflows (and
-        # under ANSI mode ABORTS) with as few as two files — caught by the
-        # runtime-free #files test the moment it existed (r05); decimal
-        # keeps the order-insensitive sum exact to ~10^19 files
+        # under ANSI mode ABORTS) with as few as two files; decimal keeps
+        # the order-insensitive sum exact to ~10^19 files
         .groupBy("bucket")
         .agg(
             F.sum(F.col("h").cast("decimal(38,0)")).alias("hsum"),

@@ -96,11 +96,18 @@ def read_json(path: str, spark: SparkSession | None = None) -> dict | None:
 
 
 def _read_json(spark: SparkSession, fs, hpath, path: str) -> dict | None:
-    if not fs.exists(hpath(path)):
+    data = _read_bytes(spark, fs, hpath(path))
+    return None if data is None else json.loads(data)
+
+
+def _read_bytes(spark: SparkSession, fs, p) -> bytes | None:
+    """The bytes of the file at Hadoop path ``p``, or None when it does
+    not exist."""
+    if not fs.exists(p):
         return None
-    stream = fs.open(hpath(path))
+    stream = fs.open(p)
     try:
-        return json.loads(bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)))
+        return bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:
         stream.close()
 

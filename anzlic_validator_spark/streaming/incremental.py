@@ -27,25 +27,18 @@ new, then stop, the streaming twin of the updater's resumable sweep
 
 from __future__ import annotations
 
+import dataclasses
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from anzlic_validator_spark.engine import ValidationResult, validate
+from anzlic_validator_spark.engine import table_global, validate
 from anzlic_validator_spark.errors import InvalidConfigException
-from anzlic_validator_spark.operators.uniqueness import (
-    tuple_keys,
-    unique_violations,
-    violation_cols,
-)
+from anzlic_validator_spark.operators.uniqueness import tuple_keys, violation_cols
 from anzlic_validator_spark.rules import Rule, RuleCatalog
 from anzlic_validator_spark.schema import CLIPS_SCHEMA
 from anzlic_validator_spark.state_log import StateLog
-
-# table-global rules whose group is not a function of the record key —
-# micro-batch scope would silently change their meaning
-CROSS_BATCH_UNSAFE = {"all_of", "drift"}
 
 _SEEN_SCHEMA = "rule_id string, k string, first_epoch long"
 
@@ -76,8 +69,14 @@ def validate_stream(
     ``{output_path}/`` partitioned by epoch (idempotent per-epoch
     overwrite). Use ``q.awaitTermination()`` (availableNow) or ``q.stop()``.
 
-    Raises InvalidConfigException for table-global rules (CROSS_BATCH_UNSAFE)
-    BEFORE the stream starts.
+    Each micro-batch runs the full catalog through ``validate()``, whose
+    ``unique`` pass reports the batch's own duplicates (``count=``); the
+    stream adds only the duplicates against prior epochs
+    (``seen_in_epoch=``) and the epoch's write to the seen-keys log.
+
+    Raises InvalidConfigException for table-global rules
+    (``engine.table_global`` over ``CLIPS_SCHEMA``) BEFORE the stream
+    starts.
 
     Seen-keys log folding: when ``StateLog.fold_due`` fires at
     ``seen_log_max_partitions``, the epoch's keys are written as a fold of
@@ -87,7 +86,8 @@ def validate_stream(
     ``seen_log_max_partitions`` units (two when it is 1) however long the
     stream lives, and ``first_epoch`` reporting survives folding.
     """
-    bad = [r.rule_id for r in catalog.rules if r.type in CROSS_BATCH_UNSAFE]
+    dtypes = {f.name: f.dataType.simpleString() for f in CLIPS_SCHEMA.fields}
+    bad = [r.rule_id for r in catalog.rules if table_global(r, dtypes)]
     if bad:
         raise InvalidConfigException(
             f"rules {bad} are table-global; evaluating them per micro-batch would "
@@ -95,9 +95,6 @@ def validate_stream(
             "which routes them to the reserved bucket over the full input"
         )
     unique_rules = [r for r in catalog.rules if r.type == "unique"]
-    local_catalog = RuleCatalog(
-        rules=tuple(r for r in catalog.rules if r.type != "unique"), version=catalog.version
-    )
     seen_path = f"{output_path}/_seen_keys"
 
     reader = spark.readStream.schema(CLIPS_SCHEMA)
@@ -107,7 +104,7 @@ def validate_stream(
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
-        result = validate(batch_df, local_catalog, key_col=key_col, refs=refs or {})
+        result = validate(batch_df, catalog, key_col=key_col, refs=refs)
         ranked = result.violations_ranked
         seen_parts = []
         seen = StateLog(seen_path, s) if unique_rules else None
@@ -116,8 +113,6 @@ def validate_stream(
         inputs = seen.live_inputs(epoch_id) if seen else []
         prior = s.read.schema(_SEEN_SCHEMA).parquet(*inputs) if inputs else None
         for rule in unique_rules:
-            # intra-batch duplicates: the same aggregate as batch mode
-            ranked = ranked.unionByName(unique_violations(batch_df, rule, key_col))
             bk = tuple_keys(batch_df, rule, key_col)
             if prior is not None:
                 # cross-batch duplicates: batch keys seen in ANY prior epoch.
@@ -144,9 +139,7 @@ def validate_stream(
             seen_parts.append(
                 bk.select(F.lit(rule.rule_id).alias("rule_id"), F.col("k")).distinct()
             )
-        full = ValidationResult(
-            df=batch_df, key_col=key_col, catalog=catalog, violations_ranked=ranked.persist()
-        )
+        full = dataclasses.replace(result, violations_ranked=ranked.persist())
         _write_epoch(full.violations, epoch_id, f"{output_path}/violations")
         _write_epoch(full.verdicts, epoch_id, f"{output_path}/verdicts")
         full.violations_ranked.unpersist()

@@ -7,6 +7,8 @@ just executed and counted.
 
 Usage: python scripts/check_oracles.py [name|group ...]
 
+An unknown name or group runs nothing, lists the valid ones and exits 2.
+
 A group name stands for its queries: ``state`` for the state-dependent
 oracles, ``validate`` for the queries that run through ``validate()``.
 """
@@ -49,9 +51,16 @@ def norm(v):
 def main(names: list[str]) -> int:
     from pyspark.sql import SparkSession
 
-    names = [q for n in names for q in GROUPS.get(n, [n])]
-
     import __spark_entry__ as e
+
+    qs = e.queries()
+    unknown = [n for n in names if n not in GROUPS and n not in qs]
+    if unknown:
+        print(f"unknown names {unknown}", file=sys.stderr)
+        print(f"groups: {' '.join(sorted(GROUPS))}", file=sys.stderr)
+        print(f"names: {' '.join(sorted(qs))}", file=sys.stderr)
+        return 2
+    names = [q for n in names for q in GROUPS.get(n, [n])]
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -67,7 +76,6 @@ def main(names: list[str]) -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
-    qs = e.queries()
     oracles = e.oracle_sql()
     failures = 0
     for name, fn in qs.items():

@@ -135,6 +135,30 @@ def test_unknown_column_rejected(spark, demo_df):
         validate(demo_df, parse_catalog({"rules": [{"type": "exists", "column": "nope"}]}), "k")
 
 
+@pytest.mark.parametrize(
+    "spec",
+    [
+        {"type": "unique", "columns": ["nope"]},
+        {"type": "all_of", "column": "nope", "values": ["a"]},
+        {"type": "all_of", "column": "kind", "values": ["a"], "group_by": ["nope"]},
+        {"type": "drift", "column": "nope", "baseline": "unused.json"},
+        {"type": "referential", "column": "nope", "key": "k", "ref_table": "t",
+         "ref_key": "k", "ref_column": "v"},
+        {"type": "referential", "column": "name", "key": "k", "join_on": "nope",
+         "ref_table": "t", "ref_key": "k", "ref_column": "v"},
+    ],
+    ids=["unique", "all_of", "all_of_group_by", "drift", "referential", "join_on"],
+)
+def test_unknown_column_in_dataset_rule_rejected(spark, demo_df, spec):
+    """Dataset rules get the same up-front column check as row rules, not a
+    Spark AnalysisException from inside the plan."""
+    from anzlic_validator_spark.errors import InvalidConfigException
+
+    refs = {"t": spark.createDataFrame([("ok", "v")], "k string, v string")}
+    with pytest.raises(InvalidConfigException, match="unknown columns.*nope"):
+        validate(demo_df, parse_catalog({"rules": [spec]}), "k", refs=refs)
+
+
 def test_format_rule(spark):
     df = spark.createDataFrame([Row(k="g", d="2020-01-02"), Row(k="b", d="2020/01/02")])
     cat = parse_catalog(
@@ -167,8 +191,8 @@ def _exchanges_carrying(df, colname):
 
 def test_nonbroadcast_referential_never_shuffles_bytes(spark):
     """A sort-merge referential join must not drag the binary payload
-    through its exchange: the non-broadcast path runs on a pruned
-    (key, column) projection while the audio pass rides the single scan."""
+    through its exchange: the join runs on a pruned (key, column)
+    projection while the audio pass rides the single scan."""
     from anzlic_validator_spark.synth import clips, transcript_index
 
     df = clips(spark, 120, seed=42)
@@ -198,33 +222,31 @@ def test_nonbroadcast_referential_never_shuffles_bytes(spark):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
-def test_broadcast_referential_stays_fused(spark):
-    """broadcast=True keeps the referential check on the single scan (no
-    extra pass, no exchange at all for the join)."""
+def test_small_authority_broadcasts_without_a_hint(spark):
+    """A small authority is broadcast by the planner from its size alone:
+    the join strategy is the planner's call, and a catalog asking for it
+    with a ``broadcast`` key fails at parse time."""
+    from anzlic_validator_spark.errors import InvalidConfigException
     from anzlic_validator_spark.synth import clips, transcript_index
 
     df = clips(spark, 120, seed=42, with_audio=False)
     idx = transcript_index(spark, 120, seed=42)
-    cat = parse_catalog(
-        {
-            "rules": [
-                {
-                    "id": "t.ref",
-                    "type": "referential",
-                    "column": "transcript",
-                    "key": "clip_id",
-                    "broadcast": True,
-                    "ref_table": "transcript_index",
-                    "ref_key": "clip_id",
-                    "ref_column": "transcript_ref",
-                },
-            ]
-        }
-    )
+    rule = {
+        "id": "t.ref",
+        "type": "referential",
+        "column": "transcript",
+        "key": "clip_id",
+        "ref_table": "transcript_index",
+        "ref_key": "clip_id",
+        "ref_column": "transcript_ref",
+    }
+    cat = parse_catalog({"rules": [rule]})
     v = validate(df, cat, key_col="clip_id", refs={"transcript_index": idx}).violations
+    v.collect()
     plan = v._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert v.count() >= 0
+    assert "BroadcastHashJoin" in plan
+    with pytest.raises(InvalidConfigException, match="broadcast"):
+        parse_catalog({"rules": [{**rule, "broadcast": True}]})
 
 
 def test_any_of_disjunction(spark):

@@ -219,7 +219,7 @@ def test_uri_input_paths_fingerprint_their_files(spark, tmp_path):
 
 def test_bucket_count_mismatch_rejected(spark, tmp_path):
     m = Manifest.load(str(tmp_path), n_buckets=8)
-    m.record_run("r1", "rv", "snap", [], {0: {"rows": 1}}, 0.1)
+    m.record_run("r1", "rv", {0: "snap"}, [], {0: {"rows": 1}}, 0.1)
     with pytest.raises(ValueError, match="n_buckets"):
         Manifest.load(str(tmp_path), n_buckets=16)
 
@@ -251,6 +251,37 @@ def test_removed_global_rule_clears_reserved_bucket(spark, data_dir, tmp_path):
     assert s2["table_violations"] == 0
     vdf2 = read_violations(spark, str(out))
     assert vdf2.where(vdf2.bucket == -1).count() == 0
+
+
+def test_table_global_rule_over_unknown_column_rejected(spark, data_dir, tmp_path):
+    """A table-global rule gets the same up-front column check as every
+    other rule: InvalidConfigException before any output is written."""
+    from anzlic_validator_spark.errors import InvalidConfigException
+
+    out = tmp_path / "out"
+    alt = tmp_path / "bad_global.yaml"
+    alt.write_text(
+        "version: 1\n"
+        "rules:\n"
+        "  - {id: clip_id.format, type: format, column: clip_id, pattern: '^clip-'}\n"
+        "  - {id: nope.all_of, type: all_of, column: nope, values: [x]}\n"
+    )
+    with pytest.raises(InvalidConfigException, match="unknown columns.*nope"):
+        _run(spark, data_dir, out, catalog=str(alt))
+    assert not out.exists()
+
+
+def test_summary_snapshot_id_is_the_manifest_run_entry(spark, data_dir, tmp_path):
+    out = tmp_path / "out"
+    alt = tmp_path / "rules.yaml"
+    alt.write_text(
+        "version: 1\n"
+        "rules:\n"
+        "  - {id: clip_id.format, type: format, column: clip_id, pattern: '^clip-'}\n"
+    )
+    s = _run(spark, data_dir, out, catalog=str(alt))
+    doc = json.loads((out / "manifest.json").read_text())
+    assert s["snapshot_id"] == doc["runs"][-1]["snapshot_id"]
 
 
 def test_vendored_iceberg_metadata_fixture(tmp_path):
@@ -353,6 +384,21 @@ def test_iceberg_snapshot_metadata_layer(tmp_path):
     assert input_snapshot([str(t)]) != f1
     b2 = input_snapshots_per_bucket([str(t)], 4)
     assert all(b2[i] != b1[i] for i in range(4))
+
+
+def test_iceberg_snapshot_read_from_a_uri(spark, tmp_path):
+    """A table given as a ``file://`` URI reads the same snapshot as its
+    plain path: the metadata goes through Hadoop FileSystem."""
+    from anzlic_validator_spark.sources.iceberg_meta import iceberg_snapshot
+
+    t = tmp_path / "tbl"
+    _mk_iceberg_meta(t, 2, 1111, 5)
+    _mk_iceberg_meta(t, 3, 2222, 6, hint=False)
+    assert iceberg_snapshot(t.as_uri())["snapshot_id"] == 1111
+    assert iceberg_snapshot(t.as_uri()) == iceberg_snapshot(str(t))
+    (t / "metadata" / "version-hint.text").unlink()
+    assert iceberg_snapshot(t.as_uri()) == iceberg_snapshot(str(t))
+    assert iceberg_snapshot(t.as_uri())["snapshot_id"] == 2222
 
 
 def test_iceberg_latest_metadata_without_hint(tmp_path):
