@@ -111,6 +111,13 @@ def table_global(rule: Rule, dtypes: dict[str, str]) -> bool:
     return False
 
 
+def crosses_buckets(rule: Rule, key_col: str) -> bool:
+    """A ``unique`` rule over columns other than exactly the key: its
+    duplicates can sit in different key-hash buckets, so a batch resume
+    revalidates every bucket once any bucket is pending."""
+    return rule.type == "unique" and [str(c) for c in rule.get("columns")] != [key_col]
+
+
 @dataclass
 class ValidationResult:
     """Lazy handles over the validation plan — nothing here triggers a job."""
@@ -124,43 +131,57 @@ class ValidationResult:
         """Public violation rows (key, rule_id, observed, expected)."""
         return self.violations_ranked.select(*VIOLATION_FIELDS)
 
+    def tagged(self, *carry: str) -> DataFrame:
+        """The input of the verdict fold: one marker row per record (``__v``
+        NULL) UNION one row per record-key violation (``__v`` =
+        struct(rule_order, rule_id)), with the violation columns ``carry``
+        (NULL on markers). A NULL record key stays one key."""
+        records = self.df.selectExpr(
+            f"CAST({_ident(self.key_col)} AS STRING) AS key",
+            "CAST(NULL AS STRUCT<rule_order: INT, rule_id: STRING>) AS __v",
+            *(f"CAST(NULL AS STRING) AS {_ident(c)}" for c in carry),
+        )
+        viol = self.violations_ranked.where(is_record_key("key")).selectExpr(
+            "key", "struct(rule_order, rule_id) AS __v", *map(_ident, carry)
+        )
+        return records.unionByName(viol)
+
     @property
     def verdicts(self) -> DataFrame:
         """Per-record verdict: passed + first violation in catalog order.
 
         Reserved-key violations ('__table__', '__group__|...') are excluded
         from per-record verdicts but present in .violations.
-
-        Shape: records (as NULL markers) and violation rows UNION into ONE
-        groupBy on the key — min() skips the NULL markers and count(col)
-        counts only violation rows, so a single map-side-combined exchange
-        yields every key's verdict with no distinct and no join. NULL keys
-        are one group.
-
-        Planner note: min over a struct marker only plans as a
-        SortAggregate — non-primitive aggregation buffers are not
-        hash-aggregatable — and a hash-aggregatable encoding would need the
-        rule_id tie-break collapsed into a primitive, which no faithful
-        encoding provides.
         """
-        records = self.df.selectExpr(
-            f"CAST({_ident(self.key_col)} AS STRING) AS key",
-            "CAST(NULL AS STRUCT<rule_order: INT, rule_id: STRING>) AS __v",
+        return fold_verdicts(self.tagged())
+
+
+def fold_verdicts(tagged: DataFrame, *by: str) -> DataFrame:
+    """The verdict of each ``(*by, key)`` group of ``tagged``
+    (``ValidationResult.tagged``): passed, first_rule_id, n_violations.
+
+    Records (as NULL markers) and violation rows meet in ONE groupBy on the
+    key: min() skips the NULL markers and count(col) counts only violation
+    rows, so one aggregate yields every key's verdict with no distinct and
+    no join. ``by`` holds columns that are functions of the key (the
+    output bucket); rows arrive grouped by them, in key order.
+
+    Planner note: min over a struct marker only plans as a SortAggregate —
+    non-primitive aggregation buffers are not hash-aggregatable — and a
+    hash-aggregatable encoding would need the rule_id tie-break collapsed
+    into a primitive, which no faithful encoding provides.
+    """
+    return (
+        tagged.groupBy(*by, "key")
+        .agg(F.expr("min(__v) AS __first"), F.expr("count(__v) AS n_violations"))
+        .selectExpr(
+            *by,
+            "key",
+            "__first IS NULL AS passed",
+            "__first.rule_id AS first_rule_id",
+            "n_violations",
         )
-        viol = self.violations_ranked.where(is_record_key("key")).selectExpr(
-            "key", "struct(rule_order, rule_id) AS __v"
-        )
-        return (
-            records.unionByName(viol)
-            .groupBy("key")
-            .agg(F.expr("min(__v) AS __first"), F.expr("count(__v) AS n_violations"))
-            .selectExpr(
-                "key",
-                "__first IS NULL AS passed",
-                "__first.rule_id AS first_rule_id",
-                "n_violations",
-            )
-        )
+    )
 
 
 def validate(
@@ -218,6 +239,10 @@ def _rule_columns(rule: Rule, key_col: str) -> list[str]:
             cols.extend(str(c) for c in rule.get(key))
     if rule.type in ("referential", "referential_mapped"):
         cols.append(rule_join_key(rule, key_col))
+    if rule.type == "audio_decode":
+        from anzlic_validator_spark.functions.audio import AUDIO_COLUMNS
+
+        cols.extend(str(rule.get(k, d)) for k, d in AUDIO_COLUMNS.items())
     if rule.type == "any_of":
         for sub in rule.get("rules") or []:
             cols.extend(_rule_columns(Rule("", str(sub.get("type")), rule.order, dict(sub)), key_col))

@@ -256,6 +256,15 @@ def make_decode_check_udf(ref_seed: int | None):
 
 # ------------------------------------------------------------- violations
 
+# the column keys of an audio_decode rule and their defaults
+AUDIO_COLUMNS = {
+    "bytes_column": "bytes",
+    "codec_column": "codec",
+    "sr_column": "sr_hz",
+    "dur_column": "dur_ms",
+}
+
+
 def augment_audio(df: DataFrame, rule: Rule, key_col: str) -> tuple[DataFrame, list[str]]:
     """Attach the decode-check struct column and return nullable violation
     struct expressions (SQL text), so the audio pass rides the SAME single
@@ -269,10 +278,7 @@ def augment_audio(df: DataFrame, rule: Rule, key_col: str) -> tuple[DataFrame, l
       <id>.dur     decoded duration ≠ dur_ms column (± dur_tol_ms)
       <id>.snr     decoded PCM vs seeded reference below snr_db_min
     """
-    bytes_col = str(rule.get("bytes_column", "bytes"))
-    codec_col = str(rule.get("codec_column", "codec"))
-    sr_col = str(rule.get("sr_column", "sr_hz"))
-    dur_col = str(rule.get("dur_column", "dur_ms"))
+    bytes_col, codec_col, sr_col, dur_col = (str(rule.get(k, d)) for k, d in AUDIO_COLUMNS.items())
     snr_min = rule.get("snr_db_min", 30.0)
     tol = float(rule.get("dur_tol_ms", 2.0))
     ref_seed = rule.get("ref_seed")

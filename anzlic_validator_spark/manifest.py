@@ -14,11 +14,15 @@ The unit of resume is the deterministic hash bucket of the key
 physical layouts, so a job restarted at 4N executors skips exactly the
 buckets the N-executor run completed.
 
-Scope: rules whose groups are functions of the key (uniqueness: duplicate
-keys hash to the same bucket) resume per bucket. A table-global rule
-(``engine.table_global``: drift, grouped or scalar all_of) has groups
-spanning buckets, so the batch sweep re-evaluates it over the full input
-on every run into a reserved bucket outside the resume accounting.
+Scope: rules whose groups are functions of the key (uniqueness on the
+key: duplicate keys hash to the same bucket) resume per bucket. A
+``unique`` rule over other columns (``engine.crosses_buckets``) has
+duplicates spanning buckets, so the batch sweep revalidates every bucket
+once any is pending. A table-global rule (``engine.table_global``: drift,
+grouped or scalar all_of) has groups spanning buckets, so the batch sweep
+re-evaluates it over the full input on every run into a reserved bucket
+outside the resume accounting. The authority tables a catalog reads fold
+into every bucket's fingerprint (``authority_entries``).
 """
 
 from __future__ import annotations
@@ -27,8 +31,11 @@ import hashlib
 import json
 import re
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Any
+
+from py4j.java_gateway import is_instance_of
 
 from anzlic_validator_spark.state_log import StateLog, file_stats
 
@@ -65,8 +72,68 @@ def input_snapshot(paths: list[str]) -> str:
 _BUCKET_DIR = re.compile(r"(?:^|/)bucket=(-?\d+)(?:/|$)")
 
 
+def _ref_sources(ref) -> tuple[list, list[str]] | None:
+    """What ``ref`` reads: the (path, length, mtime ms) of each file in its
+    file relations, as Spark listed them when ``ref`` was created, and the
+    names of the other DataSource V2 tables (an Iceberg table loaded by
+    path is named by its path). None when it reads anything else: rows
+    built in memory, an RDD, a source with no file listing."""
+    gateway = ref.sparkSession.sparkContext._gateway
+    leaves = ref._jdf.queryExecution().analyzed().collectLeaves()
+    files, tables = [], []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRelation" and is_instance_of(
+            gateway, leaf.relation(), "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+        ):
+            index = leaf.relation().location()
+        elif kind == "DataSourceV2Relation" and is_instance_of(
+            gateway, leaf.table(), "org.apache.spark.sql.execution.datasources.v2.FileTable"
+        ):
+            index = leaf.table().fileIndex()
+        elif kind == "DataSourceV2Relation":
+            tables.append(str(leaf.table().name()))
+            continue
+        else:
+            return None
+        statuses = index.allFiles()
+        for j in range(statuses.size()):
+            st = statuses.apply(j)
+            files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return sorted(files), tables
+
+
+def authority_entries(refs: dict, spark=None) -> list:
+    """Fingerprint entries of the authority tables ``refs`` (name →
+    DataFrame) a catalog reads.
+
+    A ref over files contributes the (path, length, mtime) of each file it
+    reads, from the listing Spark made when the ref was created (no second
+    listing); a ref over an Iceberg table its current snapshot. A ref with
+    anything else behind it — built in memory, or read from a source with
+    no file listing — contributes a fresh random entry, so every bucket is
+    pending on every run: no fingerprint can prove such a ref unchanged
+    (``semanticHash()`` differs between two identical
+    ``createDataFrame``s)."""
+    from anzlic_validator_spark.sources.iceberg_meta import iceberg_snapshot
+
+    entries: list = []
+    for name, ref in sorted(refs.items()):
+        sources = _ref_sources(ref)
+        snaps = [iceberg_snapshot(t, spark) for t in sources[1]] if sources else [None]
+        if None in snaps:
+            entries.append(("ref-unlisted", name, uuid.uuid4().hex))
+            continue
+        entries.append((
+            "ref", name, sources[0],
+            [(s["snapshot_id"], s["sequence_number"], s["schema_id"], s["spec_id"]) for s in snaps],
+        ))
+    return entries
+
+
 def input_snapshots_per_bucket(
-    paths: list[str], n_buckets: int, spark=None
+    paths: list[str], n_buckets: int, spark=None, refs: dict | None = None
 ) -> dict[int, str]:
     """Per-bucket snapshot fingerprints: when the input is
     bucket-partitioned (``bucket=N`` dirs, or an Iceberg table
@@ -90,6 +157,8 @@ def input_snapshots_per_bucket(
     outside range(n_buckets)) contribute to a shared residue fingerprint
     folded into EVERY bucket, so any unpartitioned change still invalidates
     all buckets — the safe fallback equals the global snapshot behavior.
+    The authority tables ``refs`` a catalog reads fold into the residue too
+    (``authority_entries``): a changed authority revalidates every bucket.
     """
     from anzlic_validator_spark.sources.iceberg_meta import (
         iceberg_partition_fingerprints,
@@ -124,6 +193,7 @@ def input_snapshots_per_bucket(
                 per_bucket[b].append((fp, size, mtime))
             else:
                 residue.append((fp, size, mtime))
+    residue.extend(authority_entries(refs or {}, spark))
     return {b: _fingerprint([per_bucket[b], residue]) for b in range(n_buckets)}
 
 

@@ -24,7 +24,23 @@ Outputs under --output:
 A rerun with the same catalog + input skips completed buckets. A changed
 catalog revalidates every bucket; a changed input revalidates the buckets
 whose fingerprint moved (manifest.input_snapshots_per_bucket: one bucket
-for a ``bucket=N``-partitioned input, every bucket otherwise).
+for a ``bucket=N``-partitioned input, every bucket otherwise); a changed
+authority table revalidates every bucket, as does any pending bucket when
+a ``unique`` rule spans columns other than the key.
+
+Output phase: one bucket exchange feeds every sink. The record-key
+violations and one marker row per record (``ValidationResult.tagged``)
+are tagged with their bucket, shuffled once by it (one writer per bucket,
+no more partitions than cores) and persisted (MEMORY_AND_DISK: the cost
+is one cached marker row per record besides the violations). The
+violations write and the verdict write both read that cache with no
+further exchange: violations sorted by (key, rule_order, rule_id) within
+each bucket, verdicts folded by (bucket, key) (``engine.fold_verdicts``,
+which emits them in key order), so the same input writes the same bytes.
+The per-bucket metrics fold from the verdict rows as they are written (an
+``Observation``), not from a re-read of ``verdicts/``. The two writes and
+the reserved-bucket write run side by side, one thread each, so their
+fixed plan, schedule and commit latencies overlap.
 """
 
 from __future__ import annotations
@@ -33,14 +49,16 @@ import argparse
 import sys
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel, inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from anzlic_validator_spark.engine import is_record_key, table_global, validate
+from anzlic_validator_spark.compile import _ident
+from anzlic_validator_spark.engine import crosses_buckets, fold_verdicts, table_global, validate
 from anzlic_validator_spark.manifest import Manifest, input_snapshots_per_bucket, run_snapshot
 from anzlic_validator_spark.rules import RuleCatalog, load_catalog
-from anzlic_validator_spark.schema import VIOLATION_FIELDS
 from anzlic_validator_spark.sources.tables import read_clips
 from anzlic_validator_spark.state_log import StateLog
 
@@ -70,7 +88,7 @@ def bucket_col(key_col: str, n_buckets: int):
     # cast to string BEFORE hashing: xxhash64(int) != xxhash64(string), and
     # output/manifest bucketing hashes the string-cast violation key — all
     # three bucket computations must agree for non-string key columns
-    return F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets)).cast("int")
+    return F.expr(f"CAST(pmod(xxhash64(CAST({_ident(key_col)} AS STRING)), {int(n_buckets)}) AS INT)")
 
 
 def run_validation(
@@ -90,10 +108,20 @@ def run_validation(
     # per-bucket fingerprints: a bucket-partitioned input (bucket=N dirs,
     # same key/bucket function) revalidates only the touched bucket; an
     # unpartitioned input degrades to the global-snapshot behavior because
-    # every file lands in the shared residue folded into each bucket
-    snapshots = input_snapshots_per_bucket(input_paths or [], n_buckets, spark=spark)
+    # every file lands in the shared residue folded into each bucket, as do
+    # the authority tables the catalog reads
+    refs = refs or {}
+    ref_names = {str(r.get("ref_table")) for r in catalog.dataset_rules if r.get("ref_table")}
+    snapshots = input_snapshots_per_bucket(
+        input_paths or [],
+        n_buckets,
+        spark=spark,
+        refs={n: ref for n, ref in refs.items() if n in ref_names},
+    )
     manifest = Manifest.load(output, n_buckets=n_buckets)
     pending = manifest.pending_buckets(rule_versions, snapshots)
+    if pending and any(crosses_buckets(r, key_col) for r in catalog.rules):
+        pending = list(range(n_buckets))
     summary = {
         "run_id": uuid.uuid4().hex[:12],
         "rule_versions": rule_versions,
@@ -116,100 +144,99 @@ def run_validation(
         rules=tuple(r for r in catalog.rules if r not in global_rules), version=catalog.version
     )
     df_full = df
-    df = df.withColumn("bucket", bucket_col(key_col, n_buckets))
     if len(pending) < n_buckets:
         # resume: completed buckets pruned BEFORE any rule work — the
         # cache-hit short-circuit of the reference (cache.py:95-102)
-        df = df.where(F.col("bucket").isin(pending))
+        df = df.where(bucket_col(key_col, n_buckets).isin(pending))
 
     result = validate(df, local_catalog, key_col=key_col, refs=refs)
-    # three consumers follow (violations write, verdicts write, metrics agg);
-    # persist the violation set so the expensive pass — the Arrow decode UDF
-    # in particular — runs exactly once. Violations are a tiny fraction of
-    # input rows, so this fits memory/disk easily at any scale.
-    result.violations_ranked = result.violations_ranked.persist()
-    global_viol = None
+    # THE exchange: record-key violations and one marker row per record,
+    # tagged with their bucket and shuffled once by it, so each bucket has
+    # one writer and one file per run. No more partitions than cores: a
+    # write task costs tens of ms of set-up even when it holds no bucket.
+    # Both writes read the cache with no further exchange, so the
+    # validation plan — the Arrow decode UDF in particular — runs once.
+    parts = min(len(pending), spark.sparkContext.defaultParallelism)
+    tagged = (
+        result.tagged("observed", "expected")
+        .withColumn("bucket", bucket_col("key", n_buckets))
+        .repartition(parts, "bucket")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    counts = Observation("bucket_metrics")
+
+    def write_violations() -> None:
+        # (key, rule_order, rule_id) order within each bucket, the rest of
+        # the row as the tie-break: the written bytes repeat run to run
+        violations = (
+            tagged.where("__v IS NOT NULL")
+            .sortWithinPartitions("bucket", "key", "__v", "observed", "expected")
+            .selectExpr("key", "__v.rule_id AS rule_id", "observed", "expected", "bucket")
+        )
+        violations.write.mode("overwrite").partitionBy("bucket").parquet(f"{output}/violations")
+
+    def write_verdicts() -> None:
+        # per-bucket metrics fold from the verdict rows as they are
+        # written: one aggregate per metric and pending bucket, in the
+        # write's result stage, so a retried task is counted once. A NULL key is
+        # one record: xxhash64(NULL) is the seed 42, so it lands in bucket
+        # pmod(42, n_buckets) and counts there.
+        verdicts = fold_verdicts(tagged, "bucket").observe(
+            counts,
+            *(
+                F.expr(f"array({', '.join(agg.format(b=b) for b in pending)}) AS {name}")
+                for name, agg in (
+                    ("rows", "count_if(bucket = {b})"),
+                    ("failed_rows", "count_if(bucket = {b} AND NOT passed)"),
+                    ("violations", "coalesce(sum(IF(bucket = {b}, n_violations, 0)), 0)"),
+                )
+            ),
+        )
+        verdicts.write.mode("overwrite").partitionBy("bucket").parquet(f"{output}/verdicts")
+
+    sinks = [write_violations, write_verdicts]
+    table_count = None
     if global_rules:
         global_catalog = RuleCatalog(rules=tuple(global_rules), version=catalog.version)
-        global_viol = validate(df_full, global_catalog, key_col=key_col).violations_ranked.persist()
+        table_count = Observation("table_violations")
+        # built here, not in its sink: a rule over an unknown column raises
+        # before anything is deleted or written
+        global_viol = validate(df_full, global_catalog, key_col=key_col).violations
+        sinks.append(
+            lambda: global_viol.observe(table_count, F.count(F.lit(1)).alias("n"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{output}/violations/bucket={RESERVED_BUCKET}")
+        )
 
     # only the touched buckets are overwritten; completed ones stay intact.
     # Partition dirs for pending buckets are DELETED first: dynamic overwrite
     # only replaces partitions present in the new data, so a bucket whose
     # revalidation yields zero violations would otherwise keep stale rows.
-    # repartition on the bucket key first: without it every task writes a
-    # sliver into every bucket dir (tasks × buckets tiny files + a serial
-    # driver-side commit of thousands of files — an anti-pattern that gets
-    # quadratically worse with cluster size). One writer per bucket → one
-    # file per bucket per run.
+    # The reserved bucket is recomputed from scratch every run: it is
+    # cleared even when THIS catalog has no global rules, else a rule
+    # removed from the catalog would leave the previous run's table-level
+    # violations behind for read_violations to union into fresh results.
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    b = bucket_col("key", n_buckets).alias("bucket")
-    out_log = StateLog(output, spark)
-    out_log.delete(*(f"{t}/bucket={p}" for t in ("violations", "verdicts") for p in pending))
-    (
-        result.violations.where(is_record_key("key"))
-        .withColumn("bucket", b)
-        .repartition(len(pending), "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{output}/violations")
+    StateLog(output, spark).delete(
+        *(f"{t}/bucket={p}" for t in ("violations", "verdicts") for p in pending),
+        f"violations/bucket={RESERVED_BUCKET}",
     )
-    # the reserved bucket is recomputed from scratch every run: clear it even
-    # when THIS catalog has no global rules, else a rule removed from the
-    # catalog would leave the previous run's table-level violations behind
-    # and read_violations would union stale rows into fresh results
-    out_log.delete(f"violations/bucket={RESERVED_BUCKET}")
-    if global_viol is not None:
-        (
-            global_viol.select(*VIOLATION_FIELDS)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{output}/violations/bucket={RESERVED_BUCKET}")
-        )
-    (
-        result.verdicts.withColumn("bucket", b)
-        .repartition(len(pending), "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{output}/verdicts")
-    )
-    # per-bucket metrics from the verdicts JUST WRITTEN: one verdict row per
-    # distinct record key with its bucket and violation count, so
-    # rows/failed_rows/violations fold out of a tiny parquet scan instead of
-    # re-scanning the input keys and re-aggregating the violations. A NULL
-    # key is one record: xxhash64(NULL) is the seed 42, so it lands in
-    # bucket pmod(42, n_buckets) and counts there. Restricted to pending
-    # buckets: on a resume, completed buckets' verdicts survive on disk but
-    # were not validated by THIS run.
-    metrics_rows = (
-        read_verdicts(spark, output)
-        .where(F.col("bucket").isin(pending))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum((~F.col("passed")).cast("long")).alias("failed_rows"),
-            F.sum("n_violations").alias("violations"),
-        )
-        .withColumn("passed", F.col("failed_rows") == 0)
-        .collect()
-    )
-    table_violations = int(global_viol.count()) if global_viol is not None else 0
-    result.violations_ranked.unpersist()
-    if global_viol is not None:
-        global_viol.unpersist()
+    try:
+        _side_by_side(spark, sinks)
+    finally:
+        tagged.unpersist()
     wall = time.monotonic() - t0
+    got = counts.get
     bucket_metrics = {
-        int(r.bucket): {
-            "rows": int(r.rows),
-            "failed_rows": int(r.failed_rows),
-            "violations": int(r.violations),
-            "passed": bool(r.passed),
+        b: {
+            "rows": int(got["rows"][i]),
+            "failed_rows": int(got["failed_rows"][i]),
+            "violations": int(got["violations"][i]),
+            "passed": got["failed_rows"][i] == 0,
         }
-        for r in metrics_rows
+        for i, b in enumerate(pending)
     }
-    # buckets with zero rows still count as validated
-    for bkt in pending:
-        bucket_metrics.setdefault(bkt, {"rows": 0, "failed_rows": 0, "violations": 0, "passed": True})
     manifest.record_run(
         summary["run_id"], rule_versions, snapshots, input_paths or [], bucket_metrics, wall
     )
@@ -217,8 +244,21 @@ def run_validation(
     summary["rows"] = sum(m["rows"] for m in bucket_metrics.values())
     summary["violations"] = sum(m["violations"] for m in bucket_metrics.values())
     summary["failed_rows"] = sum(m["failed_rows"] for m in bucket_metrics.values())
-    summary["table_violations"] = table_violations
+    summary["table_violations"] = int(table_count.get["n"]) if table_count else 0
     return summary
+
+
+def _side_by_side(spark: SparkSession, sinks: list) -> None:
+    """Run each sink (a no-argument callable that builds its frame and
+    writes it) on its own thread, so their fixed latencies — analysis,
+    plan, schedule, commit — overlap. Each thread inherits the caller's local properties (job group,
+    description, scheduler pool) and job tags, through its own copy: a SQL
+    execution writes its id into them. Every sink finishes before the first
+    failure, if any, is raised."""
+    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(s)) for s in sinks]
+    for f in futures:
+        f.result()
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -11,9 +11,16 @@ instrumentation the optimization round needs:
   --time   [names...]   time each query with the bench protocol
                         (count + clearCache), N repeats via --repeats
   --noop   [names...]   time with the noop sink instead of count()
+  --timeline            run the benchmark's clips_decode units (its session,
+                        input and warm-up, seed via --seed) with the Spark
+                        event log on, then print every job of the --units
+                        warm units after the warm-up: wall, gap before it,
+                        tasks, executor ms and operator scopes, plus each
+                        unit's plan exchanges. The stage breakdown behind a
+                        clips_decode perf claim; run it on both sides.
 
 Same session config and env contract as bench.py ($SPARK_GRAFT_SF_DIR,
-$SPARK_GRAFT_CPUS).
+$SPARK_GRAFT_CPUS), except --timeline, which uses perfbench's.
 """
 
 from __future__ import annotations
@@ -22,7 +29,9 @@ import argparse
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -48,16 +57,97 @@ def normalize_plan(txt: str) -> str:
     return _LAMBDA_VAR.sub("lambda v", txt)
 
 
+def timeline(seed: int, n_units: int) -> None:
+    """Job timeline of ``n_units`` warm clips_decode units (see --timeline)."""
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import layers
+    import session
+    import workloads
+
+    class Jobs(layers.EventLog):
+        """The event log plus job ends, stage task counts and job groups."""
+
+        def __init__(self, event_dir: str):
+            self.ends: dict[int, float] = {}
+            self.tasks: dict[int, int] = {}
+            self.groups: dict[int, str] = {}
+            super().__init__(event_dir)
+
+        def _add(self, e: dict) -> None:
+            super()._add(e)
+            kind = e["Event"].rsplit(".", 1)[-1]
+            if kind == "SparkListenerJobEnd":
+                self.ends[e["Job ID"]] = e["Completion Time"]
+            elif kind == "SparkListenerJobStart":
+                props = e.get("Properties") or {}
+                self.groups[e["Job ID"]] = props.get("spark.jobGroup.id", "")
+            elif kind == "SparkListenerStageCompleted":
+                self.tasks[e["Stage Info"]["Stage ID"]] = e["Stage Info"]["Number of Tasks"]
+
+    os.makedirs(os.path.join(REPO, ".bench_data"), exist_ok=True)
+    work = tempfile.mkdtemp(prefix="timeline-", dir=os.path.join(REPO, ".bench_data"))
+    try:
+        session.prepare_env(work)
+        wl = workloads.clips_decode(seed, os.path.join(work, "in"))
+        wl.prepare()
+        events = os.path.join(work, "events")
+        spark = session.build_session(work, events)
+        units = []
+        try:
+            session.warm_up(spark)
+            wl.stage(spark)
+            wl.first_read(spark)
+            for k in range(1 + wl.warm_up_units + n_units):
+                out = os.path.join(work, "out", str(k))
+                spark.sparkContext.setJobGroup(f"unit-{k}", f"unit {k}")
+                t0 = time.time() * 1000.0
+                wl.unit(spark, out, layers.NullTracer())
+                units.append((k, t0, time.time() * 1000.0))
+                workloads.clear(out)
+        finally:
+            session.stop_session(spark)
+        log = Jobs(events)
+        for k, t0, t1 in units[1 + wl.warm_up_units:]:
+            jobs = sorted((v["t"], j) for j, v in log.jobs.items() if t0 <= v["t"] <= t1)
+            exchanges = log.unit_metrics(t0, t1, [])["engine.plan_exchanges"]
+            print(f"unit {k}: {t1 - t0:.0f} ms, {len(jobs)} jobs, {exchanges:.0f} plan exchanges")
+            print(f"  {'job':>5} {'start':>6} {'wall':>6} {'gap':>5} {'tasks':>5} {'exec':>6}  group / scopes")
+            done = t0  # the latest end of the jobs so far
+            for start, j in jobs:
+                stages = [s for s in log.jobs[j]["stages"] if s in log.stages]
+                end = log.ends.get(j, start)
+                scopes = sorted({x for s in stages for x in log.stages[s]["scopes"]})
+                run_ms = sum(
+                    int(log.stages[s]["acc"].get("internal.metrics.executorRunTime") or 0)
+                    for s in stages
+                )
+                print(
+                    f"  {j:>5} {start - t0:>6.0f} {end - start:>6.0f} {max(0.0, start - done):>5.0f}"
+                    f" {sum(log.tasks.get(s, 0) for s in stages):>5} {run_ms:>6}"
+                    f"  {log.groups.get(j, '')} / {', '.join(scopes)[:110]}"
+                )
+                done = max(done, end)
+            print(f"  after the last job: {max(0.0, t1 - done):.0f} ms")
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--plans", action="store_true")
     ap.add_argument("--time", action="store_true")
     ap.add_argument("--noop", action="store_true")
     ap.add_argument("--normalize", action="store_true")
+    ap.add_argument("--timeline", action="store_true")
+    ap.add_argument("--seed", type=int, default=3, help="--timeline input seed")
+    ap.add_argument("--units", type=int, default=3, help="--timeline warm units")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--repeats", type=int, default=1)
     ap.add_argument("names", nargs="*")
     args = ap.parse_args(argv)
+    if args.timeline:
+        timeline(args.seed, args.units)
+        return 0
 
     spark = bench.build_session(CPUS)
     spark.sparkContext.setLogLevel("ERROR")

@@ -146,8 +146,9 @@ def test_unknown_column_rejected(spark, demo_df):
          "ref_key": "k", "ref_column": "v"},
         {"type": "referential", "column": "name", "key": "k", "join_on": "nope",
          "ref_table": "t", "ref_key": "k", "ref_column": "v"},
+        {"type": "audio_decode", "bytes_column": "nope"},
     ],
-    ids=["unique", "all_of", "all_of_group_by", "drift", "referential", "join_on"],
+    ids=["unique", "all_of", "all_of_group_by", "drift", "referential", "join_on", "audio_decode"],
 )
 def test_unknown_column_in_dataset_rule_rejected(spark, demo_df, spec):
     """Dataset rules get the same up-front column check as row rules, not a

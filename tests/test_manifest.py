@@ -522,3 +522,116 @@ def test_iceberg_metadata_only_commit_invalidates(tmp_path):
     f1 = input_snapshot([str(t)])
     write_meta(2, 500, 3, 1)  # column rename: same snapshot, new schema id
     assert input_snapshot([str(t)]) != f1
+
+
+def _write_catalog(path, rules):
+    path.write_text(json.dumps({"version": 1, "rules": rules}))
+    return str(path)
+
+
+def test_resume_sees_authority_change(spark, tmp_path):
+    """An authority the catalog reads is part of every bucket's
+    fingerprint: after every ref_column value changes, the resume
+    revalidates and reports what a fresh run reports."""
+    inp, ref = str(tmp_path / "clips"), str(tmp_path / "index")
+    rows = [(f"clip-{i}", f"t{i}") for i in range(10)]
+    spark.createDataFrame(rows, "clip_id string, transcript string").write.parquet(inp)
+    spark.createDataFrame(rows, "clip_id string, transcript_ref string").write.parquet(ref)
+    catalog = _write_catalog(tmp_path / "rules.json", [
+        {"id": "transcript.referential", "type": "referential", "column": "transcript",
+         "key": "clip_id", "ref_table": "transcript_index", "ref_key": "clip_id",
+         "ref_column": "transcript_ref"},
+    ])
+
+    def run(out):
+        return run_validation(
+            spark, spark.read.parquet(inp), catalog_path=catalog, output=str(out),
+            refs={"transcript_index": spark.read.parquet(ref)}, n_buckets=4,
+            input_paths=[inp],
+        )
+
+    out = tmp_path / "out"
+    assert run(out)["violations"] == 0
+    assert run(out)["pending_buckets"] == []
+    changed = [(k, f"{t}-changed") for k, t in rows]
+    spark.createDataFrame(changed, "clip_id string, transcript_ref string").write.mode(
+        "overwrite").parquet(ref)
+    resumed = run(out)
+    fresh = run(tmp_path / "fresh")
+    assert resumed["pending_buckets"] == [0, 1, 2, 3]
+    assert resumed["violations"] == fresh["violations"] == 10
+    assert _violations(spark, out) == _violations(spark, tmp_path / "fresh")
+
+
+def test_in_memory_authority_makes_every_bucket_pending(spark, tmp_path):
+    """No fingerprint can prove an authority built in memory unchanged, so
+    a rerun over one revalidates every bucket."""
+    catalog = _write_catalog(tmp_path / "rules.json", [
+        {"id": "t.referential", "type": "referential", "column": "t", "key": "k",
+         "ref_table": "idx", "ref_key": "k", "ref_column": "t"},
+    ])
+    inp = str(tmp_path / "inp")
+    spark.createDataFrame([("a", "x")], "k string, t string").write.parquet(inp)
+    out = str(tmp_path / "out")
+    for _ in range(2):
+        s = run_validation(
+            spark, spark.read.parquet(inp), catalog_path=catalog, output=out, key_col="k",
+            refs={"idx": spark.createDataFrame([("a", "x")], "k string, t string")},
+            n_buckets=2, input_paths=[inp],
+        )
+        assert s["pending_buckets"] == [0, 1]
+
+
+def test_iceberg_authority_fingerprint_is_its_snapshot(spark, tmp_path, monkeypatch):
+    """A ref over an Iceberg table (a DataSource V2 relation named by its
+    table dir) is fingerprinted by the table's current snapshot."""
+    from anzlic_validator_spark import manifest
+
+    t = tmp_path / "tbl"
+    _mk_iceberg_meta(t, 2, 1111, 5)
+    ref = spark.createDataFrame([("a",)], "k string")
+    assert manifest.authority_entries({"idx": ref})[0][0] == "ref-unlisted"
+    monkeypatch.setattr(manifest, "_ref_sources", lambda _: ([], [str(t)]))
+    assert manifest.authority_entries({"idx": ref}) == [("ref", "idx", [], [(1111, 5, 0, 0)])]
+
+
+def test_resume_exact_for_unique_over_non_key_columns(spark, tmp_path):
+    """A `unique` rule over columns other than the key has duplicates that
+    cross buckets: once any bucket is pending, every bucket revalidates, so
+    an append into one bucket that duplicates a value in another reports
+    both records, as a fresh run does."""
+    from anzlic_validator_spark.run import bucket_col
+
+    inp = str(tmp_path / "clips")
+    df = spark.createDataFrame(
+        [(f"clip-{i}", f"tid-{i}") for i in range(20)], "clip_id string, tid string"
+    ).withColumn("bucket", bucket_col("clip_id", 4))
+    df.write.partitionBy("bucket").parquet(inp)
+    catalog = _write_catalog(tmp_path / "rules.json", [
+        {"id": "tid.unique", "type": "unique", "columns": ["tid"]},
+    ])
+
+    def run(out):
+        return run_validation(
+            spark, spark.read.parquet(inp).drop("bucket"), catalog_path=catalog,
+            output=str(out), n_buckets=4, input_paths=[inp],
+        )
+
+    out = tmp_path / "out"
+    assert run(out)["violations"] == 0
+    # a new clip in one bucket whose tid is clip-0's, in another bucket
+    b0 = df.where("clip_id = 'clip-0'").first().bucket
+    new = (
+        spark.createDataFrame([(f"clip-{i}", "tid-0") for i in range(20, 60)],
+                              "clip_id string, tid string")
+        .withColumn("bucket", bucket_col("clip_id", 4))
+        .where(f"bucket != {b0}")
+        .limit(1)
+    )
+    b1 = new.first().bucket
+    new.drop("bucket").write.parquet(f"{inp}/bucket={b1}", mode="append")
+    resumed = run(out)
+    fresh = run(tmp_path / "fresh")
+    assert resumed["pending_buckets"] == [0, 1, 2, 3]
+    assert resumed["violations"] == fresh["violations"] == 2
+    assert _violations(spark, out) == _violations(spark, tmp_path / "fresh")
