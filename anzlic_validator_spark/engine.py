@@ -25,8 +25,10 @@ and keeps sweeping, scripts/validate.py:451-458).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -226,6 +228,20 @@ def validate(
     for p in parts[1:]:
         violations = violations.unionByName(p)
     return ValidationResult(df=df, key_col=key_col, violations_ranked=violations)
+
+
+def side_by_side(spark: SparkSession, sinks: list) -> None:
+    """Run each sink (a no-argument callable that builds its frame and
+    writes it) on its own thread, so their fixed latencies — analysis,
+    plan, schedule, commit — overlap. Each thread inherits the caller's
+    local properties (job group, description, scheduler pool, a stream's
+    batch id) and job tags, through its own copy: a SQL execution writes
+    its id into them. Every sink finishes before the first failure, if
+    any, is raised."""
+    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(s)) for s in sinks]
+    for f in futures:
+        f.result()
 
 
 def _rule_columns(rule: Rule, key_col: str) -> list[str]:

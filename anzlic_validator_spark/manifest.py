@@ -2,12 +2,14 @@
 
 A run records, per hash bucket, the rule-catalog hash and the input
 fingerprint it validated under, plus the bucket's metrics, and appends a
-run entry to the history. The next run validates only the pending buckets:
-those never completed, or completed under another catalog or input. This
-is the reference's cache skip (scripts/cache.py:95-102) and its
-fetch-history merge (scripts/resolve.py:150-187) over buckets. A dry run
-plans and writes nothing. The manifest is one JSON document, replaced
-atomically through ``state_log``, so a crash leaves the previous version.
+run entry to the history, which lists the run's input paths once (a
+bucket entry names its run by ``run_id``). The next run validates only
+the pending buckets: those never completed, or completed under another
+catalog or input. This is the reference's cache skip
+(scripts/cache.py:95-102) and its fetch-history merge
+(scripts/resolve.py:150-187) over buckets. A dry run plans and writes
+nothing. The manifest is one JSON document, replaced atomically through
+``state_log``, so a crash leaves the previous version.
 
 The unit of resume is the deterministic hash bucket of the key
 (pmod(xxhash64(key), n_buckets)). It is stable across cluster sizes and
@@ -249,7 +251,6 @@ class Manifest:
                 "status": "complete",
                 "rule_versions": rule_versions,
                 "snapshot_id": snapshots.get(b, ""),
-                "files": files,
                 "rows": m.get("rows", 0),
                 "failed_rows": m.get("failed_rows", 0),
                 "violations": m.get("violations", 0),
@@ -262,6 +263,7 @@ class Manifest:
                 "run_id": run_id,
                 "rule_versions": rule_versions,
                 "snapshot_id": run_snapshot(snapshots),
+                "files": files,
                 "buckets": sorted(bucket_metrics),
                 "rows": int(sum(m.get("rows", 0) for m in bucket_metrics.values())),
                 "violations": int(sum(m.get("violations", 0) for m in bucket_metrics.values())),

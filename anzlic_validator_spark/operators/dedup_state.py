@@ -21,11 +21,12 @@ no payload. An incremental pass:
    signatures' single materialization: the pair plan reads them back.
 
 The layout is ``state_log``'s: ``meta.json`` pins the signature parameters
-(num_hashes, n_bands, shingle_k, or a store kind), ``run_NNNNN`` holds
-each committed batch, and ``fold_NNNNN/_FOLDED`` the runs a fold merged:
-a committing call folds on ``StateLog.fold_due``, ``compact_store`` on
-demand. Every open checks ``meta.json``: signatures computed under other
-parameters would silently break agreement estimates, so a mismatch raises.
+(num_hashes, n_bands, shingle_k, or a store kind) and the schema of the
+stored rows, ``run_NNNNN`` holds each committed batch, and
+``fold_NNNNN/_FOLDED`` the runs a fold merged: a committing call folds on
+``StateLog.fold_due``, ``compact_store`` on demand. Every open checks
+``meta.json``: signatures computed under other parameters would silently
+break agreement estimates, so a mismatch raises.
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from typing import Callable
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from anzlic_validator_spark.operators.dedup import (
     band_keys,
@@ -44,28 +46,49 @@ from anzlic_validator_spark.operators.dedup import (
     verify_pairs,
     word_shingles_from_tokens,
 )
+from anzlic_validator_spark.sources.tables import spread_rows
 from anzlic_validator_spark.state_log import StateLog
 
 log = logging.getLogger(__name__)
+
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")  # narrowest first
 
 
 def _store_meta(num_hashes: int, n_bands: int, shingle_k: int) -> dict:
     return {"num_hashes": num_hashes, "n_bands": n_bands, "shingle_k": shingle_k}
 
 
-def _check_meta(store: StateLog, meta: dict, create: bool) -> None:
+def _check_meta(
+    spark: SparkSession, store: StateLog, meta: dict, schema: StructType, create: bool
+) -> StructType:
     """Validate the store's parameter metadata, or pin it on the first
     commit: signatures computed under different parameters must never
-    silently mix."""
+    silently mix. The pin also holds the schema of the store's rows (on
+    the first commit ``schema``, the batch's fingerprint schema), which
+    this returns. A store written before schemas were pinned infers it
+    from its rows, and pins it on its next commit."""
     existing = store.read_json("meta.json")
-    if existing is None:
-        if create:  # a commit=False what-if probe writes nothing at all
-            store.write_json("meta.json", meta)
-    elif existing != meta:
+    pinned = existing.pop("schema", None) if existing else None
+    if existing is not None and existing != meta:
         raise ValueError(
             f"fingerprint store {store.root} was built with {existing}, "
             f"incompatible with requested {meta}"
         )
+    if pinned is not None:
+        return StructType.fromJson(pinned)
+    live = store.live_inputs()
+    if live:
+        schema = spark.read.parquet(*live).schema
+    if create:  # a commit=False what-if probe writes nothing at all
+        store.write_json("meta.json", {**meta, "schema": schema.jsonValue()})
+    return schema
+
+
+def _pinned_schema(store: StateLog) -> StructType | None:
+    """The schema ``meta.json`` pins for the store's rows; None for a store
+    written before schemas were pinned, whose reads infer it."""
+    pinned = (store.read_json("meta.json") or {}).get("schema")
+    return None if pinned is None else StructType.fromJson(pinned)
 
 
 def store_live_inputs(
@@ -84,10 +107,39 @@ def store_live_inputs(
     return store.live_inputs(before_run_id), store.next_id()
 
 
-def _fold(spark: SparkSession, store: StateLog, covers: int) -> str:
+def _conform(fps: DataFrame, schema: StructType, root: str) -> DataFrame:
+    """``fps`` in the store's ``schema``. An integral column narrower than
+    the store's (an int id into a bigint store) is widened; any other
+    difference raises, as a cast could change ids."""
+    have = {f.name: f.dataType.simpleString() for f in fps.schema}
+    want = {f.name: f.dataType.simpleString() for f in schema}
+    if have == want:
+        return fps
+
+    def widens(a: str, b: str) -> bool:
+        return a in _INTEGRAL and b in _INTEGRAL and _INTEGRAL.index(a) <= _INTEGRAL.index(b)
+
+    fits = have.keys() == want.keys() and all(
+        t == want[c] or widens(t, want[c]) for c, t in have.items()
+    )
+    if not fits:
+        raise ValueError(f"fingerprint store {root} holds rows of {want}; this batch's are {have}")
+    return fps.select(*(F.col(f.name).cast(f.dataType) for f in schema))
+
+
+def _read(spark: SparkSession, paths: list[str], schema: StructType | None) -> DataFrame:
+    """The store rows under ``paths``. Given the store's ``schema``, the
+    read plans without parquet's schema-inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
+def _fold(
+    spark: SparkSession, store: StateLog, covers: int, schema: StructType | None
+) -> str:
     """Fold every live unit up to ``covers`` into ``fold_<covers>``;
     full-row duplicates across units collapse."""
-    merged = spark.read.parquet(*store.live_inputs(before=covers + 1)).dropDuplicates()
+    merged = _read(spark, store.live_inputs(before=covers + 1), schema).dropDuplicates()
     return store.fold(covers, lambda tmp: merged.write.mode("overwrite").parquet(tmp))
 
 
@@ -100,7 +152,7 @@ def compact_store(spark: SparkSession, store_dir: str, up_to: int | None = None)
     left to fold; a single live run does fold."""
     store = StateLog(store_dir, spark)
     _, runs = store.live_units(None if up_to is None else up_to + 1)
-    final = _fold(spark, store, runs[-1]) if runs else None
+    final = _fold(spark, store, runs[-1], _pinned_schema(store)) if runs else None
     store.prune()  # also finishes the prune of a fold published before a crash
     return final
 
@@ -121,6 +173,15 @@ def incremental_fingerprints(
     store-row DataFrame. ``all_fps is new_fps`` when the store holds no
     rows yet.
 
+    The batch is round-robined to the default parallelism before it is
+    fingerprinted (``spread_rows``), so a one-file delta, one scan split,
+    is fingerprinted on every core. The first commit pins the schema of
+    the store's rows in ``meta.json`` (the batch's fingerprint schema);
+    a later batch's fingerprints are cast to it (integral columns widen,
+    any other difference raises), and every store read (the committed
+    run, the prior runs, a fold's input) passes it, so none runs a
+    schema-inference job.
+
     ``run_id``: None appends the next run. An explicit id replaces that
     run and pairs only against runs before it, so a retried batch
     reproduces its first attempt.
@@ -139,27 +200,26 @@ def incremental_fingerprints(
     ``spark.catalog.clearCache()`` after consuming each result."""
     spark = new_df.sparkSession
     store = StateLog(store_dir, spark)
-    _check_meta(store, meta, create=commit)
+    new_fps = fingerprint_fn(spread_rows(new_df))
+    schema = _check_meta(spark, store, meta, new_fps.schema, create=commit)
+    new_fps = _conform(new_fps, schema, store.root)
     if run_id is not None:
         store.check_horizon(run_id)
     unit = store.next_id() if run_id is None else run_id
     if commit:
         if store.fold_due(unit):
-            _fold(spark, store, unit - 1)
+            _fold(spark, store, unit - 1, schema)
         store.prune(unit)
     prior = store.live_inputs(unit)
-    new_fps = fingerprint_fn(new_df)
     if commit:
         # the commit write doubles as the batch's single fingerprint
         # materialization; the pair plan reads it back from parquet
         fps = new_fps
         path = store.commit(unit, lambda tmp: fps.write.mode("overwrite").parquet(tmp))
-        new_fps = spark.read.parquet(path)
+        new_fps = _read(spark, [path], schema)
     else:
         new_fps = new_fps.persist(StorageLevel.MEMORY_AND_DISK)
-    all_fps = (
-        spark.read.parquet(*prior).unionByName(new_fps) if prior else new_fps
-    )
+    all_fps = _read(spark, prior, schema).unionByName(new_fps) if prior else new_fps
     return new_fps, all_fps
 
 
@@ -292,10 +352,11 @@ def incremental_minhash_pairs(
     the degeneracy the batch ``lsh_candidate_pairs`` caps. ``None``
     disables the cap (small corpora and exact-oracle runs only).
 
-    Scale shape: signatures for the new batch only (no shuffle); one
-    band-key join of new-batch band rows (21x batch) against the band rows
-    of (store ∪ batch), broadcastable new side against a 10^12-row store;
-    verify joins pinned as broadcast-hash with the candidate side as build
+    Scale shape: signatures for the new batch only, on every core (the
+    batch is round-robined first, its one shuffle); one band-key join of
+    new-batch band rows (21x batch) against the band rows of (store ∪
+    batch), broadcastable new side against a 10^12-row store; verify
+    joins pinned as broadcast-hash with the candidate side as build
     (``verify_pairs``), so the store side streams through two scans and
     never shuffles. The store read is a parquet scan of (id, sig):
     document payloads are never stored, read or shuffled.

@@ -18,8 +18,9 @@ Usage (local parquet stand-in for the Iceberg table):
 Outputs under --output:
     violations/   parquet (key, rule_id, observed, expected), partitioned by bucket
     verdicts/     parquet (key, passed, first_rule_id, n_violations), partitioned by bucket
-    manifest.json checkpoint: per-bucket lineage (snapshot id, file list,
-                  rule versions) + metrics (rows, violations, wall-clock)
+    manifest.json checkpoint: per-bucket lineage (snapshot id, rule
+                  versions) + metrics (rows, violations), and per run its
+                  input paths and wall-clock
 
 A rerun with the same catalog + input skips completed buckets. A changed
 catalog revalidates every bucket; a changed input revalidates the buckets
@@ -49,14 +50,19 @@ import argparse
 import sys
 import time
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 
-from pyspark import StorageLevel, inheritable_thread_target
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from anzlic_validator_spark.compile import _ident
-from anzlic_validator_spark.engine import crosses_buckets, fold_verdicts, table_global, validate
+from anzlic_validator_spark.engine import (
+    crosses_buckets,
+    fold_verdicts,
+    side_by_side,
+    table_global,
+    validate,
+)
 from anzlic_validator_spark.manifest import Manifest, input_snapshots_per_bucket, run_snapshot
 from anzlic_validator_spark.rules import RuleCatalog, load_catalog
 from anzlic_validator_spark.sources.tables import read_clips
@@ -89,6 +95,18 @@ def bucket_col(key_col: str, n_buckets: int):
     # output/manifest bucketing hashes the string-cast violation key — all
     # three bucket computations must agree for non-string key columns
     return F.expr(f"CAST(pmod(xxhash64(CAST({_ident(key_col)} AS STRING)), {int(n_buckets)}) AS INT)")
+
+
+def _overwrite_buckets(df: DataFrame, path: str) -> None:
+    """Write ``df`` partitioned by ``bucket``, replacing only the bucket
+    dirs it holds rows for: dynamic partition overwrite, set on this write
+    alone, so the caller's session keeps its own overwrite mode."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(path)
+    )
 
 
 def run_validation(
@@ -173,7 +191,7 @@ def run_validation(
             .sortWithinPartitions("bucket", "key", "__v", "observed", "expected")
             .selectExpr("key", "__v.rule_id AS rule_id", "observed", "expected", "bucket")
         )
-        violations.write.mode("overwrite").partitionBy("bucket").parquet(f"{output}/violations")
+        _overwrite_buckets(violations, f"{output}/violations")
 
     def write_verdicts() -> None:
         # per-bucket metrics fold from the verdict rows as they are
@@ -192,7 +210,7 @@ def run_validation(
                 )
             ),
         )
-        verdicts.write.mode("overwrite").partitionBy("bucket").parquet(f"{output}/verdicts")
+        _overwrite_buckets(verdicts, f"{output}/verdicts")
 
     sinks = [write_violations, write_verdicts]
     table_count = None
@@ -209,21 +227,21 @@ def run_validation(
             .parquet(f"{output}/violations/bucket={RESERVED_BUCKET}")
         )
 
-    # only the touched buckets are overwritten; completed ones stay intact.
-    # Partition dirs for pending buckets are DELETED first: dynamic overwrite
-    # only replaces partitions present in the new data, so a bucket whose
-    # revalidation yields zero violations would otherwise keep stale rows.
+    # only the touched buckets are overwritten (``_overwrite_buckets``);
+    # completed ones stay intact. Partition dirs for pending buckets are
+    # DELETED first: dynamic overwrite only replaces partitions present in
+    # the new data, so a bucket whose revalidation yields zero violations
+    # would otherwise keep stale rows.
     # The reserved bucket is recomputed from scratch every run: it is
     # cleared even when THIS catalog has no global rules, else a rule
     # removed from the catalog would leave the previous run's table-level
     # violations behind for read_violations to union into fresh results.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     StateLog(output, spark).delete(
         *(f"{t}/bucket={p}" for t in ("violations", "verdicts") for p in pending),
         f"violations/bucket={RESERVED_BUCKET}",
     )
     try:
-        _side_by_side(spark, sinks)
+        side_by_side(spark, sinks)
     finally:
         tagged.unpersist()
     wall = time.monotonic() - t0
@@ -246,19 +264,6 @@ def run_validation(
     summary["failed_rows"] = sum(m["failed_rows"] for m in bucket_metrics.values())
     summary["table_violations"] = int(table_count.get["n"]) if table_count else 0
     return summary
-
-
-def _side_by_side(spark: SparkSession, sinks: list) -> None:
-    """Run each sink (a no-argument callable that builds its frame and
-    writes it) on its own thread, so their fixed latencies — analysis,
-    plan, schedule, commit — overlap. Each thread inherits the caller's local properties (job group,
-    description, scheduler pool) and job tags, through its own copy: a SQL
-    execution writes its id into them. Every sink finishes before the first
-    failure, if any, is raised."""
-    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(spark)(s)) for s in sinks]
-    for f in futures:
-        f.result()
 
 
 def main(argv: list[str] | None = None) -> int:

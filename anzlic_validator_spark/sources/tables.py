@@ -50,9 +50,14 @@ def load_table(
     and needs no spread — this mirrors the corpus builders'
     defaultParallelism repartition (plans/demo_ml.py)."""
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if spread:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    return df
+    return spread_rows(df) if spread else df
+
+
+def spread_rows(df: DataFrame) -> DataFrame:
+    """``df`` round-robined to its session's default parallelism (one
+    shuffle of its rows), so the per-row work after it runs on every core
+    whatever the input's file and row-group layout."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -18,7 +18,10 @@ would silently change their semantics, so they run in the batch sweep.
 Sinks are idempotent per epoch: violations and verdicts are partitioned by
 epoch and written with dynamic partition overwrite, and the seen-keys log
 replaces its own unit for the epoch, so a micro-batch retried after a
-failure rewrites its own output instead of appending twice.
+failure rewrites its own output instead of appending twice. The three
+sinks of an epoch are independent writes, so they run side by side
+(``engine.side_by_side``, as ``run_validation``'s do); the seen-keys log is
+pruned only after all three succeed.
 
 ``availableNow`` triggers make this a catch-up batch: process everything
 new, then stop, the streaming twin of the updater's resumable sweep
@@ -33,7 +36,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from anzlic_validator_spark.engine import table_global, validate
+from anzlic_validator_spark.engine import side_by_side, table_global, validate
 from anzlic_validator_spark.errors import InvalidConfigException
 from anzlic_validator_spark.operators.uniqueness import tuple_keys, violation_cols
 from anzlic_validator_spark.rules import Rule, RuleCatalog
@@ -45,10 +48,15 @@ _SEEN_SCHEMA = "rule_id string, k string, first_epoch long"
 
 def _write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
     """Write ``df`` as the ``epoch`` partition of ``path``, replacing only
-    that partition, so a retried epoch rewrites its own output."""
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out = df.withColumn("epoch", F.lit(int(epoch_id)))
-    out.write.mode("overwrite").partitionBy("epoch").parquet(path)
+    that partition (dynamic partition overwrite, set on this write alone),
+    so a retried epoch rewrites its own output."""
+    (
+        df.withColumn("epoch", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch")
+        .parquet(path)
+    )
 
 
 def validate_stream(
@@ -73,6 +81,17 @@ def validate_stream(
     ``unique`` pass reports the batch's own duplicates (``count=``); the
     stream adds only the duplicates against prior epochs
     (``seen_in_epoch=``) and the epoch's write to the seen-keys log.
+
+    An epoch writes its violations, its verdicts and its seen-keys unit
+    side by side, one thread each; the threads keep the stream's job group
+    and batch id. Violations and verdicts read the epoch's violation rows
+    from one local checkpoint, computed before the writes start: over a
+    cache, two writes started together would each run the job that fills
+    it. Spark's context cleaner frees the checkpoint's blocks once the
+    epoch's frames are garbage. A failed sink, or a checkpoint block lost
+    with its executor, fails the epoch after the other sinks finish, and
+    prunes nothing, so a restart from the checkpoint replays the epoch
+    against the same log.
 
     Raises InvalidConfigException for table-global rules
     (``engine.table_global`` over ``CLIPS_SCHEMA``) BEFORE the stream
@@ -139,10 +158,11 @@ def validate_stream(
             seen_parts.append(
                 bk.select(F.lit(rule.rule_id).alias("rule_id"), F.col("k")).distinct()
             )
-        full = dataclasses.replace(result, violations_ranked=ranked.persist())
-        _write_epoch(full.violations, epoch_id, f"{output_path}/violations")
-        _write_epoch(full.verdicts, epoch_id, f"{output_path}/verdicts")
-        full.violations_ranked.unpersist()
+        full = dataclasses.replace(result, violations_ranked=ranked.localCheckpoint())
+        sinks = [
+            lambda: _write_epoch(full.violations, epoch_id, f"{output_path}/violations"),
+            lambda: _write_epoch(full.verdicts, epoch_id, f"{output_path}/verdicts"),
+        ]
         if seen_parts:
             new_keys = reduce(DataFrame.unionByName, seen_parts).withColumn(
                 "first_epoch", F.lit(epoch_id).cast("long")
@@ -154,11 +174,16 @@ def validate_stream(
                     .groupBy("rule_id", "k")
                     .agg(F.min("first_epoch").alias("first_epoch"))
                 )
-                seen.fold(epoch_id, lambda tmp: folded.write.mode("overwrite").parquet(tmp))
+                sinks.append(lambda: seen.fold(epoch_id, folded.write.mode("overwrite").parquet))
             else:
-                seen.commit(epoch_id, lambda tmp: new_keys.write.mode("overwrite").parquet(tmp))
-            # deletes what an earlier epoch's fold superseded, never what
-            # this epoch's own fold did (retry safety)
+                sinks.append(
+                    lambda: seen.commit(epoch_id, new_keys.write.mode("overwrite").parquet)
+                )
+        side_by_side(s, sinks)
+        if seen_parts:
+            # only once every sink wrote: deletes what an earlier epoch's
+            # fold superseded, never what this epoch's own fold did (retry
+            # safety)
             seen.prune(epoch_id)
 
     writer = (

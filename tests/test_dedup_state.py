@@ -732,3 +732,87 @@ def test_minhash_sigs_match_store_reread(spark, tmp_path):
     minhash_sigs(docs, "text", "doc_id").write.parquet(p)
     reread = spark.read.parquet(p).collect()[0]
     assert direct.id == reread.id and list(direct.sig) == list(reread.sig)
+
+
+def test_one_file_batch_commits_on_every_core_without_schema_inference(spark, tmp_path):
+    """A one-file batch is one scan split. The call spreads it, so it runs
+    two jobs: the spread's one-task shuffle map stage, then the commit
+    write, which computes the signatures on ``defaultParallelism`` tasks.
+    No store read (the committed run, the prior runs) runs a parquet
+    schema-inference job, which would be a job of its own."""
+    width = spark.sparkContext.defaultParallelism
+    tracker = spark.sparkContext.statusTracker()
+    store = str(tmp_path / "store")
+    batches = [
+        [(d, _vocab_doc(d)) for d in range(40)],
+        [(100 + d, _vocab_doc(d)) for d in range(0, 40, 4)],
+    ]
+    for k, rows in enumerate(batches):
+        path = str(tmp_path / f"batch_{k}")
+        _docs(spark, rows).coalesce(1).write.parquet(path)
+        batch = spark.read.parquet(path)
+        assert batch.rdd.getNumPartitions() == 1
+        group = f"one-file-batch-{k}"
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            pairs = incremental_minhash_pairs(batch, store, "text", "doc_id")
+            jobs = sorted(tracker.getJobIdsForGroup(group))
+        finally:
+            spark.sparkContext.setJobGroup("tests", "tests")
+        tasks = [[tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds]
+                 for j in jobs]
+        assert len(jobs) == 2, f"batch {k}: jobs {jobs} with stage tasks {tasks}"
+        assert tasks[0] == [1] and max(tasks[1]) == width
+        assert len(pairs.collect()) == (0 if k == 0 else len(batches[1]))
+
+
+def test_a_batch_is_cast_to_the_stores_pinned_id_type(spark, tmp_path):
+    """The first commit pins the store's row schema. A later batch with a
+    narrower integral id is widened to it, committed as bigint and paired
+    against the store, and the store still folds; a batch whose id is a
+    string raises instead of casting ids."""
+    from anzlic_validator_spark.operators.dedup_state import compact_store, store_live_inputs
+
+    store = str(tmp_path / "store")
+    originals = [(d, _vocab_doc(d)) for d in range(20)]
+    incremental_minhash_pairs(_docs(spark, originals), store, "text", "doc_id").collect()
+    copies = spark.createDataFrame(
+        [(100 + d, _vocab_doc(d)) for d in range(0, 20, 5)], "doc_id int, text string"
+    )
+    pairs = incremental_minhash_pairs(copies, store, "text", "doc_id").collect()
+    assert sorted((r.a_id, r.b_id) for r in pairs) == [(d, 100 + d) for d in range(0, 20, 5)]
+    newest = store_live_inputs(store)[0][-1]
+    assert spark.read.parquet(newest).schema["id"].dataType.simpleString() == "bigint"
+    compact_store(spark, store)
+    (folded,) = store_live_inputs(store)[0]
+    assert spark.read.parquet(folded).count() == 24
+
+    strings = spark.createDataFrame([("x", _vocab_doc(1))], "doc_id string, text string")
+    with pytest.raises(ValueError, match="holds rows of"):
+        incremental_minhash_pairs(strings, store, "text", "doc_id")
+
+
+def test_a_store_written_before_schemas_were_pinned_pins_its_rows_schema(spark, tmp_path):
+    """A store whose ``meta.json`` holds no schema infers it from its rows
+    and pins it on its next commit; the batch is cast to it."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    store = str(tmp_path / "store")
+    originals = [(d, _vocab_doc(d)) for d in range(10)]
+    incremental_minhash_pairs(_docs(spark, originals), store, "text", "doc_id").collect()
+    meta_path = os.path.join(store, "meta.json")
+    with open(meta_path, encoding="utf-8") as fh:
+        meta = json.load(fh)
+    pinned = meta.pop("schema")
+    with open(meta_path, "w", encoding="utf-8") as fh:
+        json.dump(meta, fh)
+
+    copies = spark.createDataFrame([(100, _vocab_doc(3))], "doc_id int, text string")
+    pairs = incremental_minhash_pairs(copies, store, "text", "doc_id").collect()
+    assert [(r.a_id, r.b_id) for r in pairs] == [(3, 100)]
+    with open(meta_path, encoding="utf-8") as fh:
+        repinned = json.load(fh)["schema"]
+    types = [StructType.fromJson(doc).simpleString() for doc in (repinned, pinned)]
+    assert types[0] == types[1]

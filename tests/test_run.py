@@ -74,6 +74,9 @@ def test_manifest_metrics_equal_a_recount_of_the_verdicts(spark, inp, tmp_path):
     # 58 distinct keys: the NULL key is one, two keys are held twice
     assert s["rows"] == 58 and s["table_violations"] == 1
     assert all(e["passed"] == (e["failed_rows"] == 0) for e in buckets.values())
+    # the input paths are recorded once, on the run entry
+    assert _manifest(out)["runs"][0]["files"] == [inp]
+    assert not any("files" in e for e in buckets.values())
 
     doc = _manifest(out)
     for b in ("1", "2"):
@@ -144,3 +147,32 @@ def test_two_runs_write_byte_identical_files(spark, inp, tmp_path):
     _run(spark, inp, tmp_path / "b", tmp_path)
     a = files(tmp_path / "a")
     assert len(a) > 4 and a == files(tmp_path / "b")
+
+
+def test_the_callers_session_keeps_its_partition_overwrite_mode(spark, inp, tmp_path):
+    """Dynamic partition overwrite is set on each bucket or epoch write,
+    not on the session: after a run and after a stream epoch, partitioned
+    writes the caller makes still overwrite statically."""
+    from anzlic_validator_spark.rules import parse_catalog
+    from anzlic_validator_spark.streaming.incremental import validate_stream
+    from anzlic_validator_spark.synth import clips
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try:
+        _run(spark, inp, tmp_path / "out", tmp_path)
+        assert spark.conf.get(key) == "STATIC"
+
+        stream_in = str(tmp_path / "stream_in")
+        clips(spark, 20, seed=3, with_audio=False, num_partitions=1).write.parquet(stream_in)
+        q = validate_stream(
+            spark, stream_in,
+            parse_catalog({"rules": [{"id": "clip_id.unique", "type": "unique",
+                                      "columns": ["clip_id"]}]}),
+            str(tmp_path / "stream_out"), str(tmp_path / "ckpt"),
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)

@@ -131,9 +131,9 @@ def run_manifest(spark, base: str, fault) -> dict:
     for b, e in doc["buckets"].items():
         e.pop("run_id"), e.pop("completed_at")
         e["snapshot_id"] = e["snapshot_id"] == snaps[int(b)]
-        e["files"] = [f.rsplit("/", 1)[-1] for f in e["files"]]
     runs = [
         {k: v for k, v in r.items() if k not in ("run_id", "wall_clock_s", "snapshot_id")}
+        | {"files": [f.rsplit("/", 1)[-1] for f in r["files"]]}
         for r in doc["runs"]
     ]
     violations = sorted(

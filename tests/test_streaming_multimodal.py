@@ -226,6 +226,130 @@ def test_streaming_seen_log_compaction(spark, tmp_path):
     assert ("dup-0", "seen_in_epoch=0") in rows
 
 
+def _stage_epochs(inp, epochs):
+    """One parquet file per epoch, oldest first, so a file source with
+    ``maxFilesPerTrigger=1`` admits one epoch per micro-batch."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(inp, exist_ok=True)
+    now = time.time()
+    for e, keys in epochs:
+        p = os.path.join(inp, f"epoch{e}.parquet")
+        pq.write_table(
+            pa.table({
+                "clip_id": keys, "bytes": pa.nulls(len(keys), pa.binary()),
+                "sr_hz": pa.array([16000] * len(keys), pa.int32()),
+                "dur_ms": pa.array([500] * len(keys), pa.int32()),
+                "codec": ["wav" if k != "c" else "mp3" for k in keys], "transcript": keys,
+            }),
+            p,
+        )
+        os.utime(p, (now - 600 + e * 60,) * 2)
+
+
+_EPOCH_CATALOG = {
+    "rules": [
+        {"id": "clip_id.unique", "type": "unique", "columns": ["clip_id"]},
+        {"id": "codec.in_set", "type": "in_set", "column": "codec", "values": ["wav"]},
+    ]
+}
+
+
+def _epoch_outputs(spark, out):
+    """Violations and verdicts by epoch, and each seen-keys unit's rows."""
+    import os
+
+    viol = "key string, rule_id string, observed string, expected string, epoch int"
+    verd = "key string, passed boolean, first_rule_id string, n_violations bigint, epoch int"
+    seen = os.path.join(out, "_seen_keys")
+    return {
+        "violations": sorted(map(tuple, spark.read.schema(viol).parquet(f"{out}/violations").collect())),
+        "verdicts": sorted(map(tuple, spark.read.schema(verd).parquet(f"{out}/verdicts").collect())),
+        "seen": {
+            unit: sorted(map(tuple, spark.read.parquet(os.path.join(seen, unit)).collect()))
+            for unit in sorted(os.listdir(seen)) if unit.startswith(("run_", "fold_"))
+        },
+    }
+
+
+def test_epoch_sinks_keep_the_streams_job_group(spark, tmp_path):
+    """An epoch's three sinks run on their own threads but keep the
+    stream's job group (its run id), so every job the query runs is
+    attributed to it."""
+    inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    _stage_epochs(inp, [(0, ["a", "b"]), (1, ["c", "a"])])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return max(tracker.getJobIdsForGroup(group))
+
+    first = marker("before-stream")
+    try:
+        q = validate_stream(
+            spark, inp, parse_catalog(_EPOCH_CATALOG), out, ckpt, max_files_per_trigger=1
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+    finally:
+        last = marker("after-stream")
+        sc.setJobGroup("tests", "tests")
+    stream_jobs = set(range(first + 1, last))
+    assert stream_jobs and stream_jobs == set(tracker.getJobIdsForGroup(str(q.runId)))
+
+
+def test_failed_epoch_sink_prunes_nothing_and_a_restart_matches_a_clean_run(spark, tmp_path):
+    """When an epoch's verdict sink cannot write (a plain file where
+    ``verdicts/`` goes), the query fails after the other sinks finish and
+    the seen-keys log keeps the units an earlier fold superseded. A restart
+    from the checkpoint replays the epoch and ends with the violations,
+    verdicts and seen-keys units of an uninterrupted run."""
+    import os
+    import shutil
+
+    epochs = [(0, ["a", "b"]), (1, ["c", "a"]), (2, ["d", "b", "c"])]
+    cat = parse_catalog(_EPOCH_CATALOG)
+
+    def run(inp, out, ckpt):
+        q = validate_stream(
+            spark, inp, cat, out, ckpt, max_files_per_trigger=1, seen_log_max_partitions=1
+        )
+        try:
+            q.awaitTermination(300)
+        except Exception:
+            pass
+        return q.exception()
+
+    clean = tmp_path / "clean"
+    _stage_epochs(str(clean / "in"), epochs)
+    assert run(*(str(clean / d) for d in ("in", "out", "ckpt"))) is None
+    want = _epoch_outputs(spark, str(clean / "out"))
+    # epoch 1 folded epochs 0-1; epoch 2 pruned the run the fold superseded
+    assert sorted(want["seen"]) == ["fold_00001", "run_00002"]
+
+    inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    _stage_epochs(inp, epochs[:2])
+    assert run(inp, out, ckpt) is None
+    os.rename(f"{out}/verdicts", f"{out}/verdicts.kept")
+    with open(f"{out}/verdicts", "w", encoding="utf-8") as fh:
+        fh.write("not a directory")
+    _stage_epochs(inp, epochs[2:])
+    assert run(inp, out, ckpt) is not None
+    assert "run_00000" in os.listdir(f"{out}/_seen_keys"), "a failed epoch pruned the log"
+
+    os.remove(f"{out}/verdicts")
+    os.rename(f"{out}/verdicts.kept", f"{out}/verdicts")
+    assert run(inp, out, ckpt) is None
+    assert _epoch_outputs(spark, out) == want
+    shutil.rmtree(tmp_path / "clean")
+
+
 def test_fold_commit_refuses_empty_or_failed_fold(spark, tmp_path):
     """A failed or empty fold must RAISE, never stamp the _FOLDED marker:
     a marker over an empty dir licenses the deferred prune to delete the
