@@ -16,7 +16,6 @@ from the public format specs in numpy):
                  subframes + rice residuals + CRC-8/16 + stream MD5 per
                  RFC 9639 — a vectorized-numpy encoder/decoder subset
                  (16-bit mono; LPC/stereo rejected with explicit errors).
-                 Retires round 1's ``flacz`` zlib stand-in (VERDICT #10).
 
 All checks run as ONE Arrow-vectorized ``pandas_udf`` returning a struct —
 batch transfer via Arrow, numpy kernels inside, no per-row Python at the
@@ -46,7 +45,7 @@ KNOWN_CODECS = ("pcm_s16le", "wav", "flac")
 _WAV_HDR = struct.Struct("<4sI4s4sIHHIIHH4sI")
 
 # ------------------------------------------------------ codec registry
-# Extension point (VERDICT r02 #8): a container with real codec libraries
+# Extension point: a container with real codec libraries
 # registers opus/mp3/etc. here and the whole engine — encode-side fixtures
 # and the Arrow decode UDF alike — picks them up without editing decode().
 # decode_fn: (bytes) -> (pcm float32 ndarray, sr_embedded int | None);

@@ -171,7 +171,7 @@ def _fingerprint_one(
         return None, None, None, None, err or "decode failed"
     s16 = _to_s16(pcm)
     # the md5 over full decoded PCM is not free — gated like the spectra
-    # (review r05: a frames/subfp-only pass was paying it for nothing)
+    # (a frames/subfp-only pass would pay it for nothing)
     content_fp = hashlib.md5(s16.tobytes()).hexdigest() if want_content else None
     if not (want_phash or want_frames or want_subfp):
         return content_fp, None, None, None, None
@@ -184,7 +184,7 @@ def _fingerprint_one(
     else:
         rate = int(ss)
     pcm64 = s16.astype(np.float64) / 32767.0
-    # ONE rfft pass per clip, folded into both band sets (review r04)
+    # ONE rfft pass per clip, folded into both band sets
     spec = spectra(pcm64)
     phash = frames = subfp = None
     if want_phash:
@@ -217,7 +217,7 @@ def audio_fingerprints(
     audio_verify_pairs); undecodable clips carry err and NULL fingerprints
     — a violation for the rule catalog, never a task failure.
 
-    ``parts`` selects which fingerprints to compute (VERDICT r04 #4): an
+    ``parts`` selects which fingerprints to compute: an
     exact-only dedup pass — the most common call — should request
     ``("content_fp",)`` so the Hann-window rfft behind phash/frames (the
     dominant post-decode cost, roughly doubling the pass) is skipped
@@ -256,7 +256,7 @@ def audio_fingerprints(
 
     # column metadata records which parts were COMPUTED (vs schema-stable
     # NULLs), letting composed operators fail loudly instead of silently
-    # joining against all-NULL fingerprints (review r05)
+    # joining against all-NULL fingerprints
     return df.select(
         F.col(key_col).alias("key"),
         fp(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("__fp"),
@@ -333,10 +333,10 @@ def audio_near_duplicates_frames(
     frames hash to the SAME few halves across much of a real corpus, so
     one hot half degrades the bucket join to a corpus-scale O(n²)
     self-join, exactly the boilerplate-bucket failure mode of the text
-    LSH family. ``max_bucket_size`` therefore DEFAULTS to a cap (with the
-    standard logged drop census): a half shared by more than ``cap`` clips
-    carries no discriminative signal, the same reasoning as the
-    simhash/minhash guidance. Pass ``None`` only for small corpora or
+    LSH family. ``max_bucket_size`` therefore DEFAULTS to a cap (the call
+    logs the drop census before it returns): a half shared by more than
+    ``cap`` clips carries no discriminative signal, the same reasoning as
+    the simhash/minhash guidance. Pass ``None`` only for small corpora or
     oracle runs that must be exactly exhaustive."""
     ex = fps.where(F.col("frames").isNotNull()).select(
         F.col("key").alias("id"), F.explode("frames").alias("fp")
@@ -504,7 +504,7 @@ def incremental_audio_neardup(
     meta guard refuses to mix them). Candidates are pairs sharing at least
     ``min_matches`` distinct halves (``incremental_candidates``); halves
     with more than ``max_bucket_size`` carriers among those the batch
-    touches drop, with a logged census. The BER verify (``verify_pairs``
+    touches drop, and the call logs their census. The BER verify (``verify_pairs``
     pinned on the candidate side) reads the stored subfp sequences, so it
     is decode-free. Consume the pairs before the next committing call on
     the same store: its fold may delete the runs they read."""

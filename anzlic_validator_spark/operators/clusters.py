@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 def _free_local_checkpoint(df: DataFrame) -> None:
     """Release the block-manager storage behind a superseded eager
-    ``localCheckpoint`` DataFrame (ADVICE r04: without this, every round's
+    ``localCheckpoint`` DataFrame (without this, every round's
     O(V) label table stays cached until the nondeterministic ContextCleaner
     pass). ``df`` must be the checkpointed DataFrame itself — its analyzed
     plan is the ``LogicalRDD`` holding the checkpointed RDD. Best-effort by
@@ -78,7 +78,7 @@ def connected_components(
     round count, the quantity the O(log d) claim is pinned on (see
     tests/test_clusters.py giant-component fixture).
 
-    SKEW POSTURE (VERDICT r04 watch item) — a giant component makes two
+    SKEW POSTURE — a giant component makes two
     keys hot, each absorbed differently:
 
     - ``groupBy("src")`` min-label agg: a high-degree vertex owns millions
@@ -107,7 +107,7 @@ def connected_components(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)  # reused every round
     )
-    # initialization folds the FIRST hash-min half-round in (r06, guide
+    # initialization folds the FIRST hash-min half-round in (guide
     # §2.4): with identity labels, round 1's neighbour-min is just
     # min(neighbour ids), so label₀ = least(id, min(dst)) comes out of the
     # same single aggregation that used to compute the bare distinct id
@@ -124,7 +124,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     # the previous round's checkpointed label table, freed as soon as the
-    # next round's checkpoint is materialized (ADVICE r04); the FINAL
+    # next round's checkpoint is materialized; the FINAL
     # round's checkpoint is never freed — the returned DataFrame reads it
     prev_ckpt = labels
     try:

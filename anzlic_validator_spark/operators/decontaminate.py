@@ -1,6 +1,6 @@
 """Test-set decontamination: flag/drop documents sharing long token
 n-grams with an evaluation corpus — the standard final filter of an
-LLM-training data pipeline (VERDICT r04 #1), absent from naive dedup
+LLM-training data pipeline, absent from naive dedup
 because an eval QUESTION embedded inside an otherwise-unique document
 duplicates nothing.
 
@@ -45,7 +45,7 @@ def _tokens(col: Column, normalize: bool) -> Column:
     grams. Unicode-aware: ``\\p{L}\\p{N}`` keeps letters/digits of EVERY
     script ('café', 'Über', CJK) — an ASCII-only class would delete
     accented characters mid-word and both miss real contamination and
-    manufacture colliding short tokens (review r05). All built-ins; both
+    manufacture colliding short tokens. All built-ins; both
     sides of the match must use the same setting (threaded by callers)."""
     if not normalize:
         return F.split(col, " ")

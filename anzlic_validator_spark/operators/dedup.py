@@ -21,17 +21,13 @@ Scale notes per operator:
 
 from __future__ import annotations
 
-import atexit
 import hashlib
 import logging
-import threading
-import time
-from dataclasses import dataclass, field
 from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark import Accumulator, StorageLevel
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,132 +35,41 @@ from pyspark.sql import types as T
 log = logging.getLogger(__name__)
 
 
-def _census_message(what: str, n_buckets: int, cap: int, n_rows: int) -> str:
-    return (
-        f"{what}: dropped {n_buckets} hot buckets (> {cap} rows each, {n_rows} "
-        "bucket-rows in total) from candidate generation; pairs found only in "
-        "those buckets are not reported (ADVISORY count: retries/speculation "
-        "inflate it, and a mid-job log may be partial until the atexit flush "
-        "corrects it)"
-    )
-
-
-# A census is forgotten this long after it was armed. One that never logs
-# (nothing was hot, the normal case, or the plan never ran) would otherwise
-# be polled for the life of the process.
-_CENSUS_BOUND_S = 7200.0
-
-
-@dataclass
-class _Census:
-    acc_buckets: Accumulator
-    acc_rows: Accumulator
-    cap: int
-    what: str
-    armed_at: float = field(default_factory=time.monotonic)
-    last: int = 0  # bucket count at the previous poll
-    logged: int = 0  # bucket count last logged
-
-    def count(self) -> int:
-        return int(round(float(self.acc_buckets.value)))  # float accumulator
-
-    def log(self, n_buckets: int) -> None:
-        self.logged = n_buckets
-        log.warning(_census_message(self.what, n_buckets, self.cap, int(self.acc_rows.value)))
-
-
-# Censuses armed in this process, served by one poller thread. A logged
-# census stays listed until its bound for the atexit flush: a short-lived
-# driver (a spark-submit batch) may exit before a count stabilizes, and a
-# count logged mid-job may still grow.
-_CENSUS_PENDING: list[_Census] = []
-_census_lock = threading.Lock()
-_census_poller: threading.Thread | None = None
-
-
-def _poll_censuses() -> None:
-    """Poller thread: logs each census once its drop count is nonzero and
-    unchanged across two polls. Accumulators, not ``observe``: AQE's
-    empty-relation propagation removes CollectMetrics nodes from the final
-    plan whenever anything downstream goes empty (an empty candidate set is
-    common), losing the metrics, while accumulator updates from completed
-    stages survive any re-plan. The thread exits once every census is past
-    its bound."""
-    global _census_poller
-    while True:
-        time.sleep(0.5)
-        with _census_lock:
-            now = time.monotonic()
-            _CENSUS_PENDING[:] = [
-                c for c in _CENSUS_PENDING if now - c.armed_at <= _CENSUS_BOUND_S
-            ]
-            for c in _CENSUS_PENDING:
-                if not c.logged:
-                    cur = c.count()
-                    if cur and cur == c.last:
-                        c.log(cur)
-                    c.last = cur
-            if not _CENSUS_PENDING:
-                _census_poller = None
-                return
-
-
-@atexit.register
-def _flush_census_at_exit() -> None:
-    with _census_lock:
-        for c in _CENSUS_PENDING:
-            cur = c.count()
-            if cur and cur != c.logged:
-                c.log(cur)
-
-
-def _arm_census(acc_buckets, acc_rows, cap: int, what: str) -> None:
-    global _census_poller
-    with _census_lock:
-        _CENSUS_PENDING.append(_Census(acc_buckets, acc_rows, cap, what))
-        if _census_poller is None:
-            _census_poller = threading.Thread(target=_poll_censuses, daemon=True)
-            _census_poller.start()
-
-
 def drop_hot_buckets(df: DataFrame, bucket_cols: list[str], cap: int, what: str) -> DataFrame:
-    """Drops every row whose bucket holds more than ``cap`` rows, with a lazy
-    advisory census of what it dropped: no eager job, never silent. It is the
-    one hot-bucket pattern of the batch LSH caps and the incremental stores'
-    candidate join.
+    """Drops every row whose bucket holds more than ``cap`` rows, and every
+    row with a NULL bucket column (such a row is in no bucket, as in the
+    uncapped self-join), and logs an exact census of the drop before it
+    returns. It is the one hot-bucket pattern of the batch LSH caps and the
+    incremental stores' candidate join.
 
     Per-bucket sizes come from a map-side-combined count aggregate, so a hot
-    key ships one partial-count row per map partition, never O(degree). A
-    vectorized pandas UDF tallies the hot buckets into accumulators while the
-    query's own job builds the anti-join side (one row per hot bucket crosses
-    into Python), and the poller logs the census once the counts settle. The
-    anti-join is a pinned broadcast: planned cold, the planner otherwise
-    picks a sort-merge anti join that shuffles and sorts the full stream
-    twice (observed on Spark 4.1). The hot list is bounded by
-    total_rows/cap and is empty on healthy corpora; corpora extreme enough
-    to overflow a broadcast should raise the cap."""
-    sc = df.sparkSession.sparkContext
-    acc_buckets = sc.accumulator(0.0)
-    acc_rows = sc.accumulator(0)
-
-    @F.pandas_udf(T.BooleanType())
-    def tally_hot(bsz: pd.Series) -> pd.Series:
-        # bucket count = row count, dropped-row count = sum of bucket sizes;
-        # returns all-True so the hot rows stay in the anti-join relation
-        if len(bsz):
-            acc_buckets.add(float(len(bsz)))
-            acc_rows.add(int(bsz.sum()))
-        return pd.Series(np.ones(len(bsz), dtype=bool))
-
+    key ships one partial-count row per map partition, never O(degree). The
+    hot list is collected to the driver: its length and summed sizes are
+    the census, and with nothing hot ``df`` returns without an anti-join.
+    Otherwise the collected keys are the pinned broadcast side of a left
+    anti join; planned cold, the planner would pick a sort-merge anti join
+    that shuffles and sorts the full stream twice (observed on Spark 4.1).
+    The hot list is bounded by total_rows/cap and is empty on healthy
+    corpora; corpora extreme enough to overflow a broadcast should raise the
+    cap."""
+    df = df.dropna(subset=bucket_cols)
     hot = (
         df.groupBy(*bucket_cols)
         .agg(F.count(F.lit(1)).alias("__bsz"))
         .where(F.col("__bsz") > int(cap))
-        .where(tally_hot(F.col("__bsz")))
-        .select(*bucket_cols)
+        .collect()
     )
-    _arm_census(acc_buckets, acc_rows, int(cap), what)
-    return df.join(F.broadcast(hot), on=bucket_cols, how="left_anti")
+    if not hot:
+        return df
+    log.warning(
+        f"{what}: dropped {len(hot)} hot buckets (> {int(cap)} rows each, "
+        f"{sum(r['__bsz'] for r in hot)} bucket-rows in total) from candidate "
+        "generation; pairs found only in those buckets are not reported"
+    )
+    keys = df.sparkSession.createDataFrame(
+        [r[: len(bucket_cols)] for r in hot], df.select(*bucket_cols).schema
+    )
+    return df.join(F.broadcast(keys), on=bucket_cols, how="left_anti")
 
 
 def lsh_candidate_pairs(
@@ -196,12 +101,12 @@ def lsh_candidate_pairs(
       always set the cap at scale.
 
     Buckets above ``max_bucket_size`` are excluded from candidate
-    generation by ``drop_hot_buckets``, which logs a lazy bucket/row census:
-    no eager job runs at plan-construction time, and the census is logged
-    once the query's own job has tallied it. The hot buckets are found from
-    a map-side-combined count aggregate, whose exchange carries one
-    partial-count row per (partition, bucket), so a hot key ships
-    O(#partitions) rows.
+    generation by ``drop_hot_buckets``, which collects the hot list and
+    logs its bucket/row census before this returns. The hot buckets are
+    found from a map-side-combined count aggregate, whose exchange carries
+    one partial-count row per (partition, bucket), so a hot key ships
+    O(#partitions) rows. Rows with a NULL bucket column pair on neither
+    path.
 
     Run exact dedup first — a hot bucket is nearly always a pile of
     byte-identical docs the exact pass already collapses — and treat the
@@ -504,7 +409,7 @@ def simhash64_udf(texts: pd.Series) -> pd.Series:
     # token multiset — measured 5.5x slower than dict insertion). One md5
     # per DISTINCT token; per-doc votes are a single (n_toks, 64) int8
     # gather + column sum, which stays cache-resident — measured 2.1x faster
-    # than the r01 per-token accumulate and ~9x faster than a batch-wide
+    # than a per-token accumulate and ~9x faster than a batch-wide
     # add.reduceat (whose (tokens, 64) temp is memory-bandwidth-bound).
     index: dict[str, int] = {}
     get = index.get
@@ -551,7 +456,7 @@ def simhash_near_duplicates(
     n_tables > max_hamming, since ≤ max_hamming differing bits can touch at
     most max_hamming of the n_tables chunks). Candidate recall is exact; the
     Hamming filter afterwards is exact; ``max_bucket_size`` bounds degenerate
-    buckets (see drop_hot_buckets: capped buckets are logged, and capping
+    buckets (see drop_hot_buckets: the call logs what it drops, and capping
     can only lose pairs confined to dropped buckets).
 
     Sizing at scale: sub-key width bounds the table count (w = 64 // t), so

@@ -250,7 +250,10 @@ def incremental_candidates(
     batch touches (a broadcast left-semi join against the batch's distinct
     keys), so the census and the join scan only that slice of the store;
     then buckets with more than ``cap`` carriers drop through
-    ``drop_hot_buckets``, which logs the census. Only the store side is
+    ``drop_hot_buckets``, which collects the hot list and logs its census
+    before this returns. The restriction stays in the join even when
+    nothing is hot: without it, a batch past the broadcast threshold would
+    join the full store uncapped, shuffling it. Only the store side is
     filtered: the join is inner, so that removes every pair a hot bucket
     would generate. The restriction is skipped when the store was empty
     (every bucket is then touched), and without a cap both steps are,
@@ -346,8 +349,8 @@ def incremental_minhash_pairs(
     store is payload-free, so it cannot detect this itself.
 
     ``max_bucket_size``: band keys with more carriers among the bands the
-    batch touches drop from the candidate join, with the logged census (see
-    ``incremental_candidates``). A boilerplate band key shared by 10^9
+    batch touches drop from the candidate join, and the call logs their
+    census before it returns (see ``incremental_candidates``). A boilerplate band key shared by 10^9
     stored docs would otherwise turn one new row into 10^9 candidate rows,
     the degeneracy the batch ``lsh_candidate_pairs`` caps. ``None``
     disables the cap (small corpora and exact-oracle runs only).

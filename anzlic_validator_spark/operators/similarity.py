@@ -199,8 +199,8 @@ def incremental_embedding_neardup(
     Returns (a_id, b_id, cos) pairs involving >= 1 new vector, cos >=
     threshold. Candidates come from ``incremental_candidates``: hot SRP
     buckets (zero-ish embeddings concentrate there) with more than
-    ``max_bucket_size`` carriers among those the batch touches drop, with a
-    logged census. The cosine verify is ``verify_pairs`` pinned on the
+    ``max_bucket_size`` carriers among those the batch touches drop, and the
+    call logs their census. The cosine verify is ``verify_pairs`` pinned on the
     candidate side. Consume the pairs before the next committing call on
     the same store: its fold may delete the runs they read."""
     buckets_udf = make_srp_buckets_udf(dim, bits, n_tables, seed)

@@ -53,7 +53,7 @@ def predict_language_from_tokens(toks: Column, threshold: float = 0.05) -> Colum
     ratio filters the array once, and the chained ``when``s reference every
     ratio — with an inline ``split()`` Catalyst re-inlines the split into
     each reference (no CSE across the chain), costing one split per language
-    per row (VERDICT r03; bounded by 3 languages today, not at 30)."""
+    per row (bounded by 3 languages today, not at 30)."""
     n = F.size(toks).cast("double")
     ratios = {
         lang: F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang]))).cast("double") / n
@@ -146,8 +146,8 @@ def winnow_near_duplicates(
 
     Same scale shape as the LSH dedups: fingerprints are the buckets, the
     one shuffle is the per-fingerprint grouping (lsh_candidate_pairs), and
-    ``max_bucket_size`` caps pathological fingerprints (boilerplate) with
-    the logged census.
+    ``max_bucket_size`` caps pathological fingerprints (boilerplate); the
+    call logs the census of what the cap drops before it returns.
     """
     from anzlic_validator_spark.operators.dedup import lsh_candidate_pairs
 
@@ -188,7 +188,7 @@ def repetition_features(
       occurrence counts behind top_2gram_share / char_entropy are
       O(distinct · total) array scans per row in codegen — fine up to
       ~2·10³ tokens per doc (~10⁶–10⁷ comparisons/row), QUADRATIC beyond.
-    - ``strategy="shuffle"`` (ADVICE r04 — use for Gopher/C4-length docs,
+    - ``strategy="shuffle"`` (use for Gopher/C4-length docs,
       10⁴–10⁵ tokens): occurrence counts via explode + two-level groupBy —
       per-row cost drops to O(total), at the price of two shuffles of
       small (id, gram)/(id, char) rows joined back to the per-row metrics.
@@ -236,8 +236,8 @@ def repetition_features(
 
         # three consumers (light metrics + two explode aggregates) —
         # without the persist each is an independent subtree re-reading the
-        # source and re-tokenizing every document (review r05: two extra
-        # full passes at corpus scale). Same ownership contract as
+        # source and re-tokenizing every document (two extra full passes
+        # at corpus scale). Same ownership contract as
         # minhash_near_duplicates' shingle persist: the result is lazy, so
         # long-lived sessions unpersist after consuming.
         g = g.persist(StorageLevel.MEMORY_AND_DISK)

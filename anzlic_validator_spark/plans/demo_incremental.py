@@ -1,5 +1,5 @@
-"""Driver-oracle queries for the two previously pytest-only families
-(VERDICT r03 #4/#5): streaming incremental validation (§2.8) and
+"""Driver-oracle queries for two families that pytest alone would
+otherwise cover: streaming incremental validation (§2.8) and
 manifest-based resume (I1–I6).
 
 Both stage a deterministic fixture under a fresh temp dir, run the REAL
@@ -194,7 +194,7 @@ FROM ids WHERE j % 20 = 3
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-run incremental dedup state on the gate (VERDICT r04 #2): two
+    """Cross-run incremental dedup state on the gate: two
     REAL ``incremental_minhash_pairs`` runs against a staged fingerprint
     store. Run 1 commits the 600-doc base corpus (disjoint 20-token
     vocabularies per doc → cross-doc Jaccard exactly 0, so the census is
@@ -500,7 +500,7 @@ def q_embedding_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         if p1.count() != 0:
             raise RuntimeError("embedding_dedup_incremental: run 1 emitted pairs")
         # 10^9 offsets: collision-proof against any realistic table size
-        # (the +200000 convention would collide past 2*10^5 rows; review r05)
+        # (a +200000 offset would collide past 2*10^5 rows)
         c1 = emb.where(F.col("vec_id") % 25 == 0).select(
             (F.col("vec_id") + 1000000000).alias("vec_id"),
             F.transform("embedding", lambda x: x * F.lit(1.01)).alias("embedding"),

@@ -173,7 +173,7 @@ def _corpus_with_chained_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTER resolution (VERDICT r03 #1): minhash pairs →
+    """Near-dup CLUSTER resolution: minhash pairs →
     connected components (hash-min + pointer jumping) → keep-one survivor
     per cluster (longest doc, ties min id). The contract is robust to
     borderline LSH misses: dropping an in-cluster pair changes nothing as
@@ -367,7 +367,7 @@ def q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     clips = spark.range(n).mapInPandas(
         gen, "clip_id string, bytes binary, codec string, sr_hz int"
     )
-    # exact-only pass: parts skips the rfft behind phash/frames (r04 #4)
+    # exact-only pass: parts skips the rfft behind phash/frames
     fps = audio_fingerprints(clips, parts=("content_fp",))
     return audio_exact_duplicates(fps)
 
@@ -383,10 +383,9 @@ FROM g WHERE n_clips > 1
 
 
 def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual frame-match near-dup WITH the verify stage on the gate
-    (VERDICT r04 #3): 80 clips = 40 signals × (original + a 2%-additive-
-    noise copy, noise Philox-seeded PER ROW so any executor regenerates
-    it). Byte- and content-level dedup find NOTHING (the copies differ in
+    """Perceptual frame-match near-dup WITH the verify stage on the gate:
+    80 clips = 40 signals × (original + a 2%-additive-noise copy, noise
+    Philox-seeded PER ROW so any executor regenerates it). Byte- and content-level dedup find NOTHING (the copies differ in
     every sample), and at 2 % noise the CANDIDATE score alone no longer
     separates either — measured on this fixture, planted copies share as
     few as 2 tagged halves while unrelated clips reach 8 by chance — so
@@ -479,8 +478,8 @@ FROM ranked WHERE rank <= 5
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRP-LSH approximate top-k, verified by MEASURED recall@k against the
-    exact brute-force ranking (VERDICT r01: approximate ops must publish a
-    checkable quality metric, not just run). Everything is deterministic —
+    exact brute-force ranking (an approximate op publishes a checkable
+    quality metric, not just a result). Everything is deterministic —
     seeded hyperplanes, fixed data, id-tiebroken ranking — so the measured
     recall is an exact fixture the oracle pins, alongside threshold flags.
 
@@ -512,7 +511,7 @@ def _recall_contract(
 ) -> DataFrame:
     """Measured recall@k of an approximate top-k vs the brute-force ranking,
     reduced to contract columns (thresholds + recall_ok flag). The measured
-    min/mean recall stay OUT of the compared output (VERDICT r02 #6):
+    min/mean recall stay OUT of the compared output:
     freezing them in the oracle made every parameter retune an oracle edit;
     the threshold literals keep the contract self-describing and the
     recall_ok flag is the durable assertion (with margin under retuning)."""
@@ -546,7 +545,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ivf = ivf_topk(emb, queries, dim=64, k=5, n_centroids=16, n_probe=10)
     bf = brute_force_topk(emb, queries, k=5)
-    # thresholds tightened r04 (VERDICT #6): measured recall at sf0.01 is
+    # the thresholds sit under the measured recall: at sf0.01 it is
     # min 0.80 / mean 0.96 across centroid/probe settings, so 0.6/0.85
     # detects a real probe regression while leaving seeding-layout margin
     return _recall_contract(bf, ivf, k=5, min_r=0.6, mean_r=0.85)
@@ -710,7 +709,7 @@ FROM g
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Test-set decontamination on the gate (VERDICT r04 #1): the eval
+    """Test-set decontamination on the gate: the eval
     corpus is 10-token snippets (tokens 4-13) of every %50 document, so
     those source documents are contaminated BY CONSTRUCTION (they contain
     their own snippet); any chance k-gram collision across the tiny-vocab

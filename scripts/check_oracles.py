@@ -9,8 +9,9 @@ Usage: python scripts/check_oracles.py [name|group ...]
 
 An unknown name or group runs nothing, lists the valid ones and exits 2.
 
-A group name stands for its queries: ``state`` for the state-dependent
-oracles, ``validate`` for the queries that run through ``validate()``.
+A group name stands for its queries: ``capped`` for the queries behind a
+hot-bucket cap, ``state`` for the state-dependent oracles, ``validate`` for
+the queries that run through ``validate()``.
 """
 
 from __future__ import annotations
@@ -26,6 +27,10 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 GROUPS = {
+    "capped": (
+        "dedup_minhash dedup_simhash dedup_winnow dedup_clusters dedup_keep "
+        "dedup_embedding audio_neardup"
+    ).split(),
     "state": (
         "stream_unique resume_buckets dedup_incremental audio_dedup_incremental "
         "stream_dedup audio_neardup_incremental embedding_dedup_incremental"

@@ -255,11 +255,10 @@ def test_incremental_audio_neardup_store(spark, tmp_path):
     assert got == [("a0", "b0"), ("a0", "c0"), ("b0", "c0")]
     assert all(r.ber <= 0.25 for r in p2.collect())
     # the incremental plan decodes only the new batch: the store side is a
-    # parquet scan. The lazy hot-bucket census tally is the ONLY Python in
-    # the plan (r06) — any other ArrowEvalPython would be a decode re-run
+    # parquet scan, and the plan holds no Python at all (an ArrowEvalPython
+    # node would be a decode re-run)
     plan = p2._jdf.queryExecution().executedPlan().toString()
-    py_nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
-    assert all("tally_hot" in ln for ln in py_nodes)
+    assert "ArrowEvalPython" not in plan
     assert "Scan parquet" in plan
     # kind isolation: the content-fp store API refuses this store
     with pytest.raises(ValueError, match="incompatible"):
@@ -509,10 +508,9 @@ def test_incremental_embedding_neardup_store(spark, tmp_path):
     assert set(got) == {(2, 100), (2, 200), (100, 200)}
     assert all(c == 1.0 for c in got.values())
     plan = p2._jdf.queryExecution().executedPlan().toString()
-    # census tally is the only Python node (r06); in particular the SRP
-    # hashing UDF must never run over the store
-    py_nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
-    assert all("tally_hot" in ln for ln in py_nodes)
+    # no Python node: in particular the SRP hashing UDF never runs over the
+    # store
+    assert "ArrowEvalPython" not in plan
     assert "srp_buckets" not in plan
     assert "Scan parquet" in plan
     # SRP param drift against an existing store raises
@@ -523,12 +521,23 @@ def test_incremental_embedding_neardup_store(spark, tmp_path):
     assert {"id", "v", "bkts", "nrm"} <= set(r0.columns)
 
 
+def _censuses(caplog) -> list[str]:
+    """The hot-bucket censuses logged so far, up to their row totals."""
+    return [
+        r.message.split(" from candidate generation")[0]
+        for r in caplog.records
+        if "hot buckets" in r.message
+    ]
+
+
 def test_incremental_candidates_census_and_drop(spark, caplog):
     """The capped incremental candidate join must actually DROP and
     actually LOG. Identical-direction vectors land in one SRP bucket per
-    table; with a cap below the carrier count every candidate disappears
-    and the census warning fires; with the cap above, pairs return."""
+    table (8 tables); with a cap below the carrier count every candidate
+    disappears and each call logs its census before it returns; with the
+    cap above, pairs return and nothing is logged."""
     import logging
+    import tempfile
 
     import numpy as np
 
@@ -547,32 +556,27 @@ def test_incremental_candidates_census_and_drop(spark, caplog):
 
     run1 = df([(i, base_v * (1.0 + 0.001 * i)) for i in range(4)])
     run2 = df([(100, base_v * 1.5)])
+    what = "incremental_embedding_neardup: dropped 8 hot buckets (> 3 rows each"
     with caplog.at_level(logging.WARNING,
                          logger="anzlic_validator_spark.operators.dedup"):
-        import tempfile
-        import time as _time
-
         with tempfile.TemporaryDirectory() as d1:
             s = os.path.join(d1, "s")
             incremental_embedding_neardup(run1, s, dim=16, max_bucket_size=3)
+            # the store was empty: each bucket holds run 1's 4 vectors
+            assert _censuses(caplog) == [f"{what}, 32 bucket-rows in total)"]
             out = incremental_embedding_neardup(run2, s, dim=16, max_bucket_size=3)
+            assert _censuses(caplog) == [
+                f"{what}, 32 bucket-rows in total)",
+                f"{what}, 40 bucket-rows in total)",
+            ]
             assert out.count() == 0  # every shared bucket is hot -> dropped
-            # lazy-advisory census: wait for the poll thread's stabilized log
-            deadline = _time.monotonic() + 15
-            while _time.monotonic() < deadline:
-                if any("hot buckets" in r.message for r in caplog.records):
-                    break
-                _time.sleep(0.1)
+        caplog.clear()
         with tempfile.TemporaryDirectory() as d2:
             s = os.path.join(d2, "s")
             incremental_embedding_neardup(run1, s, dim=16, max_bucket_size=100)
             out = incremental_embedding_neardup(run2, s, dim=16, max_bucket_size=100)
             assert out.count() == 4  # cap above carriers: all pairs back
-    assert any("hot buckets" in r.message for r in caplog.records)
-    assert any(
-        r.message.startswith("incremental_embedding_neardup: dropped ")
-        for r in caplog.records
-    )
+        assert _censuses(caplog) == []
 
 
 def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
@@ -583,6 +587,7 @@ def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
     pairs in non-hot bands survive the same run."""
     import logging
 
+    caplog.set_level(logging.WARNING, logger="anzlic_validator_spark.operators.dedup")
     store = str(tmp_path / "store")
     # 8 identical docs (one band-key set shared by all) + 2 distinct docs
     base = _docs(
@@ -590,31 +595,19 @@ def test_incremental_minhash_hot_band_cap(spark, tmp_path, caplog):
         [(d, _vocab_doc(0)) for d in range(8)]
         + [(100, _vocab_doc(50)), (101, _vocab_doc(60))],
     )
+    what = "incremental_minhash_pairs: dropped 21 hot buckets (> 5 rows each"
     incremental_minhash_pairs(base, store, "text", "doc_id", max_bucket_size=5)
+    assert _censuses(caplog) == [f"{what}, 168 bucket-rows in total)"]
+    caplog.clear()
     # new batch: one more copy of the hot doc + one copy of a non-hot doc
     new = _docs(spark, [(900, _vocab_doc(0)), (901, _vocab_doc(50))])
-    with caplog.at_level(
-        logging.WARNING, logger="anzlic_validator_spark.operators.dedup"
-    ):
-        pairs = sorted(
-            (r.a_id, r.b_id)
-            for r in incremental_minhash_pairs(
-                new, store, "text", "doc_id", max_bucket_size=5
-            ).collect()
-        )
-        # the census is lazy-advisory (accumulators + poll thread): wait for
-        # the stabilized log, as test_bucket_cap_census_is_lazy does
-        import time as _time
-
-        deadline = _time.monotonic() + 15
-        while _time.monotonic() < deadline:
-            if any("hot buckets" in r.message for r in caplog.records):
-                break
-            _time.sleep(0.1)
+    out = incremental_minhash_pairs(new, store, "text", "doc_id", max_bucket_size=5)
+    # the 21 bands of the hot doc, each now 9 carriers, are the hot ones
+    assert _censuses(caplog) == [f"{what}, 189 bucket-rows in total)"]
+    pairs = sorted((r.a_id, r.b_id) for r in out.collect())
     # hot bands (9 carriers > cap 5) dropped -> no 900 pairs; the non-hot
     # copy pair (100, 901) survives
     assert pairs == [(100, 901)]
-    assert any("hot buckets" in r.message for r in caplog.records)
     # cap above the carrier count: every pair comes back (fresh store so
     # run 2's history is identical)
     store2 = str(tmp_path / "store2")
@@ -735,11 +728,15 @@ def test_minhash_sigs_match_store_reread(spark, tmp_path):
 
 
 def test_one_file_batch_commits_on_every_core_without_schema_inference(spark, tmp_path):
-    """A one-file batch is one scan split. The call spreads it, so it runs
-    two jobs: the spread's one-task shuffle map stage, then the commit
-    write, which computes the signatures on ``defaultParallelism`` tasks.
-    No store read (the committed run, the prior runs) runs a parquet
-    schema-inference job, which would be a job of its own."""
+    """A one-file batch is one scan split. The call spreads it, so its
+    first two jobs are the spread's one-task shuffle map stage, then the
+    commit write, which computes the signatures on ``defaultParallelism``
+    tasks. The hot-bucket census follows: a map stage and a result stage
+    over the committed run's ``width`` files. Against a non-empty store
+    the first pair builds the touched-key broadcast, and the census pair
+    scans both runs, ``2 * width`` files. No store read (the
+    committed run, the prior runs) runs a parquet schema-inference job,
+    which would be a job of its own."""
     width = spark.sparkContext.defaultParallelism
     tracker = spark.sparkContext.statusTracker()
     store = str(tmp_path / "store")
@@ -761,8 +758,11 @@ def test_one_file_batch_commits_on_every_core_without_schema_inference(spark, tm
             spark.sparkContext.setJobGroup("tests", "tests")
         tasks = [[tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds]
                  for j in jobs]
-        assert len(jobs) == 2, f"batch {k}: jobs {jobs} with stage tasks {tasks}"
-        assert tasks[0] == [1] and max(tasks[1]) == width
+        assert tasks[0] == [1] and max(tasks[1]) == width, f"batch {k}: {tasks}"
+        census = [[width], [width, 1]]
+        if k:
+            census += [[2 * width], [2 * width, 1]]
+        assert tasks[2:] == census, f"batch {k}: jobs {jobs} with stage tasks {tasks}"
         assert len(pairs.collect()) == (0 if k == 0 else len(batches[1]))
 
 

@@ -234,59 +234,41 @@ def test_entry_contract(spark, sf_dir):
         assert out.columns, name
 
 
-def test_bucket_cap_census_is_lazy(spark, caplog):
-    # setting max_bucket_size must NOT trigger an eager census job at
-    # plan-construction time: the census rides the real query (accumulators
-    # tallied while its job builds the hot-bucket side) and is logged after.
+def test_bucket_cap_census_is_logged_before_the_call_returns(spark, caplog):
+    """A capped call collects its hot list while it builds the plan and
+    logs the exact census before it returns: 2000 identical docs put all
+    21 band buckets over the cap, 2000 rows each."""
     import logging
-    import time
 
-    sc = spark.sparkContext
-    sc.setJobGroup("lazy_census_build", "plan construction must run no jobs")
     df = spark.range(2000).select(
         F.col("id"), F.lit("boilerplate header lorem ipsum dolor sit amet").alias("t")
     )
-    plan = minhash_near_duplicates(df, "t", "id", threshold=0.6, max_bucket_size=100)
-    assert sc.statusTracker().getJobIdsForGroup("lazy_census_build") == []
-    sc.setJobGroup("lazy_census_run", "the action itself")
     with caplog.at_level(logging.WARNING, logger="anzlic_validator_spark.operators.dedup"):
-        assert plan.count() == 0
-        deadline = time.monotonic() + 15
-        while time.monotonic() < deadline:
-            if any("hot buckets" in r.message for r in caplog.records):
-                break
-            time.sleep(0.1)
-    assert sc.statusTracker().getJobIdsForGroup("lazy_census_run") != []
-    census = [r for r in caplog.records if "hot buckets" in r.message]
-    assert census, "bucket census was not logged after the action"
-    assert census[0].message.startswith("minhash_lsh: dropped ")
-    sc.setJobGroup("", "")
+        plan = minhash_near_duplicates(df, "t", "id", threshold=0.6, max_bucket_size=100)
+        census = [r.message for r in caplog.records if "hot buckets" in r.message]
+    assert census == [
+        "minhash_lsh: dropped 21 hot buckets (> 100 rows each, 42000 bucket-rows "
+        "in total) from candidate generation; pairs found only in those buckets "
+        "are not reported"
+    ]
+    assert plan.count() == 0
 
 
-def test_bucket_cap_census_one_poller(spark, monkeypatch):
-    """Capped calls with no hot bucket (the normal case) never log, so each
-    census waits out its polling bound. They share one poller thread, and
-    a census past its bound leaves the pending list."""
-    import threading
-    import time
+def test_bucket_cap_with_nothing_hot_plans_no_anti_join(spark, caplog):
+    """With no bucket over the cap, the capped call logs nothing and its
+    plan holds no anti join."""
+    import logging
 
-    from anzlic_validator_spark.operators import dedup
     from anzlic_validator_spark.operators.dedup import lsh_candidate_pairs
 
-    monkeypatch.setattr(dedup, "_CENSUS_BOUND_S", 3.0)
     df = spark.createDataFrame(
         [(i, 0, i % 50) for i in range(100)], "id long, tbl int, bkt long"
     )
-    before = threading.active_count()
-    for _ in range(10):
-        assert lsh_candidate_pairs(df, ["tbl", "bkt"], ["id"], 10, "leak_probe").count() == 50
-    assert threading.active_count() <= before + 1
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline and any(
-        c.what == "leak_probe" for c in dedup._CENSUS_PENDING
-    ):
-        time.sleep(0.2)
-    assert not any(c.what == "leak_probe" for c in dedup._CENSUS_PENDING)
+    with caplog.at_level(logging.WARNING, logger="anzlic_validator_spark.operators.dedup"):
+        pairs = lsh_candidate_pairs(df, ["tbl", "bkt"], ["id"], 10, "t")
+    assert not [r for r in caplog.records if "hot buckets" in r.message]
+    assert "LeftAnti" not in pairs._jdf.queryExecution().executedPlan().toString()
+    assert pairs.count() == 50
 
 
 def test_lsh_candidate_pairs_edges(spark):
@@ -319,6 +301,16 @@ def test_lsh_candidate_pairs_edges(spark):
     # duplicate ids inside one bucket never self-pair
     df3 = spark.createDataFrame([(1, 0, 3), (1, 0, 3)], "id long, tbl int, bkt long")
     assert lsh_candidate_pairs(df3, ["tbl", "bkt"], ["id"], None, "t").count() == 0
+
+    # a NULL bucket key is in no bucket: it pairs on neither path, and no
+    # cap counts it
+    df4 = spark.createDataFrame(
+        [(1, 0, None), (2, 0, None), (3, 0, None), (4, 0, 7), (5, 0, 7)],
+        "id long, tbl int, bkt long",
+    )
+    for cap in (None, 10, 2):
+        out = lsh_candidate_pairs(df4, ["tbl", "bkt"], ["id"], cap, "t").collect()
+        assert sorted((r.a.id, r.b.id) for r in out) == [(4, 5)], cap
 
 
 def test_lsh_capped_incremental_expansion_matches_self_join(spark):
